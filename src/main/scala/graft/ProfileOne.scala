@@ -31,8 +31,10 @@ object ProfileOne {
     // (and their shuffle bytes) attribute to the job that OWNS the
     // stage, not "the newest unfinished job" — concurrent jobs
     // (broadcast builds, AQE stage materialization) misattributed under
-    // the old heuristic. The job label is the first stage's callsite
-    // (stageInfos carry it even when the job-level property is unset).
+    // the old heuristic. The job label falls back to the RESULT stage's
+    // callsite — the job's highest stage id, since the scheduler creates
+    // parent stages first (stageInfos carry it even when the job-level
+    // property is unset). Entries leave the map when their job ends.
     val stageJob = mutable.HashMap.empty[Int, Int]
     val active = new java.util.concurrent.atomic.AtomicBoolean(false)
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -40,7 +42,8 @@ object ProfileOne {
         if (active.get) {
           val d = Option(e.properties)
             .flatMap(p => Option(p.getProperty("callSite.short")))
-            .orElse(e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')))
+            .orElse(e.stageInfos.maxByOption(_.stageId)
+              .map(_.name.takeWhile(_ != '\n')))
             .getOrElse("?")
           jobs.synchronized {
             jobs(e.jobId) = J(e.jobId, d, e.time)
@@ -48,7 +51,10 @@ object ProfileOne {
           }
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
+        jobs.synchronized {
+          jobs.get(e.jobId).foreach(_.end = e.time)
+          stageJob.filterInPlace((_, j) => j != e.jobId)
+        }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         jobs.synchronized {
           stageJob.get(e.stageId).flatMap(jobs.get).foreach { j =>

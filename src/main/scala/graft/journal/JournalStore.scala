@@ -200,8 +200,12 @@ class JournalStore private (val spark: SparkSession, val path: String,
             "ts TIMESTAMP, payload STRING, val DOUBLE, epoch BIGINT"))
 
   /** Manifest files that can contain rows of `ns` (when given) and/or
-    * `ukey` (when given) — the metadata data-skipping path. A file is
-    * dropped when its ns partition directory names another namespace, or
+    * `ukey` (when given) inside the epoch range `epochs` (inclusive) —
+    * the metadata data-skipping path every pruned read plans from, so
+    * Spark is handed a file list the manifest already cut instead of
+    * listing the whole store and partition-pruning afterwards. A file is
+    * dropped when its epoch directory lies outside `epochs`, when its ns
+    * partition directory names another namespace, or
     * when ITS OWN per-file key range (manifest fstats) excludes the
     * probed ukey. Stats are per FILE, never merged across batches: a
     * merged (epoch, ns) range covers only the batches that recorded
@@ -211,12 +215,16 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * is always kept, so pruning is exact-or-conservative by
     * construction; namespaces whose directory rendering isn't the
     * literal value (partition-path escaping) are likewise never
-    * ns-pruned. */
-  private def filesForKey(m: Manifest, nsOpt: Option[String],
-                          ukey: Option[Long]): Seq[String] = {
+    * ns-pruned, and a path with no epoch directory is never
+    * epoch-pruned. */
+  private[journal] def filesFor(m: Manifest, nsOpt: Option[String],
+                                ukey: Option[Long],
+                                epochs: (Long, Long) = AllEpochs): Seq[String] = {
     val nsRe = """ns=([^/]+)""".r
     val fmap = m.fstats.map(s => s.file -> s).toMap
+    val (lo, hi) = epochs
     m.files.filter { f =>
+      val epochKeep = epochOf(f).forall(e => lo <= e && e <= hi)
       val dirNs = nsRe.findFirstMatchIn(f).map(_.group(1))
       // only prune on directory values that round-trip literally
       val safe = dirNs.exists(_.matches("[A-Za-z0-9_.\\-]+"))
@@ -227,9 +235,18 @@ class JournalStore private (val spark: SparkSession, val path: String,
             JournalStore.bloomMightContain(s.bloom, k))
         case None => true
       }
-      nsKeep && keyKeep
+      epochKeep && nsKeep && keyKeep
     }
   }
+
+  /** The segment rows of snapshot `m` over [[filesFor]]'s pruned list —
+    * schema-pinned and DV-subtracted from the same snapshot. Pruning is
+    * IO-only: callers keep their own row filters, so a conservative
+    * (kept) file never changes a result. */
+  private[journal] def segmentsFor(m: Manifest, ns: Option[String],
+                                   ukey: Option[Long],
+                                   epochs: (Long, Long) = AllEpochs): DataFrame =
+    readSegmentsOver(filesFor(m, ns, ukey, epochs), m.schemaDdl, m.dvParts)
 
   /** Manifest files that can contain a row with ts <= tMicros — the
     * per-file ts range bounds stateAtTs the way seq/epoch bounds bound
@@ -255,11 +272,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * columns would make buildScan's select of a pushed-down read fail
     * (or silently narrow) on any schema-evolved store. */
   private[graft] def scanUnorderedPruned(ns: Option[String],
-                                         ukey: Option[Long]): DataFrame = {
-    val m = manifest
-    canonicalSurface(
-      readSegmentsOver(filesForKey(m, ns, ukey), m.schemaDdl, m.dvParts))
-  }
+                                         ukey: Option[Long]): DataFrame =
+    canonicalSurface(segmentsFor(manifest, ns, ukey))
   private def ckptDir(seq: Long) = s"$path/checkpoints/seq=$seq"
 
   /** Spark's runtime-filter bloom aggregate over xxhash64(ukey), reached
@@ -1484,7 +1498,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     *  - `compact`-labeled namespaces rewrite through [[compactNs]]
     *    (clustered by key) — small-file debt healed where it actually
     *    sits instead of sweeping a 100 TB store. Escaped namespace
-    *    names ride filesForKey's conservative directory match; the
+    *    names ride filesFor's conservative directory match; the
     *    default-partition group ("" — no current append door admits
     *    it) is left to an explicit full compact.
     *
@@ -2500,7 +2514,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // Per-file stats (the Delta/Iceberg file-stats idea at file grain):
     // the (epoch, ns) repartition writes exactly one file per directory
     // per append, so the batch's (epoch, ns)-grain aggregate IS that new
-    // file's stats. Stats stay per-file forever — see filesForKey for
+    // file's stats. Stats stay per-file forever — see filesFor for
     // why merging across batches would be a correctness bug. A directory
     // that unexpectedly gained several files, or an escaped ns whose
     // directory name doesn't round-trip, records no stats: unpruned,
@@ -2607,11 +2621,16 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val boundary = (newMax / epochSize) * epochSize - 1
     if (boundary > lastCkpt && newMax / epochSize > (lastCkpt max 0L) / epochSize) {
       val cols = Seq("ns", "ukey", "seq", "payload", "epoch")
+      // only the pre-append files of the checkpoint's own tail epochs —
+      // the rest lie below the newest checkpoint, and stateAtOver's
+      // epoch filter would drop their rows after Spark listed them
+      val prior = filesFor(m, None, None,
+        tailEpochs(latestCheckpoint(m.checkpoints, boundary), boundary))
       val priorRows =
-        if (m.files.nonEmpty)
+        if (prior.nonEmpty)
           // schema-pinned AND DV-subtracted: a checkpoint built from a
           // raw file read would resurrect vector-deleted rows
-          readSegmentsOver(m.files, m.schemaDdl, m.dvParts)
+          readSegmentsOver(prior, m.schemaDdl, m.dvParts)
             .selectExpr(cols: _*)
         else out.selectExpr(cols: _*).limit(0)
       val src = priorRows.unionByName(
@@ -2620,7 +2639,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       // append IS durable; if a concurrent writer keeps winning the
       // checkpoint-registration commit, skip the cycle (the next epoch
       // rollover re-attempts) rather than failing a succeeded append.
-      try writeCheckpoint(stateAtOver(src, m.checkpoints, boundary), boundary)
+      try writeCheckpoint(stateAtOver(src, m, boundary), boundary)
       catch { case _: java.util.ConcurrentModificationException => }
     }
     if (persistOut) out.unpersist()
@@ -2891,7 +2910,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
   /** PARTIAL compaction scoped to ONE namespace — the Delta `OPTIMIZE …
     * WHERE <partition predicate>` idiom: a hot namespace's small-file
     * debt is rewritten without touching the cold 99% of a 100 TB
-    * store. Selection is filesForKey's exact-or-conservative directory
+    * store. Selection is filesFor's exact-or-conservative directory
     * match (a file whose ns can't be proven different is included —
     * compacting extra files is content-preserving, so conservatism
     * costs IO only, never correctness). DV purge semantics ride along:
@@ -2900,7 +2919,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
   def compactNs(ns: String, upToEpoch: Long = Long.MaxValue,
                 clusterByKey: Boolean = false): Unit =
     compactFiles(
-      filesForKey(manifest, Some(ns), None)
+      filesFor(manifest, Some(ns), None)
         .filter(f => epochOf(f).exists(_ <= upToEpoch)),
       if (clusterByKey) SegmentLayout.ByKey else SegmentLayout.Unordered)
 
@@ -3907,7 +3926,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
 
   /** Manifest files whose ns directory / per-file key range / key bloom
     * can hold ANY of `keys` — the merge touched-file pruning set. Same
-    * exact-or-conservative contract as [[filesForKey]]: a file with no
+    * exact-or-conservative contract as [[filesFor]]: a file with no
     * stats, or an ns directory that doesn't round-trip literally, is
     * always kept; a null-ns key contributes nothing (the merge join is
     * null-unsafe on ns, so no state row can match it); a null-ukey key
@@ -3992,7 +4011,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // sound for an erase: a file with no in-range row holds no match
     val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
     val rangeOk = filesForRanges(m, seqR, tsR)
-    val candidates = filesForKey(m, nsEq, keyEq).filter(rangeOk.contains)
+    val candidates = filesFor(m, nsEq, keyEq).filter(rangeOk.contains)
     if (candidates.isEmpty) return 0L
     // Probe: which candidate files hold a matching row (and how many).
     // `__file` is the manifest-relative path extracted from
@@ -4205,7 +4224,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // so a file outside the bounds can hold no doomed row
     val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
     val rangeOk = filesForRanges(m, seqR, tsR)
-    val candidates = filesForKey(m, nsEq, keyEq).filter(rangeOk.contains)
+    val candidates = filesFor(m, nsEq, keyEq).filter(rangeOk.contains)
     if (candidates.isEmpty) return 0L
     // One scan finds the doomed rows' identities; already-deleted rows
     // (subtracted by an existing vector) can't match again, so repeated
@@ -4446,7 +4465,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
   }
 
   /** Manifest files whose per-file seq/ts ranges can OVERLAP the probed
-    * bounds — the range-skipping twin of [[filesForKey]], same
+    * bounds — the range-skipping twin of [[filesFor]], same
     * exact-or-conservative contract (no stats entry = kept). A file
     * whose every ts is NULL (tsMin > tsMax sentinel) is dropped exactly
     * under a ts bound: NULL rows can't satisfy a range conjunct. */
@@ -4620,10 +4639,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
       }
     }
     val (nsEq, keyEq) = condExpr.map(equalityConjuncts).getOrElse((None, None))
-    val keyPred = (nsEq.map(n => col("ns") === lit(n)) ++
-        keyEq.map(k => col("ukey") === lit(k)))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val baseCand = filesForKey(m, nsEq, keyEq)
+    val keyPred = keyPredicate(nsEq, keyEq)
+    val baseCand = filesFor(m, nsEq, keyEq)
     val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
     if (seqR.isEmpty && tsR.isEmpty) return (baseCand, keyPred)
     val rangeOk = filesForRanges(m, seqR, tsR)
@@ -4704,9 +4721,14 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * replay. Independently, files whose minimum ts exceeds t are dropped
     * from the scan entirely, so neither path is unbounded over future
     * epochs. */
-  def stateAtTs(t: java.sql.Timestamp): DataFrame = {
+  def stateAtTs(t: java.sql.Timestamp): DataFrame = stateAtTsIn(manifest, t)
+
+  /** stateAtTs against ONE manifest snapshot, optionally restricted to
+    * ns / ukey equality under the combine (exact — see [[stateAtIn]]). */
+  private[graft] def stateAtTsIn(m: Manifest, t: java.sql.Timestamp,
+                                 ns: Option[String] = None,
+                                 ukey: Option[Long] = None): DataFrame = {
     val tMicros = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    val m = manifest
     val fmap = m.fstats.map(s => s.file -> s).toMap
     // A file certifies checkpoint C when it either holds no rows at or
     // below C, or every one of its rows passes the ts filter — which
@@ -4720,14 +4742,16 @@ class JournalStore private (val spark: SparkSession, val path: String,
           s.minSeq > c || (s.tsMax <= tMicros && s.nullTs == 0L))
       }
     }
-    val base = ckpt.map { c =>
-      spark.read.parquet(ckptDir(c))
-        .select(col("ns"), col("ukey"), col("last_seq").as("seq"), col("payload"))
-    }
-    val pruned = readSegmentsOver(filesForTs(m, tMicros), m.schemaDdl, m.dvParts)
+    val keys = keyPredicate(ns, ukey)
+    val base = ckpt.map(c => checkpointRows(m, c).where(keys))
+    val floor = ckpt.fold(Long.MinValue)(c => (c + 1) / epochSize)
+    val tsOk = filesForTs(m, tMicros).toSet
+    val pruned = readSegmentsOver(
+      filesFor(m, ns, ukey, (floor, Long.MaxValue)).filter(tsOk),
+      m.schemaDdl, m.dvParts)
     val tail = ckpt.fold(pruned) { c =>
-      pruned.where(col("epoch") >= lit((c + 1) / epochSize) && col("seq") > c)
-    }.where(col("ts") <= lit(t)).select("ns", "ukey", "seq", "payload")
+      pruned.where(col("epoch") >= lit(floor) && col("seq") > c)
+    }.where(col("ts") <= lit(t) && keys).select("ns", "ukey", "seq", "payload")
     tombstoneAwareState(base.fold(tail)(_.unionByName(tail)))
   }
 
@@ -4737,41 +4761,86 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * epochs reads a handful of files, not the namespace's whole history
     * (the row filters still apply, so pruning is never load-bearing for
     * correctness). */
-  def history(ns: String, ukey: Option[Long] = None): DataFrame = {
-    val m = manifest
-    val base = readSegmentsOver(filesForKey(m, Some(ns), ukey), m.schemaDdl,
-        m.dvParts)
-      .where(col("ns") === ns)
-    ukey.fold(base)(k => base.where(col("ukey") === k))
+  def history(ns: String, ukey: Option[Long] = None): DataFrame =
+    segmentsFor(manifest, Some(ns), ukey)
+      .where(keyPredicate(Some(ns), ukey))
       .select("seq", "ns", "ukey", "ts", "payload", "val").orderBy("seq")
-  }
 
   /** Point-in-time state (marasa read(ns, seq)): newest checkpoint ≤ seq
-    * plus arg-max replay of only the tail segments — epoch partition
-    * pruning bounds the scan. */
-  def stateAt(seq: Long): DataFrame =
-    stateAtOver(readSegments(), manifest.checkpoints, seq)
+    * plus arg-max replay of only the tail segments. */
+  def stateAt(seq: Long): DataFrame = stateAtIn(manifest, seq)
+
+  /** stateAt against ONE manifest snapshot: the file list, the schema,
+    * the deletion vectors and the checkpoint list all come from `m`, so
+    * a commit landing mid-plan can't mix two versions. The tail is
+    * planned over only the files [[filesFor]] keeps for the tail epochs
+    * [(c+1)/epochSize, seq/epochSize] — Spark never lists the rest of
+    * the store (past 32 paths its file index runs a distributed listing
+    * job). The epoch and seq row filters stay in the plan, so the
+    * pruning is IO-only.
+    *
+    * `ns` / `ukey` restrict the read to equality on the grouping keys,
+    * applied to the checkpoint AND the tail before the combine — exact,
+    * because every row of a (ns, ukey) group carries that key and the
+    * tombstone filter acts per group. The tail additionally prunes by
+    * ns directory, per-file key range and key bloom. */
+  private[graft] def stateAtIn(m: Manifest, seq: Long,
+                               ns: Option[String] = None,
+                               ukey: Option[Long] = None): DataFrame = {
+    val tail = segmentsFor(m, ns, ukey,
+      tailEpochs(latestCheckpoint(m.checkpoints, seq), seq))
+    stateAtOver(tail, m, seq, keyPredicate(ns, ukey))
+  }
+
+  /** The newest checkpoint at or below `seq`: the base a state read at
+    * `seq` replays its tail onto. */
+  private def latestCheckpoint(checkpoints: Seq[Long], seq: Long): Option[Long] =
+    checkpoints.filter(_ <= seq).maxOption
+
+  /** Epochs a state read at `seq` over checkpoint `ckpt` replays. The
+    * floor is (c+1)/epochSize: a checkpoint exactly at an epoch boundary
+    * (auto-checkpoint) skips that epoch entirely. */
+  private def tailEpochs(ckpt: Option[Long], seq: Long): (Long, Long) =
+    ((ckpt.getOrElse(-1L) + 1) / epochSize, seq / epochSize)
+
+  /** ns / ukey equality as one row predicate (`true` when neither). */
+  private def keyPredicate(ns: Option[String],
+                           ukey: Option[Long]): org.apache.spark.sql.Column =
+    (ns.map(n => col("ns") === lit(n)) ++ ukey.map(k => col("ukey") === lit(k)))
+      .reduceOption(_ && _).getOrElse(lit(true))
 
   /** stateAt over an explicit row source (must carry ns, ukey, seq,
     * payload, epoch) — lets append compute the auto-checkpoint from the
-    * cached batch instead of re-reading the files it just wrote. */
-  private def stateAtOver(rows: DataFrame, checkpoints: Seq[Long],
-                          seq: Long): DataFrame = {
-    val ckpt = checkpoints.filter(_ <= seq).sorted.lastOption
-    val c = ckpt.getOrElse(-1L)
+    * cached batch instead of re-reading the files it just wrote.
+    * `keys` filters the checkpoint and the tail alike. */
+  private def stateAtOver(rows: DataFrame, m: Manifest, seq: Long,
+                          keys: org.apache.spark.sql.Column = lit(true)): DataFrame = {
+    val ckpt = latestCheckpoint(m.checkpoints, seq)
+    val (lo, hi) = tailEpochs(ckpt, seq)
     val tail = rows
-      // prune both ends; floor is (c+1)/epochSize: a checkpoint exactly at
-      // an epoch boundary (auto-checkpoint) skips that epoch entirely
-      .where(col("epoch") >= lit((c + 1) / epochSize) &&
-             col("epoch") <= lit(seq / epochSize))
-      .where(col("seq") <= seq && col("seq") > lit(c))
+      .where(col("epoch") >= lit(lo) && col("epoch") <= lit(hi))
+      .where(col("seq") <= seq && col("seq") > lit(ckpt.getOrElse(-1L)) && keys)
       .select("ns", "ukey", "seq", "payload")
-    val base: Option[DataFrame] = ckpt.map { cp =>
-      spark.read.parquet(ckptDir(cp))
-        .select(col("ns"), col("ukey"), col("last_seq").as("seq"), col("payload"))
-    }
+    val base = ckpt.map(cp => checkpointRows(m, cp).where(keys))
     tombstoneAwareState(base.fold(tail)(_.unionByName(tail)))
   }
+
+  /** Checkpoint `cp` as tail-shaped rows (ns, ukey, seq, payload). A
+    * checkpoint file holds a state read's output, so when `m` pins a
+    * schema the reader is handed [[stateSurface]] and samples no footer
+    * (parquet schema inference runs a Spark job per read). */
+  private def checkpointRows(m: Manifest, cp: Long): DataFrame =
+    stateSurface(m).fold(spark.read)(spark.read.schema)
+      .parquet(ckptDir(cp))
+      .select(col("ns"), col("ukey"), col("last_seq").as("seq"), col("payload"))
+
+  /** The schema of every state read over `m` (ns, ukey, payload,
+    * last_seq), derived from the manifest-pinned DDL without opening a
+    * file; None when the manifest pins no schema (the files decide). */
+  private[graft] def stateSurface(m: Manifest): Option[org.apache.spark.sql.types.StructType] =
+    if (m.schemaDdl.isEmpty) None
+    else Some(tombstoneAwareState(readSegmentsOver(Nil, m.schemaDdl)
+      .select("ns", "ukey", "seq", "payload")).schema)
 
   /** The one state-combine rule: arg-max by seq per (ns, ukey), then
     * drop keys whose winning payload is NULL — the Kafka log-compaction
@@ -4789,7 +4858,10 @@ class JournalStore private (val spark: SparkSession, val path: String,
       .where(col("payload").isNotNull)
 
   /** Latest state (marasa read(ns)). */
-  def latest(): DataFrame = stateAt(manifest.maxSeq)
+  def latest(): DataFrame = {
+    val m = manifest
+    stateAtIn(m, m.maxSeq)
+  }
 
   /** Materialize a checkpoint at `seq` — future stateAt(≥seq) replays only
     * the segments after it (bounded-replay invariant, SURVEY §4.1). */
@@ -5712,6 +5784,10 @@ object JournalStore {
     * retained manifest version references them. */
   val RetainedCheckpoints = 8
 
+  /** The unbounded epoch range: [[JournalStore.filesFor]] with it prunes
+    * by ns / key only. */
+  private[journal] val AllEpochs: (Long, Long) = (Long.MinValue, Long.MaxValue)
+
   /** Whether a journal store exists at `path` (a committed manifest is
     * the store's existence marker — data files without one are invisible
     * by the snapshot-isolation rule). */
@@ -5987,10 +6063,12 @@ object JournalStore {
   private def fileStamp(p: java.nio.file.Path): Option[Any] = try {
     val a = Files.readAttributes(p,
       classOf[java.nio.file.attribute.BasicFileAttributes])
-    // creationTime beside (fileKey, mtime, size) closes the racy-stat
-    // window (round 20, advisor): a reused inode number holding a
-    // same-size replacement written within the mtime granularity is
-    // still a NEW file with a fresh birth time, so the stamp differs.
+    // creationTime beside (fileKey, mtime, size) narrows the racy-stat
+    // window where the filesystem records a birth time: a reused inode
+    // number holding a same-size replacement written within the mtime
+    // granularity is then a NEW file with a fresh birth time, so the
+    // stamp differs. Elsewhere the JDK reports creationTime as the
+    // mtime, and the stamp is effectively (fileKey, mtime, size).
     Some((Option(a.fileKey).map(_.toString).getOrElse(""),
       a.lastModifiedTime, a.creationTime, a.size))
   } catch { case _: java.io.IOException => None }

@@ -43,14 +43,17 @@ class Marasa(val store: JournalStore) {
   }
 
   /** State as of `seq` (None = latest) as a DataFrame (skey, payload) —
-    * the distributed plan, safe at any namespace size. Prunes by ns
-    * directory and epoch upper bound; does not use checkpoints (they
-    * carry the analytics schema, not the facade's string keys). */
+    * the distributed plan, safe at any namespace size. Planned over the
+    * manifest-pruned file list (ns directory, epoch <= bound/epochSize)
+    * of one manifest snapshot; does not use checkpoints (they carry the
+    * analytics schema, not the facade's string keys). */
   def readDF(ns: String, seq: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    val bound = seq.getOrElse(store.manifest.maxSeq)
-    store.readSegments()
+    val m = store.manifest
+    val bound = seq.getOrElse(m.maxSeq)
+    val lastEpoch = bound / store.epochSize
+    store.segmentsFor(m, Some(ns), None, (Long.MinValue, lastEpoch))
       .where(col("ns") === ns && col("seq") <= bound &&
-             col("epoch") <= lit(bound / store.epochSize))
+             col("epoch") <= lit(lastEpoch))
       .groupBy("skey")
       .agg(max(struct(col("seq"), col("payload"))).as("top"))
       // struct max (not max_by): the unique seq alone decides, so a NULL
@@ -76,9 +79,11 @@ class Marasa(val store: JournalStore) {
   }
 
   /** Changes of one key (or the whole namespace) in seq order, as a
-    * DataFrame (seq, skey, payload) — safe at any scale. */
+    * DataFrame (seq, skey, payload) — safe at any scale. Planned over
+    * the namespace's files only. */
   def historyDF(ns: String, key: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val base = store.readSegments().where(col("ns") === ns)
+    val base = store.segmentsFor(store.manifest, Some(ns), None)
+      .where(col("ns") === ns)
     key.fold(base)(k => base.where(col("skey") === k))
       .select(col("seq"), col("skey"), col("payload"))
       .orderBy("seq", "skey")

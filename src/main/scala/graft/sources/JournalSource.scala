@@ -32,7 +32,12 @@ import graft.journal.JournalStore
   *  - STATE-mode reads (asOfSeq/asOfTs) are computed plans (checkpoint
   *    + bounded tail replay + arg-max combine), not file scans — they
   *    stay on the V1 relation below, which already yields ordinary
-  *    vectorized DataFrames.
+  *    vectorized DataFrames. Pushed ns/ukey equality is applied UNDER
+  *    the combine, to the checkpoint and the tail alike (exact: both
+  *    are grouping keys), and the tail is planned over the file list
+  *    the manifest prunes — tail epochs, ns directory, key range and
+  *    bloom — so a point read neither lists the store nor shuffles its
+  *    full state.
   *  - Catalog writes (INSERT INTO journal.t, saveAsTable) ride the V2
   *    commit framework via the table's V1Write (JournalV2.scala).
   *  - Path-based `df.write.format("journal").save(p)` keeps the V1
@@ -194,42 +199,49 @@ class JournalSource extends RelationProvider with CreatableRelationProvider
     val store = parameters.get("asOfVersion").map(_.toLong)
       .fold(store0)(store0.openAt)
     val asOfSeq = parameters.get("asOfSeq").map(_.toLong)
+    // asOfTs accepts ISO-8601 'T' or the JDBC space-separated form
     val asOfTs = parameters.get("asOfTs")
+      .map(t => java.sql.Timestamp.valueOf(t.replace('T', ' ')))
     val ns = parameters.get("ns")
     val epochSize = store.epochSize
-
-    // state mode (point-in-time read) vs scan mode (raw log); the ns
-    // option filters BOTH modes. asOfTs accepts ISO-8601 'T' or the
-    // JDBC space-separated form.
-    val base0 = (asOfSeq, asOfTs) match {
-      case (Some(s), _) => store.stateAt(s)
-      case (None, Some(t)) =>
-        store.stateAtTs(java.sql.Timestamp.valueOf(t.replace('T', ' ')))
-      case _ => store.scanUnordered()
-    }
-    val base = ns.fold(base0)(n => base0.where(col("ns") === n))
     val isScan = asOfSeq.isEmpty && asOfTs.isEmpty
+
+    // the ns option filters BOTH modes (in state mode a pushed ns that
+    // disagrees with it must still come back empty)
+    def nsOpt(d: DataFrame): DataFrame = ns.fold(d)(n => d.where(col("ns") === n))
+    // State mode (point-in-time read) plans in buildScan, so pushed
+    // ns/ukey equality lands UNDER the arg-max combine and prunes the
+    // tail's file list; the schema and every plan come from ONE
+    // manifest snapshot.
+    lazy val snapshot = store.manifest
+    def state(nsEq: Option[String], keyEq: Option[Long]): DataFrame =
+      nsOpt(asOfSeq match {
+        case Some(s) => store.stateAtIn(snapshot, s, nsEq, keyEq)
+        case None => store.stateAtTsIn(snapshot, asOfTs.get, nsEq, keyEq)
+      })
+    lazy val scanBase = nsOpt(store.scanUnordered())
 
     new BaseRelation with PrunedFilteredScan {
       override val sqlContext: SQLContext = ctx
-      override val schema: StructType = base.schema
+      override val schema: StructType =
+        if (isScan) scanBase.schema
+        else store.stateSurface(snapshot).getOrElse(state(None, None).schema)
 
       override def buildScan(requiredColumns: Array[String],
                              filters: Array[Filter]): RDD[Row] = {
-        // a pushed `ukey =` (scan mode) rebuilds the base over the
-        // manifest's key-stat-pruned file list — file-level data
-        // skipping the partition directories can't express; the row
-        // filters below still apply, so pruning is IO-only
-        val keyEq = if (isScan) filters.collectFirst {
-          case EqualTo("ukey", v: Long) => v } else None
+        val keyEq = filters.collectFirst { case EqualTo("ukey", v: Long) => v }
         val nsEq = filters.collectFirst {
           case EqualTo("ns", v: String) => v }.orElse(ns)
-        var d = keyEq match {
-          case Some(_) =>
+        var d =
+          if (!isScan) state(nsEq, keyEq)
+          // a pushed `ukey =` (scan mode) rebuilds the base over the
+          // manifest's key-stat-pruned file list — file-level data
+          // skipping the partition directories can't express; the row
+          // filters below still apply, so pruning is IO-only
+          else if (keyEq.isDefined) {
             val pruned = store.scanUnorderedPruned(nsEq, keyEq)
             nsEq.fold(pruned)(n => pruned.where(col("ns") === n))
-          case None => base
-        }
+          } else scanBase
         if (isScan) filters.foreach {
           // seq bounds → epoch partition-dir bounds (the IO pruner) +
           // the row-level bound itself

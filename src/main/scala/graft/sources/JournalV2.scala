@@ -65,7 +65,9 @@ import graft.journal.JournalStore
   * State-mode reads (asOfSeq/asOfTs — aggregations, not scans) stay on
   * the V1 relation: they are computed plans (checkpoint + bounded tail
   * replay + arg-max combine), not file scans, and already plan as
-  * ordinary vectorized DataFrames. */
+  * ordinary vectorized DataFrames. That relation pushes ns/ukey
+  * equality under the combine and plans the tail over the file list
+  * the manifest prunes (tail epochs, ns directory, key range, bloom). */
 private[sources] object JournalV2 {
 
   /** Idempotent-write identity from writer options (the Delta
@@ -2175,7 +2177,7 @@ private[sources] class JournalParquetScan(base: ParquetScan,
         files = files.filter { f =>
           nsRe.findFirstMatchIn(f).map(_.group(1)) match {
             // only trust directory values that round-trip literally —
-            // the same escaping rule as the store API's filesForKey
+            // the same escaping rule as the store API's filesFor
             case Some(dir) if dir.matches("[A-Za-z0-9_.\\-]+") =>
               names.contains(dir)
             case _ => true

@@ -198,6 +198,82 @@ class PropertySpec extends AnyFunSuite {
     assert(r.passed, r.status.toString)
   }
 
+  test("manifest-pruned stateAt equals the left-fold model; key-pushed " +
+      "state-mode reads equal the unfiltered read filtered in memory") {
+    // (ns, ukey, payload); a None payload is a tombstone
+    val rowGen = for {
+      ns <- Gen.oneOf("a", "b")
+      key <- Gen.choose(1L, 3L)
+      tomb <- Gen.frequency(5 -> false, 1 -> true)
+      p <- Gen.alphaStr.map(_.take(3))
+    } yield (ns, key, if (tomb) None else Some(s"p$p"))
+    val caseGen = for {
+      batches <- Gen.listOfN(4, Gen.choose(2, 5).flatMap(Gen.listOfN(_, rowGen)))
+      dvAfter <- Gen.choose(0, 3) // vector-delete ns=a/dvKey after this batch
+      dvKey <- Gen.choose(1L, 3L)
+      ckpts <- Gen.listOfN(2, Gen.choose(0, 19)) // explicit checkpoints
+      probe <- Gen.choose(0, 19)
+      key <- Gen.zip(Gen.oneOf("a", "b"), Gen.choose(1L, 3L))
+      tsProbe <- Gen.choose(0, 20)
+    } yield (batches, dvAfter, dvKey, ckpts, probe, key, tsProbe)
+    def tsAt(i: Int) = new java.sql.Timestamp(
+      TestSpark.ts("2024-01-01 00:00:00").getTime + i * 60000L)
+    val fewTrials = SCTest.Parameters.default.withMinSuccessfulTests(5)
+    val r = SCTest.check(fewTrials, Prop.forAll(caseGen) {
+      case (batches, dvAfter, dvKey, ckpts, probe, (kNs, kKey), tsProbe) =>
+        val path = java.nio.file.Files
+          .createTempDirectory("graft_pruneprop_").toString + "/s"
+        val store = journal.JournalStore.create(spark, path, epochSize = 3)
+        // every row gets a later ts than the one before, so the store's
+        // (ts, …) seq order is generation order: row i has seq i
+        val rows = batches.flatten.toIndexedSeq
+        var deleted = Set.empty[Int]
+        var at = 0
+        batches.zipWithIndex.foreach { case (b, bi) =>
+          store.append(b.zipWithIndex.map { case ((ns, k, p), i) =>
+            (ns, k, tsAt(at + i), p, 1.0)
+          }.toDF("ns", "ukey", "ts", "payload", "val"))
+          at += b.size
+          if (bi == dvAfter) {
+            store.deleteWhereDv(col("ns") === "a" && col("ukey") === dvKey)
+            deleted ++= (0 until at).filter(i => rows(i)._1 == "a" && rows(i)._2 == dvKey)
+          }
+        }
+        val maxSeq = rows.size - 1L
+        ckpts.map(c => math.min(c.toLong, maxSeq)).distinct.foreach(store.checkpoint)
+        val cps = store.manifest.checkpoints
+        // the left-fold model: live rows up to s, last write wins,
+        // tombstoned keys drop out
+        def model(s: Long) = rows.indices
+          .filter(i => i <= s && !deleted.contains(i))
+          .foldLeft(Map.empty[(String, Long), (Option[String], Long)]) { (m, i) =>
+            m.updated((rows(i)._1, rows(i)._2), (rows(i)._3, i.toLong))
+          }.collect { case ((ns, k), (Some(p), sq)) => (ns, k, p, sq) }.toSet
+        def got(df: org.apache.spark.sql.DataFrame) =
+          df.select("ns", "ukey", "payload", "last_seq")
+            .as[(String, Long, String, Long)].collect().toSet
+        // on every checkpoint (empty tail at an epoch boundary), below
+        // the oldest one (full-prefix replay), a random seq, the head
+        val probes = (cps ++ cps.headOption.map(_ - 1).filter(_ >= 0) :+
+          math.min(probe.toLong, maxSeq) :+ maxSeq).distinct
+        val statesOk = probes.forall(s => got(store.stateAt(s)) == model(s))
+        val version = store.versions().head
+        val s = math.min(probe.toLong, maxSeq)
+        val t = tsAt(tsProbe).toString
+        val keyedOk = Seq(
+          Map("asOfSeq" -> s.toString),
+          Map("asOfTs" -> t),
+          Map("asOfVersion" -> version.toString, "asOfSeq" -> s.toString)
+        ).forall { opts =>
+          val all = spark.read.format("journal").options(opts).load(path)
+          val keyed = all.where(col("ns") === kNs && col("ukey") === kKey)
+          got(keyed) == got(all).filter(x => x._1 == kNs && x._2 == kKey)
+        }
+        statesOk && keyedOk
+    })
+    assert(r.passed, r.status.toString)
+  }
+
   test("incremental stat fold == fresh analyze over the union (stat " +
       "keys identical, packed HLL registers byte-equal)") {
     // THE invariant incremental ANALYZE rests on: analyze(A) folded

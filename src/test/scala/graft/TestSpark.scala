@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared session for every suite (Test/fork gives the suites their
@@ -33,4 +37,24 @@ object TestSpark {
   }
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
+
+  /** The Spark jobs `block` started, as (job id, job description — ""
+    * when unset), in id order. The listener is removed however `block`
+    * exits. */
+  def jobsDuring(block: => Any): Seq[(Int, String)] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(e.jobId -> Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      block
+      TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq.sortBy(_._1)
+  }
 }

@@ -352,6 +352,52 @@ class JournalStoreSpec extends AnyFunSuite {
     assert(viaCkpt === raw)
   }
 
+  test("point-in-time reads past 32 live files plan only tail-epoch files " +
+      "and start no listing job") {
+    val path = freshPath
+    val store = JournalStore.create(spark, path, epochSize = 10)
+    // 10 one-epoch appends over 4 namespaces: one file per (epoch, ns)
+    // per append = 40 live files, auto-checkpoints at 9, 19, …, 89
+    (0 until 10).foreach { b =>
+      store.append(spark.range(0, 10).selectExpr(
+        "concat('n', id % 4) AS ns", "id % 3 AS ukey",
+        s"timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,${b * 10} + id) AS ts",
+        s"concat('b$b-', id) AS payload", "CAST(id AS DOUBLE) AS val"))
+    }
+    val m = store.manifest
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold: a read
+    // naming every live file would run the distributed listing job
+    assert(m.files.size > 32, m.files)
+    def listing(jobs: Seq[(Int, String)]) =
+      jobs.filter(_._2.startsWith("Listing leaf files"))
+    def segmentFiles(df: org.apache.spark.sql.DataFrame) =
+      df.inputFiles.toSeq.filter(_.contains("/segments/"))
+    def epochOf(f: String) = "epoch=(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong
+    val oldest = m.checkpoints.min
+    // on a checkpoint (empty tail), inside an epoch, at the head
+    for (s <- Seq(oldest, oldest + 5, m.maxSeq)) {
+      val c = m.checkpoints.filter(_ <= s).max
+      val tail = ((c + 1) / 10 to s / 10).toSet
+      val jobs = TestSpark.jobsDuring(store.stateAt(s).queryExecution.executedPlan)
+      assert(listing(jobs).isEmpty, s"stateAt($s) started $jobs")
+      val planned = segmentFiles(store.stateAt(s))
+      assert(planned.forall(f => tail.contains(epochOf(f))), s"stateAt($s): $planned")
+      assert(planned.size == m.files.count(f => tail.contains(epochOf(f))))
+
+      def keyRead = spark.read.format("journal").option("asOfSeq", s).load(path)
+        .where($"ns" === "n1" && $"ukey" === 1L)
+      val srcJobs = TestSpark.jobsDuring(keyRead.queryExecution.executedPlan)
+      assert(listing(srcJobs).isEmpty, s"asOfSeq=$s started $srcJobs")
+      // the plan the source hands Spark for that read
+      val keyed = segmentFiles(store.stateAtIn(m, s, Some("n1"), Some(1L)))
+      assert(keyed.forall(f => f.contains("/ns=n1/") && tail.contains(epochOf(f))),
+        s"asOfSeq=$s keyed: $keyed")
+      assert(keyRead.collect().map(_.toString).toSeq ===
+        store.stateAt(s).where($"ns" === "n1" && $"ukey" === 1L)
+          .collect().map(_.toString).toSeq)
+    }
+  }
+
   private def twoEpochStore(epochSize: Long = 4): JournalStore = {
     val store = JournalStore.create(spark, freshPath, epochSize)
     def batch(keys: Seq[Long], tsBase: Int) = keys.zipWithIndex.map { case (k, i) =>
@@ -455,10 +501,11 @@ class JournalStoreSpec extends AnyFunSuite {
     assert(store.manifest.checkpoints === Seq(3L, 7L))
     val t = ts("2024-01-01 00:02:59")
     val st = store.stateAtTs(t)
-    // the epoch whose every ts exceeds the probe is not even scanned
+    // the epoch whose every ts exceeds the probe is not even scanned,
+    // and the certified checkpoint at 7 covers epochs 0-1: the plan
+    // names no segment file at all
     val segFiles = st.inputFiles.filter(_.contains("/segments/"))
-    assert(segFiles.length === 2, segFiles.toSeq)
-    assert(!segFiles.exists(_.contains("epoch=2")), segFiles.toSeq)
+    assert(segFiles.isEmpty, segFiles.toSeq)
     // and the result equals the brute-force fold over the raw scan
     val brute = store.scan().where($"ts" <= t)
       .groupBy("ns", "ukey")

@@ -8,6 +8,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import SegmentFiles.{Probe, epochOf}
+
 /** Native append-only journal store — marasa's design (append-only log,
   * monotonic seqnos, namespaces, point-in-time reads, segment files,
   * checkpoints; SURVEY.md §0.1/§1) transposed to a distributed setting:
@@ -106,16 +108,23 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * while the driver plans the next one; submitting the side passes
     * from a helper thread lets their tasks back-fill those gaps (FIFO
     * scheduling gives the first job priority, exactly the back-fill
-    * shape). `b` runs on the caller's thread so exceptions and
-    * thread-local job state behave as before; `a`'s failure propagates
-    * after `b` completes (both sides are pure aggregates or idempotent
-    * staged writes, so duplicated/abandoned work is safe on retry). */
+    * shape). `b` runs on the caller's thread. `a` runs on a thread
+    * created here, so it inherits the caller's Spark local properties
+    * (job group, scheduler pool, SQL execution id — SparkContext clones
+    * them into child threads) and its jobs are cancelled with the
+    * caller's group; a shared pool's workers would carry whichever
+    * thread first spawned them. The call returns only after BOTH sides
+    * finish: `b`'s failure is rethrown once `a` is done, so a retry of
+    * the op never overlaps its own predecessor; `a`'s failure
+    * propagates after `b` completes. */
   private def overlap[A, B](a: => A)(b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val fa = Future(a)(scala.concurrent.ExecutionContext.global)
-    val rb = b
-    (Await.result(fa, Duration.Inf), rb)
+    var ra: scala.util.Try[A] = null
+    val side = new Thread(() => ra = scala.util.Try(scala.concurrent.blocking(a)),
+      "journal-overlap")
+    side.setDaemon(true)
+    side.start()
+    val rb = try b finally side.join()
+    (ra.get, rb)
   }
 
   /** Read the segment tree. ns is a partition directory — force it back
@@ -199,70 +208,18 @@ class JournalStore private (val spark: SparkSession, val path: String,
           else "seq BIGINT, ns STRING, ukey BIGINT, skey STRING, " +
             "ts TIMESTAMP, payload STRING, val DOUBLE, epoch BIGINT"))
 
-  /** Manifest files that can contain rows of `ns` (when given) and/or
-    * `ukey` (when given) inside the epoch range `epochs` (inclusive) —
-    * the metadata data-skipping path every pruned read plans from, so
-    * Spark is handed a file list the manifest already cut instead of
-    * listing the whole store and partition-pruning afterwards. A file is
-    * dropped when its epoch directory lies outside `epochs`, when its ns
-    * partition directory names another namespace, or
-    * when ITS OWN per-file key range (manifest fstats) excludes the
-    * probed ukey. Stats are per FILE, never merged across batches: a
-    * merged (epoch, ns) range covers only the batches that recorded
-    * stats, so on a store with pre-stats files it would silently drop
-    * files whose rows the range doesn't describe — a false-negative
-    * prune that row filters cannot recover. A file with no stats entry
-    * is always kept, so pruning is exact-or-conservative by
-    * construction; namespaces whose directory rendering isn't the
-    * literal value (partition-path escaping) are likewise never
-    * ns-pruned, and a path with no epoch directory is never
-    * epoch-pruned. */
-  private[journal] def filesFor(m: Manifest, nsOpt: Option[String],
-                                ukey: Option[Long],
-                                epochs: (Long, Long) = AllEpochs): Seq[String] = {
-    val nsRe = """ns=([^/]+)""".r
-    val fmap = m.fstats.map(s => s.file -> s).toMap
-    val (lo, hi) = epochs
-    m.files.filter { f =>
-      val epochKeep = epochOf(f).forall(e => lo <= e && e <= hi)
-      val dirNs = nsRe.findFirstMatchIn(f).map(_.group(1))
-      // only prune on directory values that round-trip literally
-      val safe = dirNs.exists(_.matches("[A-Za-z0-9_.\\-]+"))
-      val nsKeep = nsOpt.forall(n => !safe || dirNs.contains(n))
-      val keyKeep = ukey match {
-        case Some(k) => fmap.get(f).forall(s =>
-          s.minKey <= k && k <= s.maxKey &&
-            JournalStore.bloomMightContain(s.bloom, k))
-        case None => true
-      }
-      epochKeep && nsKeep && keyKeep
-    }
-  }
-
-  /** The segment rows of snapshot `m` over [[filesFor]]'s pruned list —
-    * schema-pinned and DV-subtracted from the same snapshot. Pruning is
-    * IO-only: callers keep their own row filters, so a conservative
-    * (kept) file never changes a result. */
+  /** The segment rows of snapshot `m` over the files that can hold rows
+    * of `ns` and/or `ukey` inside the epoch range `epochs` (inclusive;
+    * [[SegmentFiles.prune]]) — schema-pinned and DV-subtracted from the
+    * same snapshot, so Spark is handed a file list the manifest already
+    * cut instead of listing the whole store and partition-pruning
+    * afterwards. Pruning is IO-only: callers keep their own row filters,
+    * so a conservative (kept) file never changes a result. */
   private[journal] def segmentsFor(m: Manifest, ns: Option[String],
                                    ukey: Option[Long],
                                    epochs: (Long, Long) = AllEpochs): DataFrame =
-    readSegmentsOver(filesFor(m, ns, ukey, epochs), m.schemaDdl, m.dvParts)
-
-  /** Manifest files that can contain a row with ts <= tMicros — the
-    * per-file ts range bounds stateAtTs the way seq/epoch bounds bound
-    * stateAt. A file with no stats is kept (conservative); an
-    * all-null-ts file (tsMin > tsMax sentinel) contributes nothing to a
-    * ts-bounded read and is dropped exactly. */
-  /** Callers pass their own manifest snapshot so the certificate, the
-    * file list and the stats all describe the same committed state (a
-    * fresh `manifest` read here could tear against a concurrent
-    * compact+vacuum). */
-  private def filesForTs(m: Manifest, tMicros: Long): Seq[String] = {
-    val fmap = m.fstats.map(s => s.file -> s).toMap
-    m.files.filter { f =>
-      fmap.get(f).forall(s => s.tsMin <= s.tsMax && s.tsMin <= tMicros)
-    }
-  }
+    readSegmentsOver(SegmentFiles.prune(m, Probe.point(ns, ukey, epochs)),
+      m.schemaDdl, m.dvParts)
 
   /** scanUnordered over only the files that can contain (ns, ukey) —
     * what the `journal` source uses when an ns/ukey equality filter is
@@ -375,8 +332,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       df.select(canonicalCols.map(col): _*)
     // inserts: alive at v2 beyond v1's high-water; file-stat pruning
     // bounds the scan to the window's own files
-    val fmap2 = m2.fstats.map(s => s.file -> s).toMap
-    val insFiles = m2.files.filter(f => fmap2.get(f).forall(_.maxSeq > hi1))
+    val insFiles = SegmentFiles.prune(m2, Probe(seq = Some((hi1 + 1, Long.MaxValue))))
     val inserts = surface(
         readSegmentsOver(insFiles, m2.schemaDdl, m2.dvParts))
       .where(col("seq") > hi1)
@@ -1163,7 +1119,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     if (statCols.isEmpty) return meta // nothing mergeable is recorded
     def decline = meta -- JournalStore.statsMetaKeys(meta)
     if (dvParts2.nonEmpty) return decline
-    val fmap = fstats2.map(s => s.file -> s).toMap
+    val fmap = SegmentFiles.statsByFile(fstats2)
     if (files2.exists(f => !fmap.contains(f)))
       return decline // stats-free file: cannot certify
     val types: Map[String, org.apache.spark.sql.types.DataType] =
@@ -1498,7 +1454,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     *  - `compact`-labeled namespaces rewrite through [[compactNs]]
     *    (clustered by key) — small-file debt healed where it actually
     *    sits instead of sweeping a 100 TB store. Escaped namespace
-    *    names ride filesFor's conservative directory match; the
+    *    names ride [[SegmentFiles]]' conservative directory match; the
     *    default-partition group ("" — no current append door admits
     *    it) is left to an explicit full compact.
     *
@@ -1614,7 +1570,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
   def advise(): Seq[JournalStore.AdviceRow] = {
     val m = manifest
     val out = Seq.newBuilder[JournalStore.AdviceRow]
-    val fmap = m.fstats.map(s => s.file -> s).toMap
+    val fmap = m.fileStats
     // namespace from the PATH, decoded honestly (round 19): partition
     // directories Hive-escape special characters and spell a null ns
     // as the default-partition sentinel, so the raw captured group
@@ -1622,15 +1578,12 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // instead of the null it reads back as. The manifest holds no
     // separate ns field — the directory name IS the ns record — so
     // unescaping the path segment is the manifest-faithful readout.
-    val nsRe = """ns=([^/]+)""".r
-    def nsOf(f: String): String =
-      nsRe.findFirstMatchIn(f).map { mm =>
-        val raw = mm.group(1)
-        if (raw == org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.DEFAULT_PARTITION_NAME) ""
-        else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(raw)
-      }.getOrElse("")
+    def nsOf(f: String): String = {
+      val sp = SegmentFiles.parse(f)
+      if (sp.nsDir.contains(org.apache.spark.sql.catalyst.catalog
+          .ExternalCatalogUtils.DEFAULT_PARTITION_NAME)) ""
+      else sp.nsValue.getOrElse("")
+    }
     m.files.groupBy(nsOf)
       .toSeq.sortBy(_._1).foreach { case (ns, fs) =>
         val rows = fs.flatMap(fmap.get).map(_.rows)
@@ -2046,8 +1999,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
           s"(retained: ${versions().mkString(", ")})"))
     val m1 = mOf(fromVersion); val m2 = mOf(toVersion)
     val lo = m1.maxSeq; val hi = m2.maxSeq
-    val fmap = m2.fstats.map(s => s.file -> s).toMap
-    val files = m2.files.filter(f => fmap.get(f).forall(_.maxSeq > lo))
+    val files = SegmentFiles.prune(m2, Probe(seq = Some((lo + 1, Long.MaxValue))))
     canonicalSurface(readSegmentsOver(files, m2.schemaDdl, m2.dvParts))
       .where(col("seq") > lo && col("seq") <= hi)
       .select("seq", "ns", "ukey", "ts", "payload", "val").orderBy("seq")
@@ -2514,28 +2466,13 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // Per-file stats (the Delta/Iceberg file-stats idea at file grain):
     // the (epoch, ns) repartition writes exactly one file per directory
     // per append, so the batch's (epoch, ns)-grain aggregate IS that new
-    // file's stats. Stats stay per-file forever — see filesFor for
+    // file's stats. Stats stay per-file forever — see FileStat for
     // why merging across batches would be a correctness bug. A directory
     // that unexpectedly gained several files, or an escaped ns whose
     // directory name doesn't round-trip, records no stats: unpruned,
     // never wrong.
     val newFiles = promoteStaged(stage)
-    val nsRe = """ns=([^/]+)""".r
-    val statRow = perNs.map(r => (r.getLong(0), r.getString(1)) -> r).toMap
-    val batchF = newFiles
-      .groupBy(f => (epochOf(f), nsRe.findFirstMatchIn(f).map(_.group(1))))
-      .toSeq.collect {
-        case ((Some(e), Some(n)), Seq(f))
-            if n.matches("[A-Za-z0-9_.\\-]+") && statRow.contains((e, n)) =>
-          val r = statRow((e, n))
-          FileStat(f, r.getLong(2), r.getLong(3), r.getLong(4),
-            if (r.isNullAt(5)) 1L else r.getLong(5),
-            if (r.isNullAt(6)) 0L else r.getLong(6),
-            if (r.isNullAt(7)) 1L else r.getLong(7),
-            if (r.isNullAt(8)) 0L else r.getLong(8),
-            r.getLong(9),
-            perNsBloom.getOrElse((e, n), ""))
-      }
+    val batchF = SegmentFiles.newFileStats(newFiles, perNs, perNsBloom)
     // commit = manifest swap: the new data files become visible to
     // readers only when the manifest that lists them lands
     val (files2, stats2, kstats2) = RootSidecar.appended(
@@ -2570,13 +2507,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
       incrementalStatsMeta(m.meta, out, rowsAppended, preSketch)
     val csRows: Seq[ColumnStatsSidecar.CStat] =
       if (dirSk.isEmpty) Nil
-      else newFiles
-        .groupBy(f => (epochOf(f), nsRe.findFirstMatchIn(f).map(_.group(1))))
-        .toSeq.collect {
-          case ((Some(e), Some(n)), Seq(f))
-              if n.matches("[A-Za-z0-9_.\\-]+") && dirSk.contains((e, n)) =>
-            cstatRowsOf(f, dirSk((e, n)), foldCols)
-        }.flatten
+      else SegmentFiles.soleFiles(newFiles).collect {
+        case (f, d) if dirSk.contains(d) => cstatRowsOf(f, dirSk(d), foldCols)
+      }.flatten
     val (cstatsParts2, cstatsEnvs2): (Seq[String], Map[String, String]) =
       if (csRows.isEmpty) (m.cstatsParts, m.cstatsEnvs)
       else if (m.cstatsParts.sizeIs >= ColumnStatsSidecar.MaxParts)
@@ -2624,8 +2557,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
       // only the pre-append files of the checkpoint's own tail epochs —
       // the rest lie below the newest checkpoint, and stateAtOver's
       // epoch filter would drop their rows after Spark listed them
-      val prior = filesFor(m, None, None,
-        tailEpochs(latestCheckpoint(m.checkpoints, boundary), boundary))
+      val prior = SegmentFiles.prune(m, Probe(
+        tailEpochs(latestCheckpoint(m.checkpoints, boundary), boundary)))
       val priorRows =
         if (prior.nonEmpty)
           // schema-pinned AND DV-subtracted: a checkpoint built from a
@@ -2651,10 +2584,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // leave the manifest here and disk at the next vacuum().
     if (autoCompactFiles > 0) {
       val m2 = manifest
-      val nsRe = """ns=([^/]+)""".r
-      def dirOf(f: String) = (epochOf(f), nsRe.findFirstMatchIn(f).map(_.group(1)))
-      val victims = m2.files.groupBy(dirOf).collect {
-        case ((Some(_), Some(_)), fs) if fs.size > autoCompactFiles => fs
+      val victims = m2.files.groupBy(SegmentFiles.parse(_).dir).collect {
+        case (Some(_), fs) if fs.size > autoCompactFiles => fs
       }.flatten.toSeq
       // same best-effort rule as the checkpoint above: a lost race skips
       // this compaction cycle, it never fails the durable append
@@ -2910,8 +2841,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
   /** PARTIAL compaction scoped to ONE namespace — the Delta `OPTIMIZE …
     * WHERE <partition predicate>` idiom: a hot namespace's small-file
     * debt is rewritten without touching the cold 99% of a 100 TB
-    * store. Selection is filesFor's exact-or-conservative directory
-    * match (a file whose ns can't be proven different is included —
+    * store. Selection is [[SegmentFiles.prune]]'s exact-or-conservative
+    * directory match (a file whose ns can't be proven different is included —
     * compacting extra files is content-preserving, so conservatism
     * costs IO only, never correctness). DV purge semantics ride along:
     * the rewrite materializes vector subtraction for the touched
@@ -2919,7 +2850,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
   def compactNs(ns: String, upToEpoch: Long = Long.MaxValue,
                 clusterByKey: Boolean = false): Unit =
     compactFiles(
-      filesFor(manifest, Some(ns), None)
+      SegmentFiles.prune(manifest, Probe.point(Some(ns), None))
         .filter(f => epochOf(f).exists(_ <= upToEpoch)),
       if (clusterByKey) SegmentLayout.ByKey else SegmentLayout.Unordered)
 
@@ -2961,8 +2892,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val m = manifest
     val old = victimFiles.filter(m.files.contains)
     if (old.isEmpty) return
-    val nsRe = """ns=([^/]+)""".r
-    def dirOf(f: String) = (epochOf(f), nsRe.findFirstMatchIn(f).map(_.group(1)))
+    def dirOf(f: String) = SegmentFiles.parse(f)
     // Read through the pinned schema (a footer-sampled read of
     // mixed-schema victims could DROP evolved columns from the rewrite)
     // AND through the deletion vectors: the rewrite materializes the
@@ -3024,7 +2954,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // the new file. Only when EVERY victim in the group carried stats —
     // otherwise the group may contain pre-stats rows the merge doesn't
     // cover and the new file records none (conservative, never wrong).
-    val fmap = m.fstats.map(s => s.file -> s).toMap
+    val fmap = m.fileStats
     val victims = old.groupBy(dirOf)
     val derived = newFiles.flatMap { nf =>
       victims.get(dirOf(nf)) match {
@@ -3059,13 +2989,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // two coincide — the same guard append/deleteWhere apply; an
     // escapable ns records no fresh sketch and the refold declines
     // (conservative, never a cross-namespace sketch collision)
-    val rewrittenSk = derived.flatMap { s =>
-      dirOf(s.file) match {
-        case (Some(e), Some(n)) if n.matches("[A-Za-z0-9_.\\-]+") =>
-          dirSk.get((e, n)).map(s.file -> _)
-        case _ => None
-      }
-    }
+    val rewrittenSk = derived.flatMap(s =>
+      dirOf(s.file).literalDir.flatMap(dirSk.get).map(s.file -> _))
     val (meta2, cstatsParts2, cstatsEnvs2) =
       rewriteStatsState(m, files2, fstats2, dvParts2, rewrittenSk)
     // HISTOGRAM RE-CAPTURE on a FULL rewrite: this read IS the whole
@@ -3428,35 +3353,43 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // materialization is executor-local (MEMORY_AND_DISK) and IS the
     // probe's evaluation (see the pin-first comment above).
     val srcPinned = src0.localCheckpoint()
-    val probe = srcPinned.take(JournalStore.MergeSmallSourceRows + 1)
-    retryOnLostRace {
-      // WHEN NOT MATCHED BY SOURCE must SEE every state key (its whole
-      // point is the complement), so it always takes the full-join path
-      // with state pruning disabled — a full reconciliation is a full
-      // read of current state by definition. Small sources still route
-      // through the collected probe (the probe IS the source there).
-      if (whenNotMatchedBySourceDelete.isDefined ||
-          whenNotMatchedBySourceSet.nonEmpty)
-        mergeFull(
-          if (probe.length <= JournalStore.MergeSmallSourceRows)
-            spark.createDataFrame(
-              spark.sparkContext.parallelize(probe.toSeq, 1), src0.schema)
-          else srcPinned,
-          extras, whenMatchedDelete, whenMatchedUpdate, whenNotMatchedInsert,
-          whenMatchedUpdateCond, whenNotMatchedBySourceDelete,
-          whenNotMatchedInsertCond, whenNotMatchedBySourceSet,
-          whenNotMatchedBySourceSetCond, whenMatchedUpdateValues,
-          stateNeedsTsVal)
-      else if (probe.length <= JournalStore.MergeSmallSourceRows)
-        mergeSmall(src0.schema, probe, extras, whenMatchedDelete,
+    try {
+      val probe = srcPinned.take(JournalStore.MergeSmallSourceRows + 1)
+      retryOnLostRace {
+        // WHEN NOT MATCHED BY SOURCE must SEE every state key (its whole
+        // point is the complement), so it always takes the full-join path
+        // with state pruning disabled — a full reconciliation is a full
+        // read of current state by definition. Small sources still route
+        // through the collected probe (the probe IS the source there).
+        if (whenNotMatchedBySourceDelete.isDefined ||
+            whenNotMatchedBySourceSet.nonEmpty)
+          mergeFull(
+            if (probe.length <= JournalStore.MergeSmallSourceRows)
+              spark.createDataFrame(
+                spark.sparkContext.parallelize(probe.toSeq, 1), src0.schema)
+            else srcPinned,
+            extras, whenMatchedDelete, whenMatchedUpdate, whenNotMatchedInsert,
+            whenMatchedUpdateCond, whenNotMatchedBySourceDelete,
+            whenNotMatchedInsertCond, whenNotMatchedBySourceSet,
+            whenNotMatchedBySourceSetCond, whenMatchedUpdateValues,
+            stateNeedsTsVal)
+        else if (probe.length <= JournalStore.MergeSmallSourceRows)
+          mergeSmall(src0.schema, probe, extras, whenMatchedDelete,
+            whenMatchedUpdate, whenNotMatchedInsert, whenMatchedUpdateCond,
+            whenNotMatchedInsertCond, whenMatchedUpdateValues, stateNeedsTsVal)
+        else mergeFull(srcPinned, extras, whenMatchedDelete,
           whenMatchedUpdate, whenNotMatchedInsert, whenMatchedUpdateCond,
-          whenNotMatchedInsertCond, whenMatchedUpdateValues, stateNeedsTsVal)
-      else mergeFull(srcPinned, extras, whenMatchedDelete,
-        whenMatchedUpdate, whenNotMatchedInsert, whenMatchedUpdateCond,
-        whenNotMatchedInsertCond = whenNotMatchedInsertCond,
-        whenMatchedUpdateValues = whenMatchedUpdateValues,
-        stateNeedsTsVal = stateNeedsTsVal)
-    }
+          whenNotMatchedInsertCond = whenNotMatchedInsertCond,
+          whenMatchedUpdateValues = whenMatchedUpdateValues,
+          stateNeedsTsVal = stateNeedsTsVal)
+      }
+    } finally
+      // the localCheckpoint blocks are this call's alone: release them
+      // on every exit path (they would otherwise stay in executor
+      // storage until the session ends)
+      srcPinned.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = true))
   }
 
   /** State reconstruction for an extras-carrying merge: the arg-max
@@ -3534,7 +3467,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       else Some(r.get(1).asInstanceOf[Number].longValue)))
     require(keys.distinct.length == keys.length, mergeDupMsg)
     val distinctKeys = keys.toSeq.distinct
-    val cand = mergeCandidateFiles(m, distinctKeys)
+    val cand = SegmentFiles.prune(m, Probe.exactKeys(distinctKeys))
     val nss = distinctKeys.map(_._1).filter(_ != null).distinct
     val uks = distinctKeys.flatMap(_._2).distinct
     val hasNullKey = distinctKeys.exists(_._2.isEmpty)
@@ -3609,7 +3542,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * geometry. The collect is bounded by the namespace count, never the
     * source size, so a 100 TB source profiles in one distributed pass
     * and a few driver rows. The profile prunes the state side twice:
-    * file-level ([[JournalStore.mergeStateCandidateFiles]] — ns
+    * file-level ([[SegmentFiles.Probe.profiles]] — ns
     * directory, range overlap, and a PROVABLY-EMPTY bloom
     * intersection), then row-level (a per-ns range disjunction pushed
     * to the parquet scans — one conjunct per namespace, not per key).
@@ -3706,7 +3639,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       }
       (col("ns") === lit(g.ns)) && keyP
     }.reduceOption(_ || _).getOrElse(lit(false))
-    val cand = JournalStore.mergeStateCandidateFiles(m, groups)
+    val cand = SegmentFiles.prune(m, Probe.profiles(groups))
     val stExtras = storeExtrasOf(m, extras)
     val stateCols = ("ns" +: "ukey" +: "seq" +: "payload" +: stExtras).map(col)
     val state = (if (stateNeedsTsVal) {
@@ -3924,31 +3857,6 @@ class JournalStore private (val spark: SparkSession, val path: String,
             .otherwise(lit(null)).as(c)): _*)
   }
 
-  /** Manifest files whose ns directory / per-file key range / key bloom
-    * can hold ANY of `keys` — the merge touched-file pruning set. Same
-    * exact-or-conservative contract as [[filesFor]]: a file with no
-    * stats, or an ns directory that doesn't round-trip literally, is
-    * always kept; a null-ns key contributes nothing (the merge join is
-    * null-unsafe on ns, so no state row can match it); a null-ukey key
-    * keeps every ns-compatible file (key stats never describe NULL). */
-  private[journal] def mergeCandidateFiles(
-      m: Manifest, keys: Seq[(String, Option[Long])]): Seq[String] = {
-    val nsRe = """ns=([^/]+)""".r
-    val fmap = m.fstats.map(s => s.file -> s).toMap
-    m.files.filter { f =>
-      val dirNs = nsRe.findFirstMatchIn(f).map(_.group(1))
-      val safe = dirNs.exists(_.matches("[A-Za-z0-9_.\\-]+"))
-      keys.exists { case (ns, uk) =>
-        ns != null && (!safe || dirNs.contains(ns)) && (uk match {
-          case Some(k) => fmap.get(f).forall(s =>
-            s.minKey <= k && k <= s.maxKey &&
-              JournalStore.bloomMightContain(s.bloom, k))
-          case None => true
-        })
-      }
-    }
-  }
-
   /** Physical erase (the Delta-style DELETE FROM, and the GDPR lever a
     * logical tombstone can't be): remove every row matching `cond` from
     * the log itself, by rewriting ONLY the segment files that hold a
@@ -4010,8 +3918,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // seq/ts range conjuncts prune through the per-file ranges too —
     // sound for an erase: a file with no in-range row holds no match
     val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
-    val rangeOk = filesForRanges(m, seqR, tsR)
-    val candidates = filesFor(m, nsEq, keyEq).filter(rangeOk.contains)
+    val candidates = SegmentFiles.prune(m,
+      Probe.point(nsEq, keyEq).copy(seq = seqR, ts = tsR))
     if (candidates.isEmpty) return 0L
     // Probe: which candidate files hold a matching row (and how many).
     // `__file` is the manifest-relative path extracted from
@@ -4083,22 +3991,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       promoteStaged(stage)
     }
     retained.unpersist()
-    val nsRe = """ns=([^/]+)""".r
-    val statRow = perNs.map(r => (r.getLong(0), r.getString(1)) -> r).toMap
-    val newF = newFiles
-      .groupBy(f => (epochOf(f), nsRe.findFirstMatchIn(f).map(_.group(1))))
-      .toSeq.collect {
-        case ((Some(e), Some(n)), Seq(f))
-            if n.matches("[A-Za-z0-9_.\\-]+") && statRow.contains((e, n)) =>
-          val r = statRow((e, n))
-          FileStat(f, r.getLong(2), r.getLong(3), r.getLong(4),
-            if (r.isNullAt(5)) 1L else r.getLong(5),
-            if (r.isNullAt(6)) 0L else r.getLong(6),
-            if (r.isNullAt(7)) 1L else r.getLong(7),
-            if (r.isNullAt(8)) 0L else r.getLong(8),
-            r.getLong(9),
-            perNsBloom.getOrElse((e, n), ""))
-      }
+    val newF = SegmentFiles.newFileStats(newFiles, perNs, perNsBloom)
     val files2 = (m.files diff affected) ++ newFiles
     val fstats2 = m.fstats.filterNot(s => affected.contains(s.file)) ++ newF
     // Epoch- and (epoch, ns)-grain stats for the touched groups are
@@ -4107,10 +4000,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // and recomputed by scanning the group's files otherwise — the
     // aggregate-pushdown paths answer COUNT from these, so stale rows
     // counts are a wrong-answer bug, not a precision loss.
-    val fmap2 = fstats2.map(s => s.file -> s).toMap
-    def dirOf(f: String) = (epochOf(f), nsRe.findFirstMatchIn(f).map(_.group(1)))
+    val fmap2 = SegmentFiles.statsByFile(fstats2)
     val touchedEpochs = (affected ++ newFiles).flatMap(epochOf).distinct
-    val touchedDirs = (affected ++ newFiles).map(dirOf).distinct
+    val touchedDirs = (affected ++ newFiles).flatMap(SegmentFiles.parse(_).dir).distinct
     def scanStats(fs: Seq[String]): (Long, Long, Long) = {
       val r = readSegmentsOver(fs, m.schemaDdl, m.dvParts)
         .agg(count(lit(1)), min("seq"), max("seq")).head
@@ -4130,40 +4022,33 @@ class JournalStore private (val spark: SparkSession, val path: String,
           if (n == 0L) None else Some(EpochStat(e, n, mn, mx))
         }
       }
-    val kstats2 = m.kstats.filterNot(k =>
-        touchedDirs.contains((Some(k.epoch), Some(k.ns)))) ++
-      touchedDirs.flatMap {
-        case (Some(e), Some(n)) =>
-          val fs = files2.filter(f => dirOf(f) == (Some(e), Some(n)))
-          if (fs.isEmpty) None
-          else if (fs.forall(fmap2.contains)) {
-            val ss = fs.map(fmap2)
-            val keyed = ss.filter(s => s.minKey <= s.maxKey)
-            Some(KeyStat(e, n,
-              if (keyed.isEmpty) 1L else keyed.map(_.minKey).min,
-              if (keyed.isEmpty) 0L else keyed.map(_.maxKey).max,
-              ss.map(_.rows).sum))
-          } else {
-            val r = readSegmentsOver(fs, m.schemaDdl, m.dvParts)
-              .agg(count(lit(1)), min("ukey"), max("ukey")).head
-            if (r.getLong(0) == 0L) None
-            else Some(KeyStat(e, n,
-              if (r.isNullAt(1)) 1L else r.getLong(1),
-              if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(0)))
-          }
-        case _ => None
+    val kstats2 = m.kstats.filterNot(k => touchedDirs.contains((k.epoch, k.ns))) ++
+      touchedDirs.flatMap { case (e, n) =>
+        val fs = files2.filter(f => SegmentFiles.parse(f).dir.contains((e, n)))
+        if (fs.isEmpty) None
+        else if (fs.forall(fmap2.contains)) {
+          val ss = fs.map(fmap2)
+          val keyed = ss.filter(s => s.minKey <= s.maxKey)
+          Some(KeyStat(e, n,
+            if (keyed.isEmpty) 1L else keyed.map(_.minKey).min,
+            if (keyed.isEmpty) 0L else keyed.map(_.maxKey).max,
+            ss.map(_.rows).sum))
+        } else {
+          val r = readSegmentsOver(fs, m.schemaDdl, m.dvParts)
+            .agg(count(lit(1)), min("ukey"), max("ukey")).head
+          if (r.getLong(0) == 0L) None
+          else Some(KeyStat(e, n,
+            if (r.isNullAt(1)) 1L else r.getLong(1),
+            if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(0)))
+        }
       }
     val dvParts2 = dvPartsWithout(m.dvParts, affected)
     // STATS SURVIVE THE ERASE: rewritten files carry fresh sketches
     // (computed above from the exact retained rows); the merged
     // analyze() stats refold from ALL surviving files' sketches —
     // exact-or-decline per refoldStatsMeta's contract.
-    val rewrittenSk = newF.flatMap { s =>
-      dirOf(s.file) match {
-        case (Some(e), Some(n)) => dirSk.get((e, n)).map(s.file -> _)
-        case _ => None
-      }
-    }
+    val rewrittenSk = newF.flatMap(s =>
+      SegmentFiles.parse(s.file).dir.flatMap(dirSk.get).map(s.file -> _))
     val (meta2, cstatsParts2, cstatsEnvs2) =
       rewriteStatsState(m, files2, fstats2, dvParts2, rewrittenSk)
     commitSeam()
@@ -4223,8 +4108,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // same seq/ts range skipping as deleteWhere: row-independent erase,
     // so a file outside the bounds can hold no doomed row
     val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
-    val rangeOk = filesForRanges(m, seqR, tsR)
-    val candidates = filesFor(m, nsEq, keyEq).filter(rangeOk.contains)
+    val candidates = SegmentFiles.prune(m,
+      Probe.point(nsEq, keyEq).copy(seq = seqR, ts = tsR))
     if (candidates.isEmpty) return 0L
     // One scan finds the doomed rows' identities; already-deleted rows
     // (subtracted by an existing vector) can't match again, so repeated
@@ -4238,10 +4123,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     if (perFile.isEmpty) { hitRows.unpersist(); return 0L }
     val deleted = perFile.values.sum
-    val fmap = m.fstats.map(s => s.file -> s).toMap
     // exact-stats files that lost every row leave the manifest outright
     val fullDead = perFile.collect {
-      case (f, h) if fmap.get(f).exists(_.rows == h) => f
+      case (f, h) if m.fileStats.get(f).exists(_.rows == h) => f
     }.toSeq
     val newEntries =
       if (fullDead.isEmpty) hitRows
@@ -4249,12 +4133,10 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val newPart = writeDvPart(newEntries)
     hitRows.unpersist()
     val files2 = m.files diff fullDead
-    val nsRe = """ns=([^/]+)""".r
-    def dirOf(f: String) = (epochOf(f), nsRe.findFirstMatchIn(f).map(_.group(1)))
     val epochHits = perFile.toSeq.groupBy { case (f, _) => epochOf(f) }
       .collect { case (Some(e), xs) => e -> xs.map(_._2).sum }
-    val dirHits = perFile.toSeq.groupBy { case (f, _) => dirOf(f) }
-      .collect { case ((Some(e), Some(nv)), xs) => (e, nv) -> xs.map(_._2).sum }
+    val dirHits = perFile.toSeq.groupBy { case (f, _) => SegmentFiles.parse(f).dir }
+      .collect { case (Some(d), xs) => d -> xs.map(_._2).sum }
     val fstats2 = m.fstats.filterNot(s => fullDead.contains(s.file)).map { s =>
       perFile.get(s.file).fold(s)(h => s.copy(rows = s.rows - h))
     }
@@ -4315,10 +4197,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val deadPerFile = readDvTable(m.dvParts).groupBy("file")
       .agg(count(lit(1)).as("dead")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val fmap = m.fstats.map(s => s.file -> s).toMap
     val victims = m.files.filter { f =>
       deadPerFile.get(f).exists { dead =>
-        val live = fmap.get(f).map(_.rows).getOrElse(Long.MaxValue)
+        val live = m.fileStats.get(f).map(_.rows).getOrElse(Long.MaxValue)
         live != Long.MaxValue &&
           dead.toDouble / math.max(dead + live, 1L) >= minDeadFraction
       }
@@ -4464,24 +4345,6 @@ class JournalStore private (val spark: SparkSession, val path: String,
     (seqB, tsB)
   }
 
-  /** Manifest files whose per-file seq/ts ranges can OVERLAP the probed
-    * bounds — the range-skipping twin of [[filesFor]], same
-    * exact-or-conservative contract (no stats entry = kept). A file
-    * whose every ts is NULL (tsMin > tsMax sentinel) is dropped exactly
-    * under a ts bound: NULL rows can't satisfy a range conjunct. */
-  private[journal] def filesForRanges(m: Manifest,
-      seqR: Option[(Long, Long)], tsR: Option[(Long, Long)]): Set[String] = {
-    if (seqR.isEmpty && tsR.isEmpty) return m.files.toSet
-    val fmap = m.fstats.map(s => s.file -> s).toMap
-    m.files.filter { f =>
-      fmap.get(f).forall { s =>
-        seqR.forall { case (lo, hi) => s.minSeq <= hi && s.maxSeq >= lo } &&
-          tsR.forall { case (lo, hi) =>
-            s.tsMin <= s.tsMax && s.tsMin <= hi && s.tsMax >= lo }
-      }
-    }.toSet
-  }
-
   /** The commit log as a DataFrame — Delta's DESCRIBE HISTORY for the
     * journal: one row per RETAINED manifest version (vacuum bounds the
     * window), with the version's high-water seq, live file/checkpoint
@@ -4492,9 +4355,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val rows = JournalStore.listVersionFiles(path).flatMap { case (v, _) =>
       JournalStore.readManifestVersion(path, v).map { mv =>
         (v, mv.op, mv.maxSeq, mv.files.size.toLong,
-          if (mv.files.nonEmpty && mv.files.forall(f =>
-            mv.fstats.exists(_.file == f)))
-            mv.fstats.filter(f => mv.files.contains(f.file)).map(_.rows).sum
+          if (mv.files.nonEmpty && mv.files.forall(mv.fileStats.contains))
+            mv.files.map(mv.fileStats(_).rows).sum
           else -1L,
           mv.checkpoints.size.toLong,
           // deletion-vector geometry + commit wall clock (the TIMESTAMP
@@ -4507,9 +4369,6 @@ class JournalStore private (val spark: SparkSession, val path: String,
         "n_checkpoints", "n_dv_parts", "commit_ts_ms")
       .orderBy("version")
   }
-
-  private def epochOf(relPath: String): Option[Long] =
-    """epoch=(\d+)""".r.findFirstMatchIn(relPath).map(_.group(1).toLong)
 
   /** Full journal scan in seq order (marasa history(ns=all)). */
   /** UPDATE: rewrite the CURRENT state rows matching `cond` through
@@ -4615,9 +4474,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * of the keys whose CURRENT state matches, since a current row
     * matching the condition is itself an in-range row — and the state
     * rebuild then reads only the files that can hold THOSE keys
-    * ([[mergeCandidateFiles]]), with the key lists pushed as row
+    * ([[SegmentFiles.Probe.exactKeys]]), with the key lists pushed as row
     * filters. A probe returning more than MergeSmallSourceRows keys (or
-    * any null-ns key, which mergeCandidateFiles cannot describe) falls
+    * any null-ns key, which an exact key list cannot describe) falls
     * back to the equality-pruned set — conservative, never wrong. */
   private[journal] def updatePruning(m: Manifest,
       cond: Option[org.apache.spark.sql.Column])
@@ -4640,11 +4499,11 @@ class JournalStore private (val spark: SparkSession, val path: String,
     }
     val (nsEq, keyEq) = condExpr.map(equalityConjuncts).getOrElse((None, None))
     val keyPred = keyPredicate(nsEq, keyEq)
-    val baseCand = filesFor(m, nsEq, keyEq)
+    val baseCand = SegmentFiles.prune(m, Probe.point(nsEq, keyEq))
     val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
     if (seqR.isEmpty && tsR.isEmpty) return (baseCand, keyPred)
-    val rangeOk = filesForRanges(m, seqR, tsR)
-    val probeFiles = baseCand.filter(rangeOk.contains)
+    val probeFiles = SegmentFiles.prune(m,
+      Probe.point(nsEq, keyEq).copy(seq = seqR, ts = tsR))
     if (probeFiles.isEmpty) return (Nil, keyPred)
     if (probeFiles.size == baseCand.size) return (baseCand, keyPred)
     val probe = readSegmentsOver(probeFiles, m.schemaDdl, m.dvParts)
@@ -4664,7 +4523,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       val in = if (uks.isEmpty) lit(false) else col("ukey").isin(uks: _*)
       if (hasNullKey) in || col("ukey").isNull else in
     }
-    (mergeCandidateFiles(m, keys),
+    (SegmentFiles.prune(m, Probe.exactKeys(keys)),
       keyPred && col("ns").isin(nss: _*) && ukP)
   }
 
@@ -4729,7 +4588,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
                                  ns: Option[String] = None,
                                  ukey: Option[Long] = None): DataFrame = {
     val tMicros = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-    val fmap = m.fstats.map(s => s.file -> s).toMap
+    val fmap = m.fileStats
     // A file certifies checkpoint C when it either holds no rows at or
     // below C, or every one of its rows passes the ts filter — which
     // needs tsMax <= t AND zero null-ts rows: tsMax aggregates only
@@ -4745,9 +4604,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val keys = keyPredicate(ns, ukey)
     val base = ckpt.map(c => checkpointRows(m, c).where(keys))
     val floor = ckpt.fold(Long.MinValue)(c => (c + 1) / epochSize)
-    val tsOk = filesForTs(m, tMicros).toSet
     val pruned = readSegmentsOver(
-      filesFor(m, ns, ukey, (floor, Long.MaxValue)).filter(tsOk),
+      SegmentFiles.prune(m, Probe.point(ns, ukey, (floor, Long.MaxValue))
+        .copy(ts = Some((Long.MinValue, tMicros)))),
       m.schemaDdl, m.dvParts)
     val tail = ckpt.fold(pruned) { c =>
       pruned.where(col("epoch") >= lit(floor) && col("seq") > c)
@@ -4773,8 +4632,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
   /** stateAt against ONE manifest snapshot: the file list, the schema,
     * the deletion vectors and the checkpoint list all come from `m`, so
     * a commit landing mid-plan can't mix two versions. The tail is
-    * planned over only the files [[filesFor]] keeps for the tail epochs
-    * [(c+1)/epochSize, seq/epochSize] — Spark never lists the rest of
+    * planned over only the files [[SegmentFiles.prune]] keeps for the
+    * tail epochs [(c+1)/epochSize, seq/epochSize] — Spark never lists the rest of
     * the store (past 32 paths its file index runs a distributed listing
     * job). The epoch and seq row filters stay in the plan, so the
     * pruning is IO-only.
@@ -5059,79 +4918,13 @@ object JournalStore {
   private[journal] val BloomItems = 8192L
   private[journal] val BloomBits = 65536L
 
-  /** Driver-side probe of a manifest key bloom. Empty or unreadable
-    * blooms answer true — pruning is exact-or-conservative, matching
-    * every other stats family. The hash MUST mirror the write side:
-    * xxhash64 of the BIGINT key, seed 42. */
-  private[graft] def bloomMightContain(b64: String, k: Long): Boolean =
-    if (b64.isEmpty) true
-    else try {
-      val bytes = java.util.Base64.getDecoder.decode(b64)
-      org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(bytes))
-        .mightContainLong(org.apache.spark.sql.catalyst.expressions
-          .XxHash64Function.hash(k, org.apache.spark.sql.types.LongType, 42L))
-    } catch { case _: Exception => true }
-
-  /** True only when two key blooms PROVABLY share no key: both sides
-    * decode, the geometries match, and the bitwise INTERSECTION has
-    * zero set bits — a shared key would have left its k hash bits set
-    * in both filters, hence in the intersection, so an empty
-    * intersection is an exact disjointness witness (the converse is
-    * only probabilistic, which is why the answer is used to PRUNE,
-    * never to match). A missing or unreadable side answers false
-    * (keep) — the exact-or-conservative stats contract. */
-  private[journal] def bloomsDisjoint(fileB64: String,
-                                      src: Array[Byte]): Boolean =
-    if (fileB64.isEmpty || src == null || src.isEmpty) false
-    else try {
-      val a = org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(
-          java.util.Base64.getDecoder.decode(fileB64)))
-      val b = org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(src))
-      a.intersectInPlace(b).cardinality() == 0L
-    } catch { case _: Exception => false }
-
   /** One namespace of a large-merge source profile: key range, null-key
     * presence, and a key bloom in the SAME geometry as the per-file
     * stats blooms (BloomItems/BloomBits — so the two intersect
     * directly). Built by one aggregate pass over the source; collected
     * at namespace grain, never row grain. */
-  private[journal] case class MergeNsProfile(ns: String, kmin: Option[Long],
+  private[graft] case class MergeNsProfile(ns: String, kmin: Option[Long],
       kmax: Option[Long], nullKey: Boolean, bloom: Array[Byte])
-
-  /** Manifest files that can hold state for ANY source key described by
-    * `groups` — the large-source twin of the instance method
-    * `mergeCandidateFiles`'s exact-key pruning, driven by per-ns source
-    * aggregates instead of a collected key list. Exact-or-conservative:
-    * a file with no stats, an ns directory that doesn't round-trip
-    * literally, or an unreadable bloom is kept; a group carrying null
-    * keys keeps every ns-compatible file (key stats never describe
-    * NULL, and the merge join is null-SAFE on ukey). A file is dropped
-    * only when every group either misses its ns directory, has a
-    * provably disjoint key range, or a provably empty bloom
-    * intersection. */
-  private[journal] def mergeStateCandidateFiles(
-      m: Manifest, groups: Seq[MergeNsProfile]): Seq[String] = {
-    val nsRe = """ns=([^/]+)""".r
-    val fmap = m.fstats.map(s => s.file -> s).toMap
-    m.files.filter { f =>
-      val dirNs = nsRe.findFirstMatchIn(f).map(_.group(1))
-      val safe = dirNs.exists(_.matches("[A-Za-z0-9_.\\-]+"))
-      groups.exists { g =>
-        (!safe || dirNs.contains(g.ns)) &&
-          (g.nullKey || ((g.kmin, g.kmax) match {
-            case (Some(klo), Some(khi)) => fmap.get(f).forall(s =>
-              s.minKey <= khi && klo <= s.maxKey &&
-                !bloomsDisjoint(s.bloom, g.bloom))
-            // kmin/kmax absent without nullKey cannot happen for a
-            // non-empty group; answer false (nothing to hold) if it does
-            case _ => false
-          }))
-      }
-    }
-  }
 
   /** OR-merge victim blooms for a compacted file; any missing or
     * unreadable constituent poisons the merge to "" (conservative). */
@@ -5212,7 +5005,12 @@ object JournalStore {
                       // which is also why the field needs no
                       // formatVersion bump: ignoring it is safe by
                       // construction).
-                      cstatsEnvs: Map[String, String] = Map.empty)
+                      cstatsEnvs: Map[String, String] = Map.empty) {
+    /** file → FileStat, built on first use and kept for the snapshot's
+      * lifetime (loads the fstats sidecar; not persisted). */
+    @transient private[graft] lazy val fileStats: Map[String, FileStat] =
+      SegmentFiles.statsByFile(fstats)
+  }
 
   /** Physical row layout of compacted segment files. */
   sealed trait SegmentLayout
@@ -5784,9 +5582,9 @@ object JournalStore {
     * retained manifest version references them. */
   val RetainedCheckpoints = 8
 
-  /** The unbounded epoch range: [[JournalStore.filesFor]] with it prunes
+  /** The unbounded epoch range: a [[SegmentFiles.Probe]] with it prunes
     * by ns / key only. */
-  private[journal] val AllEpochs: (Long, Long) = (Long.MinValue, Long.MaxValue)
+  private[graft] val AllEpochs: (Long, Long) = (Long.MinValue, Long.MaxValue)
 
   /** Whether a journal store exists at `path` (a committed manifest is
     * the store's existence marker — data files without one are invisible

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
@@ -14,7 +13,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.journal.JournalStore
+import graft.journal.{JournalStore, SegmentFiles}
 
 /** V2 micro-batch streaming source for the `journal` format — tail the
   * log by seq offset (`spark.readStream.format("journal").load(path)`).
@@ -128,13 +127,6 @@ private[sources] class JournalMicroBatchStream(
     val store = storeOpt.getOrElse(throw new IllegalStateException(
       s"journal store at $storePath vanished mid-stream"))
     val m = store.manifest
-    val epochSize = store.epochSize
-    val loEpoch = (lo + 1) / epochSize
-    val hiEpoch = hi / epochSize
-    val fmap = m.fstats.map(s => s.file -> s).toMap
-    val epochRe = """epoch=(\d+)""".r
-    val nsRe = """ns=([^/]+)""".r
-    val segDir = s"$storePath/segments"
     // one partition per overlapping file: epoch directory bounds, then
     // the per-file seq range (a file with no stats is kept — the row
     // filter in the reader makes pruning exact-or-conservative)
@@ -147,23 +139,10 @@ private[sources] class JournalMicroBatchStream(
     // landed are not retracted; the stream reflects vectors from the
     // batch that first plans over them.
     val dvAbs = m.dvParts.map(p => s"$storePath/dv/$p")
-    m.files.filter { f =>
-      epochRe.findFirstMatchIn(f).map(_.group(1).toLong)
-        .forall(e => e >= loEpoch && e <= hiEpoch) &&
-        fmap.get(f).forall(s => s.maxSeq > lo && s.minSeq <= hi)
-    }.zipWithIndex.map { case (f, i) =>
-      val epoch = epochRe.findFirstMatchIn(f).map(_.group(1).toLong).getOrElse(0L)
-      val ns = nsRe.findFirstMatchIn(f).map(_.group(1))
-        .map(ExternalCatalogUtils.unescapePathName).orNull
-      val abs = s"$segDir/$f"
-      val pv = new GenericInternalRow(
-        Array[Any](UTF8String.fromString(ns), epoch))
-      JournalStreamPartition(
-        FilePartition(i, Array(PartitionedFile(pv,
-          SparkPath.fromPathString(abs), 0L,
-          java.nio.file.Files.size(java.nio.file.Paths.get(abs))))),
-        lo, hi, f, dvAbs)
-    }.toArray
+    JournalStreamPartition.tailFiles(m, store.epochSize, lo, hi)
+      .zipWithIndex.map { case (f, i) =>
+        JournalStreamPartition.of(storePath, f, i, lo, hi, dvAbs)
+      }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -218,6 +197,32 @@ private[sources] case class JournalStreamPartition(
     dvBasePaths: Seq[String] = Nil,
     fullFileDelete: Boolean = false) extends InputPartition {
   override def preferredLocations(): Array[String] = files.preferredLocations()
+}
+
+private[sources] object JournalStreamPartition {
+  /** Files of snapshot `m` that can hold a seq in (lo, hi] (hi > lo):
+    * epoch directories, then per-file seq ranges (a file with no stats
+    * is kept — the reader's row filter makes pruning
+    * exact-or-conservative). */
+  def tailFiles(m: JournalStore.Manifest, epochSize: Long,
+                lo: Long, hi: Long): Seq[String] =
+    SegmentFiles.prune(m, SegmentFiles.Probe(
+      ((lo + 1) / epochSize, hi / epochSize), seq = Some((lo + 1, hi))))
+
+  /** A one-file partition over segment `rel`, with the epoch and the
+    * decoded ns of its directories as partition values. */
+  def of(storePath: String, rel: String, i: Int, lo: Long, hi: Long,
+         dvPaths: Seq[String]): JournalStreamPartition = {
+    val sp = SegmentFiles.parse(rel)
+    val abs = s"$storePath/segments/$rel"
+    val pv = new GenericInternalRow(Array[Any](
+      UTF8String.fromString(sp.nsValue.orNull), sp.epoch.getOrElse(0L)))
+    JournalStreamPartition(
+      FilePartition(i, Array(PartitionedFile(pv,
+        SparkPath.fromPathString(abs), 0L,
+        java.nio.file.Files.size(java.nio.file.Paths.get(abs))))),
+      lo, hi, rel, dvPaths)
+  }
 }
 
 /** Wraps the stock parquet row reader with the (lo, hi] seq filter and a
@@ -497,36 +502,17 @@ private[sources] class JournalChangeFeedStream(
     // the offset log pins before execution: replay-stable.
     val lo = if (o1.snap) -1L else o1.seq
     val hi = o2.seq
-    val segDir = s"$storePath/segments"
-    val epochRe = """epoch=(\d+)""".r
-    val nsRe = """ns=([^/]+)""".r
     def partFor(f: String, i: Int, dvAbs: Seq[String], ct: String,
                 del: Boolean,
-                dvBase: Seq[String] = Nil): JournalStreamPartition = {
-      val epoch = epochRe.findFirstMatchIn(f).map(_.group(1).toLong).getOrElse(0L)
-      val ns = nsRe.findFirstMatchIn(f).map(_.group(1))
-        .map(ExternalCatalogUtils.unescapePathName).orNull
-      val abs = s"$segDir/$f"
-      val pv = new GenericInternalRow(Array[Any](UTF8String.fromString(ns), epoch))
-      JournalStreamPartition(
-        FilePartition(i, Array(PartitionedFile(pv,
-          SparkPath.fromPathString(abs), 0L,
-          java.nio.file.Files.size(java.nio.file.Paths.get(abs))))),
-        lo, hi, f, dvAbs, changeType = ct, deleteTier = del,
-        dvBasePaths = dvBase)
-    }
+                dvBase: Seq[String] = Nil): JournalStreamPartition =
+      JournalStreamPartition.of(storePath, f, i, lo, hi, dvAbs)
+        .copy(changeType = ct, deleteTier = del, dvBasePaths = dvBase)
     // ---- insert tier: the (lo, hi] tail, dead rows at the END version
     // subtracted (same pruning as the plain stream)
-    val fmap2 = m2.fstats.map(s => s.file -> s).toMap
-    val loEpoch = (lo + 1) / store.epochSize
-    val hiEpoch = if (hi < 0L) -1L else hi / store.epochSize
     val dvAbs2 = m2.dvParts.map(p => s"$storePath/dv/$p")
     val inserts = if (hi <= lo) Seq.empty[JournalStreamPartition]
-      else m2.files.filter { f =>
-        epochRe.findFirstMatchIn(f).map(_.group(1).toLong)
-          .forall(e => e >= loEpoch && e <= hiEpoch) &&
-          fmap2.get(f).forall(s => s.maxSeq > lo && s.minSeq <= hi)
-      }.map(f => partFor(f, 0, dvAbs2, "insert", del = false))
+      else JournalStreamPartition.tailFiles(m2, store.epochSize, lo, hi)
+        .map(f => partFor(f, 0, dvAbs2, "insert", del = false))
     // ---- delete tier: retractions of already-delivered rows. The
     // window's manifests are WALKED step by step (all retained; vacuum
     // keeps every segment file and dv part a retained version

@@ -20,7 +20,7 @@ import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.journal.JournalStore
+import graft.journal.{JournalStore, SegmentFiles}
 
 /** DataSource V2 surface of the `journal` format.
   *
@@ -622,7 +622,7 @@ private[sources] class JournalTable(spark: SparkSession, storePath: String,
         JournalV2.fileIndex(spark, segDir, m.files, tableSchema),
         tableSchema, dataSchema, options,
         store.map(_.epochSize).getOrElse(1000L), m.files,
-        m.fstats.map(s => s.file -> s).toMap, segDir,
+        m.fileStats, segDir,
         storePath, maxSeqsPerTrigger, startingSeq,
         // SQL surface: `nsGrouped` can also ride a table PROPERTY
         // (set_property procedure / setMeta) — a pure-SQL consumer has
@@ -898,16 +898,12 @@ private[sources] class JournalScanBuilder(
     }
     if (keyNames.exists(_.isEmpty)) return None
     val keys = keyNames.flatten
-    val nsDirRe = """ns=([^/]+)""".r
-    val epochDirRe = """epoch=(\d+)""".r
     def keyOf(f: String): Option[Seq[Any]] = {
+      val sp = SegmentFiles.parse(f)
       val vals = keys.map {
         case "ns" =>
-          nsDirRe.findFirstMatchIn(f).map(_.group(1))
-            .filter(_.matches("[A-Za-z0-9_.\\-]+"))
-            .map(org.apache.spark.unsafe.types.UTF8String.fromString)
-        case "epoch" =>
-          epochDirRe.findFirstMatchIn(f).map(m => m.group(1).toLong: java.lang.Long)
+          sp.literalNs.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+        case "epoch" => sp.epoch.map(e => e: java.lang.Long)
       }
       if (vals.exists(_.isEmpty)) None else Some(vals.flatten)
     }
@@ -1094,9 +1090,8 @@ private[sources] class JournalScanBuilder(
         (scan.copy(fileIndex =
           JournalV2.fileIndex(spark, segDir, kept, fullSchema)), kept)
       case (None, Some(k)) =>
-        val pruned = relFiles.filter(f =>
-          fstats.get(f).forall(s => s.minKey <= k && k <= s.maxKey &&
-            JournalStore.bloomMightContain(s.bloom, k)))
+        val pruned = SegmentFiles.prune(relFiles, fstats.get,
+          SegmentFiles.Probe.point(None, Some(k)))
         if (pruned.size < relFiles.size)
           (scan.copy(fileIndex =
             JournalV2.fileIndex(spark, segDir, pruned, fullSchema)), pruned)
@@ -2043,11 +2038,8 @@ private[sources] class JournalParquetScan(base: ParquetScan,
   /** Distinct namespaces among the scanned files, from the directory
     * names (best-effort: Spark recomputes the physical partitioning
     * from the planned partitions' keys — this count is advisory). */
-  private def distinctNsCount: Int = {
-    val nsRe = """ns=([^/]+)""".r
-    math.max(1, relFiles.flatMap(f =>
-      nsRe.findFirstMatchIn(f).map(_.group(1))).distinct.size)
-  }
+  private def distinctNsCount: Int =
+    math.max(1, relFiles.flatMap(SegmentFiles.parse(_).nsDir).distinct.size)
 
   /** Only columns that SURVIVED column pruning may be declared:
     * PartitionPruning resolves these against the scan relation's
@@ -2157,32 +2149,24 @@ private[sources] class JournalParquetScan(base: ParquetScan,
       case i: java.lang.Integer => i.longValue
       case s: java.lang.Short => s.longValue
     }.toSet
-    val nsRe = """ns=([^/]+)""".r
-    val epochRe = """epoch=(\d+)""".r
+    import SegmentFiles.{KeyGroup, Keys, Probe}
+    // each IN narrows the file list through the store's own pruning
+    // routine (directory values trusted only when they round-trip
+    // literally; files without stats kept)
     var files = relFiles
     predicates.flatMap(inValues).foreach {
       case ("ukey", vs) =>
         val ks = longs(vs)
         if (ks.size == vs.size) // decline on non-integral/null values
-          files = files.filter(f => fstats.get(f).forall(s =>
-            ks.exists(k => s.minKey <= k && k <= s.maxKey &&
-              JournalStore.bloomMightContain(s.bloom, k))))
+          files = SegmentFiles.prune(files, fstats.get,
+            Probe(keys = Some(Seq(KeyGroup(None, Keys.Points(ks))))))
       case ("epoch", vs) =>
         val es = longs(vs)
         if (es.size == vs.size)
-          files = files.filter(f =>
-            epochRe.findFirstMatchIn(f).forall(m => es.contains(m.group(1).toLong)))
+          files = SegmentFiles.prune(files, fstats.get, Probe(epochIn = Some(es)))
       case ("ns", vs) =>
-        val names = vs.map(_.toString).toSet
-        files = files.filter { f =>
-          nsRe.findFirstMatchIn(f).map(_.group(1)) match {
-            // only trust directory values that round-trip literally —
-            // the same escaping rule as the store API's filesFor
-            case Some(dir) if dir.matches("[A-Za-z0-9_.\\-]+") =>
-              names.contains(dir)
-            case _ => true
-          }
-        }
+        files = SegmentFiles.prune(files, fstats.get, Probe(keys = Some(
+          vs.map(_.toString).distinct.map(n => KeyGroup(Some(n), Keys.All)))))
       case _ => ()
     }
     if (files.size < relFiles.size)

@@ -274,6 +274,143 @@ class PropertySpec extends AnyFunSuite {
     assert(r.passed, r.status.toString)
   }
 
+  test("SegmentFiles.prune is sound: every file holding a matching row " +
+      "is kept, for every probe shape (literal, escaped and null " +
+      "namespaces, stats-free split and compacted files, DV deletes)") {
+    import journal.SegmentFiles.{KeyGroup, Keys, Probe}
+    val nss = Seq("a", "b", "a b", "x/y")
+    val rowGen = for {
+      ns <- Gen.oneOf(nss)
+      k <- Gen.choose(0L, 15L)
+      nullTs <- Gen.frequency(8 -> false, 1 -> true)
+    } yield (ns, k, nullTs)
+    val caseGen = for {
+      batches <- Gen.listOfN(4, Gen.choose(3, 8).flatMap(Gen.listOfN(_, rowGen)))
+      hot <- Gen.choose(0, 3) // this batch writes one file per row
+      compactUpTo <- Gen.choose(-1L, 3L) // -1: no compaction
+      dvKey <- Gen.choose(0L, 15L)
+      seed <- Gen.choose(0L, Long.MaxValue)
+    } yield (batches, hot, compactUpTo, dvKey, seed)
+    def tsAt(i: Int) = new java.sql.Timestamp(
+      TestSpark.ts("2024-01-01 00:00:00").getTime + i * 60000L)
+    def hash(k: Long) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+      .hash(k, org.apache.spark.sql.types.LongType, 42L)
+    val fewTrials = SCTest.Parameters.default.withMinSuccessfulTests(5)
+    // no shrinking: shrunk namespaces leave the generator's domain
+    // (empty or control-character names the append door refuses)
+    val r = SCTest.check(fewTrials, Prop.forAllNoShrink(caseGen) {
+      case (batches, hot, compactUpTo, dvKey, seed) =>
+        val path = java.nio.file.Files
+          .createTempDirectory("graft_soundprop_").toString + "/s"
+        val seg = s"$path/segments"
+        val store = journal.JournalStore.create(spark, path, epochSize = 4)
+        var at = 0
+        batches.zipWithIndex.foreach { case (b, bi) =>
+          store.withMaxFileRows(
+            if (bi == hot) 1L else journal.JournalStore.AppendWriterTargetRows)
+          store.append(b.zipWithIndex.map { case ((ns, k, nullTs), i) =>
+            (ns, k, if (nullTs) null else tsAt(at + i), s"p$k", 1.0)
+          }.toDF("ns", "ukey", "ts", "payload", "val"))
+          at += b.size
+        }
+        if (compactUpTo >= 0) store.compact(compactUpTo, clusterByKey = true)
+        store.deleteWhereDv(col("ukey") === dvKey)
+        // a null-namespace file (the default-partition directory no
+        // append admits any more, as a pre-refusal store holds it)
+        val before = new java.io.File(seg).list().toSet
+        Seq((1000L, 3L, tsAt(1000), "pn", 1.0, 99L))
+          .toDF("seq", "ukey", "ts", "payload", "val", "epoch")
+          .withColumn("ns", lit(null).cast("string"))
+          .write.mode("append").partitionBy("epoch", "ns").parquet(seg)
+        assert(!before.contains("epoch=99"))
+        val nullFile = new java.io.File(s"$seg/epoch=99").listFiles().head
+          .listFiles().filter(_.getName.endsWith(".parquet")).head
+        val m0 = store.manifest
+        val m = m0.copy(files = m0.files :+
+          s"epoch=99/${nullFile.getParentFile.getName}/${nullFile.getName}")
+        // ground truth: every raw row of every live file (vector-deleted
+        // rows included — stats describe them too)
+        val rows = spark.read
+          .schema("seq BIGINT, ukey BIGINT, ts TIMESTAMP, epoch BIGINT, ns STRING")
+          .option("basePath", seg).parquet(m.files.map(f => s"$seg/$f"): _*)
+          .select(col("_metadata.file_path"),
+            col("ns"), col("ukey"), col("seq"), col("epoch"), unix_micros(col("ts")))
+          // file_path is a URI: decode it back to the manifest's name
+          .collect().map(r => (new java.net.URI(r.getString(0)).getPath
+              .split("/segments/").last, Option(r.getString(1)), r.getLong(2),
+            r.getLong(3), r.getLong(4),
+            if (r.isNullAt(5)) None else Some(r.getLong(5)))).toSeq
+        assert(rows.map(_._1).toSet == m.files.toSet, "ground truth misses files")
+        val maxSeq = rows.map(_._4).max
+        val epochs = rows.map(_._5).distinct
+        val tss = rows.flatMap(_._6)
+        val rnd = new scala.util.Random(seed)
+        def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+        def range(lo: Long, hi: Long): (Long, Long) = {
+          val a = lo + (rnd.nextDouble() * (hi - lo + 1)).toLong
+          val b = lo + (rnd.nextDouble() * (hi - lo + 1)).toLong
+          (math.min(a, b), math.max(a, b))
+        }
+        def someKeys() = List.fill(1 + rnd.nextInt(3))(rnd.nextInt(18).toLong).toSet
+        type Row5 = (Option[String], Long, Long, Long, Option[Long])
+        // each shape: the probe, and the rows it asks for
+        def keyShape(): (Seq[KeyGroup], Row5 => Boolean) = rnd.nextInt(5) match {
+          case 0 => // ns and/or ukey equality
+            val ns = if (rnd.nextBoolean()) Some(pick(nss)) else None
+            val k = if (rnd.nextBoolean()) Some(rnd.nextInt(18).toLong) else None
+            (Probe.point(ns, k).keys.getOrElse(Seq(KeyGroup(None, Keys.All))),
+              r => ns.forall(r._1.contains) && k.forall(_ == r._2))
+          case 1 => // exact key list (null ns holds nothing)
+            val ks = List.fill(1 + rnd.nextInt(4))((
+              if (rnd.nextInt(5) == 0) null else pick(nss),
+              if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(18).toLong)))
+            (Probe.exactKeys(ks).keys.get, r => ks.exists { case (n, k) =>
+              n != null && r._1.contains(n) && k.forall(_ == r._2) })
+          case 2 => // per-namespace source profiles (range + bloom)
+            val gs = nss.filter(_ => rnd.nextBoolean()).map { n =>
+              val ks = if (rnd.nextInt(4) == 0) Set.empty[Long] else someKeys()
+              val bloom = if (rnd.nextInt(4) == 0) Array.emptyByteArray else {
+                val bf = org.apache.spark.util.sketch.BloomFilter.create(8192L, 65536L)
+                ks.foreach(k => bf.putLong(hash(k)))
+                val o = new java.io.ByteArrayOutputStream(); bf.writeTo(o); o.toByteArray
+              }
+              (journal.JournalStore.MergeNsProfile(n, ks.reduceOption(_ min _),
+                ks.reduceOption(_ max _), nullKey = false, bloom), ks)
+            }
+            (Probe.profiles(gs.map(_._1)).keys.get, r => gs.exists { case (g, ks) =>
+              r._1.contains(g.ns) && ks.contains(r._2) })
+          case 3 => // runtime ukey IN
+            val ks = someKeys()
+            (Seq(KeyGroup(None, Keys.Points(ks))), r => ks.contains(r._2))
+          case _ => // runtime ns IN
+            val ns = nss.filter(_ => rnd.nextBoolean()) :+ pick(nss)
+            (ns.map(n => KeyGroup(Some(n), Keys.All)), r => r._1.exists(ns.contains))
+        }
+        (0 until 40).forall { _ =>
+          val ep = if (rnd.nextBoolean()) range(0L, epochs.max + 1) else journal.JournalStore.AllEpochs
+          val epIn = if (rnd.nextInt(4) == 0) Some(epochs.filter(_ => rnd.nextBoolean()).toSet) else None
+          val keys = if (rnd.nextInt(4) == 0) None else Some(keyShape())
+          val sq = if (rnd.nextInt(3) == 0) Some(range(0L, maxSeq)) else None
+          val ts = rnd.nextInt(4) match {
+            case 0 if tss.nonEmpty => Some(range(tss.min, tss.max))
+            case 1 if tss.nonEmpty => Some((Long.MinValue, range(tss.min, tss.max)._2))
+            case _ => None
+          }
+          val probe = Probe(ep, epIn, keys.map(_._1), sq, ts)
+          def matches(r: Row5): Boolean =
+            ep._1 <= r._4 && r._4 <= ep._2 && epIn.forall(_.contains(r._4)) &&
+              keys.forall(_._2(r)) && sq.forall { case (lo, hi) => lo <= r._3 && r._3 <= hi } &&
+              ts.forall { case (lo, hi) => r._5.exists(t => lo <= t && t <= hi) }
+          val holders = rows.filter(r => matches((r._2, r._3, r._4, r._5, r._6))).map(_._1).toSet
+          val kept = journal.SegmentFiles.prune(m, probe).toSet
+          val ok = holders.subsetOf(kept)
+          if (!ok) println(s"[soundness] $probe dropped ${holders -- kept}")
+          ok
+        }
+    })
+    assert(r.passed, r.status.toString)
+  }
+
   test("incremental stat fold == fresh analyze over the union (stat " +
       "keys identical, packed HLL registers byte-equal)") {
     // THE invariant incremental ANALYZE rests on: analyze(A) folded

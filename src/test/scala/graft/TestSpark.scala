@@ -38,23 +38,27 @@ object TestSpark {
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 
-  /** The Spark jobs `block` started, as (job id, job description — ""
-    * when unset), in id order. The listener is removed however `block`
-    * exits. */
-  def jobsDuring(block: => Any): Seq[(Int, String)] = {
+  /** One started Spark job: its id, description and job group ("" when
+    * unset). */
+  final case class Job(id: Int, description: String, group: String)
+
+  /** The Spark jobs `block` started, in id order. The listener is
+    * removed however `block` exits. */
+  def jobsDuring(block: => Any): Seq[Job] = {
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Job]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(e.jobId -> Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        seen.add(Job(e.jobId, prop("spark.job.description"), prop("spark.jobGroup.id")))
+      }
     }
     sc.addSparkListener(listener)
     try {
       block
       TestListenerBus.drain(sc)
     } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.sortBy(_._1)
+    seen.asScala.toSeq.sortBy(_.id)
   }
 }

@@ -368,8 +368,8 @@ class JournalStoreSpec extends AnyFunSuite {
     // past spark.sql.sources.parallelPartitionDiscovery.threshold: a read
     // naming every live file would run the distributed listing job
     assert(m.files.size > 32, m.files)
-    def listing(jobs: Seq[(Int, String)]) =
-      jobs.filter(_._2.startsWith("Listing leaf files"))
+    def listing(jobs: Seq[TestSpark.Job]) =
+      jobs.filter(_.description.startsWith("Listing leaf files"))
     def segmentFiles(df: org.apache.spark.sql.DataFrame) =
       df.inputFiles.toSeq.filter(_.contains("/segments/"))
     def epochOf(f: String) = "epoch=(\\d+)".r.findFirstMatchIn(f).get.group(1).toLong
@@ -1520,8 +1520,8 @@ class JournalStoreSpec extends AnyFunSuite {
     assert(m.files.size >= 6, m.files)
     // a 2-key probe intersects only the files whose ns directory and
     // key range/bloom can hold the keys — a strict subset, never carts
-    val cand = store.mergeCandidateFiles(m,
-      Seq(("users", Some(0L)), ("users", Some(50L))))
+    val cand = SegmentFiles.prune(m, SegmentFiles.Probe.exactKeys(
+      Seq(("users", Some(0L)), ("users", Some(50L)))))
     assert(cand.nonEmpty && cand.size < m.files.size,
       s"$cand vs ${m.files}")
     assert(cand.forall(_.contains("ns=users")), cand)
@@ -1641,10 +1641,10 @@ class JournalStoreSpec extends AnyFunSuite {
       Some(col("ts") < lit(ts("2024-01-01 00:02:00"))))
     assert(cand.nonEmpty && cand.size < m.files.size, s"$cand vs ${m.files}")
     // the per-file range skipping itself, pinned at the manifest grain
-    val tsSub = store.filesForRanges(m, None,
-      Some((Long.MinValue, 0L))) // hi = epoch start → nothing overlaps
+    val tsSub = SegmentFiles.prune(m, SegmentFiles.Probe(
+      ts = Some((Long.MinValue, 0L)))) // hi = epoch start → nothing overlaps
     assert(tsSub.isEmpty)
-    val seqSub = store.filesForRanges(m, Some((0L, 1L)), None)
+    val seqSub = SegmentFiles.prune(m, SegmentFiles.Probe(seq = Some((0L, 1L))))
     assert(seqSub.nonEmpty && seqSub.size < m.files.size, seqSub)
     // functional: the ts-bounded update rewrites exactly the two old
     // keys (their rewritten rows keep the original ts — unassigned
@@ -1705,11 +1705,11 @@ class JournalStoreSpec extends AnyFunSuite {
         nullKey = false, bloom)
     // ns + range tier: a users-only profile keeps no carts file; a
     // range beyond every users file keeps nothing
-    val cand = JournalStore.mergeStateCandidateFiles(m,
-      Seq(prof("users", 0L, 5000L)))
+    val cand = SegmentFiles.prune(m, SegmentFiles.Probe.profiles(
+      Seq(prof("users", 0L, 5000L))))
     assert(cand.nonEmpty && cand.forall(_.contains("ns=users")), cand)
-    assert(JournalStore.mergeStateCandidateFiles(m,
-      Seq(prof("users", 100000L, 100010L))).isEmpty)
+    assert(SegmentFiles.prune(m, SegmentFiles.Probe.profiles(
+      Seq(prof("users", 100000L, 100010L)))).isEmpty)
     // bloom tier BELOW the range: a profile whose range overlaps every
     // users file but whose bloom provably shares no key prunes them all
     val alien = org.apache.spark.util.sketch.BloomFilter.create(8192L, 65536L)
@@ -1717,13 +1717,13 @@ class JournalStoreSpec extends AnyFunSuite {
       .hash(7777L, org.apache.spark.sql.types.LongType, 42L))
     val alienBytes = { val o = new java.io.ByteArrayOutputStream()
       alien.writeTo(o); o.toByteArray }
-    assert(JournalStore.mergeStateCandidateFiles(m,
-      Seq(prof("users", 0L, 5000L, alienBytes))).isEmpty)
+    assert(SegmentFiles.prune(m, SegmentFiles.Probe.profiles(
+      Seq(prof("users", 0L, 5000L, alienBytes)))).isEmpty)
     // a null-key group keeps every ns-compatible file (key stats never
     // describe NULL), and an empty bloom never prunes
     val nullProf = Seq(JournalStore.MergeNsProfile("users", None, None,
       nullKey = true, Array.emptyByteArray))
-    assert(JournalStore.mergeStateCandidateFiles(m, nullProf).toSet ===
+    assert(SegmentFiles.prune(m, SegmentFiles.Probe.profiles(nullProf)).toSet ===
       usersFiles.toSet)
     // end-to-end on the FULL path (3000 rows > MergeSmallSourceRows):
     // upsert users keys 0..2999 — overlapping keys update, the rest
@@ -2260,5 +2260,48 @@ class JournalStoreSpec extends AnyFunSuite {
     // a later key-targeted read is still correct through the stats-less
     // files (pruning declines, results don't change)
     assert(store.scanUnordered().where(col("ukey") === 777L).count() === 1L)
+  }
+
+  test("overlapped store passes run in the caller's job group: every job " +
+      "of analyze() and of an append to an analyzed store carries it") {
+    val store = JournalStore.create(spark, freshPath, epochSize = 100)
+    def batch(lo: Long) = (lo until lo + 20).map(i =>
+      ("users", i, ts("2024-01-01 00:00:00"), s"p$i", i.toDouble))
+      .toDF("ns", "ukey", "ts", "payload", "val")
+    // the first append runs overlapped passes with no group set, so any
+    // pooled worker they spawned would carry no group from here on
+    store.append(batch(0L))
+    val sc = spark.sparkContext
+    sc.setJobGroup("g", "overlap job-group spec")
+    val jobs = try TestSpark.jobsDuring {
+      store.analyze()
+      store.append(batch(100L))
+    } finally sc.clearJobGroup()
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.group == "g"), jobs.filter(_.group != "g"))
+  }
+
+  test("merge releases its pinned source: no RDD blocks it persisted " +
+      "outlive a small-source or a >2048-row merge") {
+    val store = JournalStore.create(spark, freshPath, epochSize = 1000)
+    store.append((0 until 50).map(i =>
+      ("users", i.toLong, ts("2024-01-01 00:00:00"), s"p$i", 1.0))
+      .toDF("ns", "ukey", "ts", "payload", "val"))
+    val sc = spark.sparkContext
+    def held = sc.getRDDStorageInfo.map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val small = Seq(("users", 1L, ts("2024-01-02 00:00:00"), "s1", 2.0))
+      .toDF("ns", "ukey", "ts", "payload", "val")
+    val big = spark.range(3000).selectExpr("'users' AS ns", "id AS ukey",
+      "timestamp'2024-01-02 00:00:00' AS ts", "concat('b', id) AS payload",
+      "CAST(1.0 AS DOUBLE) AS val")
+    for (src <- Seq(small, big)) {
+      val before = held
+      store.merge(src)
+      val after = held
+      assert(after.keySet.subsetOf(before.keySet),
+        s"still persisted after merge: ${after -- before.keySet}")
+      assert(after.values.sum <= before.values.sum)
+    }
+    assert(store.latest().count() === 3000L)
   }
 }

@@ -127,6 +127,16 @@ class JournalStore private (val spark: SparkSession, val path: String,
     (ra.get, rb)
   }
 
+  /** Run `body` over `df`, persisted (MEMORY_AND_DISK) when `pin`, and
+    * release it on every exit path: a lost CAS race, a refused batch or
+    * a failed job included. */
+  private def pinned[A](df: DataFrame, pin: Boolean = true)(body: DataFrame => A): A =
+    if (!pin) body(df)
+    else {
+      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try body(p) finally p.unpersist()
+    }
+
   /** Read the segment tree. ns is a partition directory — force it back
     * to string (partition type inference would make a numeric-looking
     * namespace an int). A store with no appends yet reads as an empty
@@ -149,7 +159,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * `_metadata.row_index` (stable for an immutable file, split-absolute),
     * so no data column participates and the join key never collides.
     * `keepPos = true` keeps the helper columns (`__file`, `__pos`) for
-    * callers that need row identity (the DV writer itself). */
+    * callers that need row identity (the DV writer itself); `__file` is
+    * the file's [[SegmentFiles.uriName]]. */
   private def readSegmentsOver(files: Seq[String],
                                ddl: String,
                                dvParts: Seq[String] = Nil,
@@ -168,11 +179,11 @@ class JournalStore private (val spark: SparkSession, val path: String,
       val needPos = keepPos || dvParts.nonEmpty
       // __file = the path suffix after the LAST '/segments/' — i.e.
       // relative to THIS store's segDir even when the store root itself
-      // contains '/segments/' (a leftmost regex would yield names that
-      // never match manifest entries, silently degrading DV bookkeeping).
-      // The relative name can't contain the marker: it is always
-      // epoch=N/ns=X/part-*.parquet and partition-path escaping encodes
-      // any '/' inside an ns value.
+      // contains '/segments/'. The relative name can't contain the
+      // marker: it is always epoch=N/ns=X/part-*.parquet and
+      // partition-path escaping encodes any '/' inside an ns value. It
+      // is the URI form deletion vectors key on; callers that match it
+      // against manifest names convert through SegmentFiles.fromUri.
       val withPos = if (!needPos) raw else raw
         .withColumn("__file",
           element_at(split(col("_metadata.file_path"), "/segments/"), -1))
@@ -347,7 +358,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
           // manifest-sized driver state, same order as m1.files itself
           val dv0 = readDvTable(newParts)
           val touched = dv0.select("file").distinct()
-            .collect().map(_.getString(0)).toSet
+            .collect().map(r => SegmentFiles.fromUri(r.getString(0))).toSet
           val delFiles = m1.files.filter(touched.contains)
           val dvBytes = newParts.map { p =>
             try Files.size(Paths.get(dvDir, p)) catch { case _: Exception => 0L }
@@ -926,10 +937,11 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * concat key to NULL (concat is null-propagating, and a null group
     * key would NPE the split below): their rows still participate in
     * the caller's merged-sketch fold — dropping them would undercount
-    * nulls/extrema — while the sentinel, outside the safe-ns charset
-    * by construction, can never match a directory name, so the group
-    * records no per-file sidecar row (conservative, same as an escaped
-    * ns). */
+    * nulls/extrema — while the sentinel group never describes a
+    * written file (null rows land in the default-partition directory;
+    * a real NUL-named namespace sharing the key fails the row-count
+    * match in Written.fileSketches), so it records no per-file sidecar
+    * row. */
   private def dirColumnSketches(df: DataFrame, present: Seq[String],
       bTypes: Map[String, org.apache.spark.sql.types.DataType])
       : Map[(Long, String), JournalStore.DirSketches] =
@@ -1028,7 +1040,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
       bTypes(c) == TimestampNTZType)
     val aggs = count(lit(1L)).as("__cs_rows") +:
       sketchAggCols(present, tsCols, bTypes, "__cs_")
-    val wide = df.groupBy(col("__file").as("file"))
+    val file = SegmentFiles.fromUriCol(col("__file"))
+    val wide = df.groupBy(file.as("file"))
       .agg(aggs.head, aggs.tail: _*)
     // one homogeneous struct per stat column (extrema already
     // canonical strings; micros null for non-ts columns; columns the
@@ -1053,7 +1066,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
         (col("rows") - col("e.nn")).as("nulls"),
         col("e.mn").as("mn"), col("e.mx").as("mx"),
         col("e.mnus").as("mnus"), col("e.mxus").as("mxus"))
-    val regs = hllRegisterFrame(df, present, Seq("__gk" -> col("__file")))
+    val regs = hllRegisterFrame(df, present, Seq("__gk" -> file))
       .groupBy(col("__gk").as("file"), col("c").as("col"))
       .agg(collect_list(struct(col("b"), col("m"))).as("pairs"))
     val types = bTypes // serializable (String -> DataType) capture
@@ -1255,16 +1268,12 @@ class JournalStore private (val spark: SparkSession, val path: String,
     if (statCols.isEmpty) return (m.meta, m.cstatsParts, m.cstatsEnvs)
     val fresh = rewritten.flatMap { case (f, ds) =>
       cstatRowsOf(f, ds, statCols) }
-    try {
-      val allDf = cstatsUnionFrame(m.cstatsParts, files2, fresh)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val total = allDf.count()
-        val meta2 = refoldStatsMeta(m.meta, files2, fstats2, dvParts2,
-          allDf, m.schemaDdl)
-        val pairs = writeCstatsParts(allDf, total)
-        (meta2, pairs.map(_._1), pairs.toMap)
-      } finally allDf.unpersist()
+    try pinned(cstatsUnionFrame(m.cstatsParts, files2, fresh)) { allDf =>
+      val total = allDf.count()
+      val meta2 = refoldStatsMeta(m.meta, files2, fstats2, dvParts2,
+        allDf, m.schemaDdl)
+      val pairs = writeCstatsParts(allDf, total)
+      (meta2, pairs.map(_._1), pairs.toMap)
     } catch { case scala.util.control.NonFatal(e) =>
       val (parts2, envs2) = cstatsAbortParts(m.cstatsParts, m.cstatsEnvs,
         files2, fresh, e)
@@ -1356,16 +1365,13 @@ class JournalStore private (val spark: SparkSession, val path: String,
   private def consolidateCstats(parts: Seq[String],
       envs: Map[String, String], liveFiles: Seq[String],
       fresh: Seq[ColumnStatsSidecar.CStat])
-      : (Seq[String], Map[String, String]) = try {
-    val allDf = cstatsUnionFrame(parts, liveFiles, fresh)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      : (Seq[String], Map[String, String]) =
+    try pinned(cstatsUnionFrame(parts, liveFiles, fresh)) { allDf =>
       val pairs = writeCstatsParts(allDf, allDf.count())
       (pairs.map(_._1), pairs.toMap)
-    } finally allDf.unpersist()
-  } catch { case scala.util.control.NonFatal(e) =>
-    cstatsAbortParts(parts, envs, liveFiles, fresh, e)
-  }
+    } catch { case scala.util.control.NonFatal(e) =>
+      cstatsAbortParts(parts, envs, liveFiles, fresh, e)
+    }
 
   /** DECLARED-retention sweep — TTL as a TABLE ATTRIBUTE instead of an
     * operator someone must remember to run (the way production stores
@@ -2316,266 +2322,166 @@ class JournalStore private (val spark: SparkSession, val path: String,
       else if (idNeedsFill(c)) acc.withColumn(c, coalesce(col(c), v))
       else acc
     }
-    val persistOut = !hasSeq || statsLive
-    val out = if (!persistOut) out1
-      else out1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // One stats pass over the batch FIRST, at (epoch, ns) grain: it
-    // yields BOTH manifest stat families (the Delta-style metadata that
-    // lets segmentStats() / seq-range pruning / key-targeted reads skip
-    // the segment tree entirely) AND the new high-water mark — no
-    // separate max(seq) job — and, since round 19, it runs BEFORE the
-    // segment write so the write shuffle below is sized to the batch's
-    // REAL directory count instead of the session shuffle-partition
-    // constant (partitioning derived from the data, not the core
-    // count). Epoch stats are the driver-side rollup of the same rows.
-    val perNs = out.groupBy(col("epoch"), col("ns").cast("string").as("ns"))
-      .agg(count(lit(1)).as("rows"), min("seq").as("mn"), max("seq").as("mx"),
-           min("ukey").as("kmn"), max("ukey").as("kmx"),
-           min(unix_micros(col("ts").cast("timestamp"))).as("tmn"),
-           max(unix_micros(col("ts").cast("timestamp"))).as("tmx"),
-           sum(when(col("ts").cast("timestamp").isNull, 1L).otherwise(0L)).as("tnull"))
-      .collect()
-    // ns is the store's STRUCTURAL partition key — a NULL value has no
-    // directory identity (the writer drops it in the escape-prone
-    // default-partition dir, colliding with any literal ns of that
-    // name) and would poison every ns-keyed stats family (the mroot
-    // KeyStat rows require a name). Refused at the door, riding the
-    // stats pass already in hand — zero extra jobs, and (round 19) now
-    // BEFORE the segment write, so a rejected batch never even stages
-    // bytes. Downstream null-ns handling (the retention sweep's isNull
-    // arm, the sketch key's NUL sentinel) stays as defense in depth,
-    // not as a supported row shape.
-    if (perNs.exists(r => r.isNullAt(1) || r.getString(1).isEmpty)) {
-      if (persistOut) out.unpersist()
-      throw new IllegalArgumentException(
-        "journal append: ns must be non-null and non-empty (the " +
-          "namespace is the store's structural partition key, and the " +
-          "partition writer maps BOTH null and '' to the default-" +
-          "partition directory, which reads back as NULL); the batch " +
-          "was rejected atomically (nothing became visible)")
-    }
-    // Layout: segments/epoch=K/ns=X/ — epoch pruning bounds time-travel
-    // replay, ns pruning bounds per-namespace history reads (marasa's
-    // per-namespace segment files, as partition directories). Repartition
-    // on (epoch, ns) INTO exactly as many partitions as the batch spans
-    // directories (from the stats pass above): each output directory is
-    // written by exactly one task — one file per (epoch, ns) instead of
-    // (#tasks × #dirs) small files — writer tasks spread across the
-    // cluster, and the shuffle never launches partitions that hold no
-    // directory (a toy batch writes in 2 tasks, a 10⁴-directory ingest
-    // in 10⁴ — the parallelism scales with the data either way).
-    // The job writes into a PRIVATE staging dir and the files are then
-    // moved into the live tree: (a) concurrent appends never share a
-    // Hadoop commit `_temporary` dir (the FileOutputCommitter race two
-    // optimistic writers would otherwise hit); (b) the new-file set is
-    // known exactly — no full segment-tree walk per append (O(files)
-    // driver work at the 10⁶-file scale) and no chance of sweeping in a
-    // compacted-but-unvacuumed stranger's file.
-    val stage = newStageDir()
-    // Key blooms ride a SEPARATE pass: BloomFilterAggregate is a
-    // TypedImperativeAggregate, and one such column forces the whole
-    // aggregate onto ObjectHashAggregate — folding it into the stats agg
-    // above demoted eight codegen'd numeric min/max/counts to the
-    // object path (measured +0.3 s per store build at sf0.1). Two lean
-    // passes beat one slow one; same persist-vs-rescan tradeoff the
-    // batch comment documents. The bloom pass and the incremental
-    // column-sketch pass (below) are INDEPENDENT of the segment write,
-    // so they overlap it (guide §2.6) — both read the pinned batch.
-    val foldColsPre = JournalStore.activeStatCols(m0.meta)
-    val presentColsPre = foldColsPre.filter(out.columns.contains)
-    val outTypesPre = out.schema.map(f => f.name -> f.dataType).toMap
-    val rowsInBatch = perNs.map(_.getLong(2)).sum
-    val ((perNsBloom, dirSk), _) = overlap {
-      val bloom: Map[(Long, String), String] =
-        out.groupBy(col("epoch"), col("ns").cast("string").as("ns"))
-          .agg(keyBloomAgg.as("kbloom"))
-          .collect().map { r =>
-            (r.getLong(0), r.getString(1)) ->
-              (if (r.isNullAt(2)) ""
-               else java.util.Base64.getEncoder.encodeToString(
-                 r.getAs[Array[Byte]](2)))
-          }.toMap
-      val sk: Map[(Long, String), JournalStore.DirSketches] =
-        if (presentColsPre.isEmpty || rowsInBatch == 0 ||
-            perNs.length > JournalStore.MaxSketchDirs) Map.empty
-        else dirColumnSketches(out, presentColsPre, outTypesPre)
-      (bloom, sk)
-    } {
-      // HOT-DIRECTORY SPLIT (round 20; see AppendWriterTargetRows): a
-      // directory whose batch rows exceed the per-file bound fans out
-      // over a deterministic seq-keyed salt so no single writer task
-      // serializes a hot-namespace ingest; with no hot directory the
-      // plan is byte-identical to the unsplit one-task-per-directory
-      // shape (one file per directory, per-file stats intact).
-      val hot = perNs.filter(_.getLong(2) > maxFileRows)
-      val toWrite =
-        if (hot.isEmpty)
-          out.repartition(math.max(1, perNs.length),
-            col("epoch"), col("ns"))
-        else {
-          val splits = hot.map { r =>
-            val k = math.min(JournalStore.AppendWriterMaxSplit.toLong,
-              (r.getLong(2) + maxFileRows - 1) / maxFileRows).toInt
-            (r.getLong(0), r.getString(1), k)
-          }
-          val extra = splits.map(_._3 - 1).sum
-          // epoch carries no '/', so "epoch/ns" is injective per dir
-          val hotMap = map(splits.flatMap { case (e, n, k) =>
-            Seq(concat_ws("/", lit(e), lit(n)), lit(k)) }: _*)
-          out.withColumn("__salt",
-              pmod(xxhash64(col("seq")),
-                coalesce(element_at(hotMap,
-                  concat_ws("/", col("epoch"), col("ns"))), lit(1L))))
-            .repartition(math.max(1, perNs.length) + extra,
-              col("epoch"), col("ns"), col("__salt"))
-            .drop("__salt")
-        }
-      writerOpts(toWrite.write.partitionBy("epoch", "ns").mode("append"))
-        .parquet(stage)
-    }
-    val batchStats = perNs.groupBy(_.getLong(0)).map { case (e, rs) =>
-      EpochStat(e, rs.map(_.getLong(2)).sum, rs.map(_.getLong(3)).min,
-        rs.map(_.getLong(4)).max)
-    }.toSeq
-    // all-null ukeys in an (epoch, ns) → empty range (minKey > maxKey):
-    // prunes every equality probe, which is exact (NULL never equals)
-    val batchK = perNs.map(r => KeyStat(r.getLong(0), r.getString(1),
-      if (r.isNullAt(5)) 1L else r.getLong(5),
-      if (r.isNullAt(6)) 0L else r.getLong(6), r.getLong(2))).toSeq
-    val hi = if (batchStats.isEmpty) None else Some(batchStats.map(_.maxSeq).max)
-    val newMax = math.max(m.maxSeq, hi.getOrElse(m.maxSeq)) // empty batch = no-op
-    // Root-list deltas stay RAW: RootSidecar folds base+delta at read
-    // (associative merges), so this append never loads the base lists —
-    // the commit writes one small delta part however many files the
-    // store already tracks (see RootSidecar's class doc).
-    // Schema evolution: record the union of the prior schema and this
-    // batch's columns (new columns append; existing keep their type;
-    // everything nullable since other files may lack it). ns is pinned
-    // STRING and epoch LONG — their read-back types as partition dirs.
-    val prevSchema =
-      if (m.schemaDdl.isEmpty) new org.apache.spark.sql.types.StructType()
-      else org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-    val batchSchema = out.schema.map {
-      case f if f.name == "ns" =>
-        f.copy(dataType = org.apache.spark.sql.types.StringType)
-      case f => f
-    }
-    val mergedSchema = org.apache.spark.sql.types.StructType(
-      (prevSchema ++ batchSchema.filterNot(f =>
-        prevSchema.fieldNames.contains(f.name))).map(_.copy(nullable = true)))
-    // Per-file stats (the Delta/Iceberg file-stats idea at file grain):
-    // the (epoch, ns) repartition writes exactly one file per directory
-    // per append, so the batch's (epoch, ns)-grain aggregate IS that new
-    // file's stats. Stats stay per-file forever — see FileStat for
-    // why merging across batches would be a correctness bug. A directory
-    // that unexpectedly gained several files, or an escaped ns whose
-    // directory name doesn't round-trip, records no stats: unpruned,
-    // never wrong.
-    val newFiles = promoteStaged(stage)
-    val batchF = SegmentFiles.newFileStats(newFiles, perNs, perNsBloom)
-    // commit = manifest swap: the new data files become visible to
-    // readers only when the manifest that lists them lands
-    val (files2, stats2, kstats2) = RootSidecar.appended(
-      m.files, m.stats, m.kstats, newFiles, batchStats, batchK)
-    // identity counters advance in the SAME commit as the data they
-    // numbered — a lost CAS race retries the whole append against the
-    // fresh counter, so values stay unique under retry
-    val rowsAppended = batchStats.map(_.rows).sum
-    val idMeta = idSpecs.collect {
-      case (c, spec) if idNeedsFill(c) && rowsAppended > 0 =>
-        (JournalStore.IdentityPrefix + c) ->
-          JournalStore.packIdentity(spec.copy(used = spec.used + rowsAppended))
-    }
-    // incremental ANALYZE: fold this batch's column sketch into the
-    // recorded stats so they stay served after the append (no-op — and
-    // no extra jobs — on stores that were never analyze()d). When the
-    // fold is active, the batch sketch is captured at (epoch, ns)
-    // DIRECTORY grain — one file per directory per append, so the dir
-    // sketches double as the new files' cstats sidecar rows (what lets
-    // a later deleteWhere/compact REFOLD the merged stats instead of
-    // declining) — at the SAME two-job cost as the flat fold; a batch
-    // spanning more than MaxSketchDirs directories falls back to the
-    // flat fold and skips the per-file rows (bounded driver collect).
-    // dirSk was computed overlapped with the segment write above
-    // (rowsInBatch == rowsAppended: both sum the same perNs rows)
-    val foldCols = foldColsPre
-    val preSketch: Option[Map[String, JournalStore.ColSketch]] =
-      if (dirSk.isEmpty) None
-      else Some(presentColsPre.map(c => c -> JournalStore.mergeColSketches(
-        outTypesPre.get(c), dirSk.values.toSeq.map(_.cols(c)))).toMap)
-    val (statsAdd, statsDrop) =
-      incrementalStatsMeta(m.meta, out, rowsAppended, preSketch)
-    val csRows: Seq[ColumnStatsSidecar.CStat] =
-      if (dirSk.isEmpty) Nil
-      else SegmentFiles.soleFiles(newFiles).collect {
-        case (f, d) if dirSk.contains(d) => cstatRowsOf(f, dirSk(d), foldCols)
-      }.flatten
-    val (cstatsParts2, cstatsEnvs2): (Seq[String], Map[String, String]) =
-      if (csRows.isEmpty) (m.cstatsParts, m.cstatsEnvs)
-      else if (m.cstatsParts.sizeIs >= ColumnStatsSidecar.MaxParts)
-        // consolidate DISTRIBUTED (round 18): live files' rows from the
-        // old parts as one Spark frame + this batch's fresh rows,
-        // written back flush-bounded from the write tasks — the
-        // consolidated sidecar is files-proportional and must not
-        // round-trip the driver. Abort-safe: an unreadable part keeps
-        // the old list and lands the batch's rows as a delta part.
-        consolidateCstats(m.cstatsParts, m.cstatsEnvs, files2, csRows)
-      else {
-        val delta = writeCstatsDelta(csRows)
-        (m.cstatsParts :+ delta._1, m.cstatsEnvs + delta)
+    val foldCols = JournalStore.activeStatCols(m0.meta)
+    val newMax = pinned(out1, !hasSeq || statsLive) { out =>
+      // ns is the store's STRUCTURAL partition key — a NULL value has no
+      // directory identity (the writer drops it in the escape-prone
+      // default-partition dir, colliding with any literal ns of that
+      // name) and would poison every ns-keyed stats family (the mroot
+      // KeyStat rows require a name). Refused at the door, riding the
+      // stats pass already in hand — zero extra jobs, and BEFORE the
+      // segment write, so a rejected batch never even stages bytes.
+      // Downstream null-ns handling (the retention sweep's isNull arm,
+      // the sketch key's NUL sentinel) stays as defense in depth, not as
+      // a supported row shape.
+      def vetNs(perNs: Seq[org.apache.spark.sql.Row]): Unit =
+        if (perNs.exists(r => r.isNullAt(1) || r.getString(1).isEmpty))
+          throw new IllegalArgumentException(
+            "journal append: ns must be non-null and non-empty (the " +
+              "namespace is the store's structural partition key, and the " +
+              "partition writer maps BOTH null and '' to the default-" +
+              "partition directory, which reads back as NULL); the batch " +
+              "was rejected atomically (nothing became visible)")
+      // Layout: segments/epoch=K/ns=X/ — epoch pruning bounds time-travel
+      // replay, ns pruning bounds per-namespace history reads (marasa's
+      // per-namespace segment files, as partition directories). The
+      // writer's stats pass yields BOTH manifest stat families (the
+      // Delta-style metadata that lets segmentStats() / seq-range pruning
+      // / key-targeted reads skip the segment tree entirely) AND the new
+      // high-water mark — no separate max(seq) job; epoch stats are the
+      // driver-side rollup of the same rows. Only an append splits hot
+      // directories (see AppendWriterTargetRows).
+      val w = writeSegments(out, SegmentLayout.Unordered, foldCols,
+        maxFileRows = maxFileRows, vet = vetNs)
+      val perNs = w.perNs
+      val batchStats = perNs.groupBy(_.getLong(0)).map { case (e, rs) =>
+        EpochStat(e, rs.map(_.getLong(2)).sum, rs.map(_.getLong(3)).min,
+          rs.map(_.getLong(4)).max)
+      }.toSeq
+      // all-null ukeys in an (epoch, ns) → empty range (minKey > maxKey):
+      // prunes every equality probe, which is exact (NULL never equals)
+      val batchK = perNs.map(r => KeyStat(r.getLong(0), r.getString(1),
+        if (r.isNullAt(5)) 1L else r.getLong(5),
+        if (r.isNullAt(6)) 0L else r.getLong(6), r.getLong(2)))
+      val hi = if (batchStats.isEmpty) None else Some(batchStats.map(_.maxSeq).max)
+      val newMax = math.max(m.maxSeq, hi.getOrElse(m.maxSeq)) // empty batch = no-op
+      // Root-list deltas stay RAW: RootSidecar folds base+delta at read
+      // (associative merges), so this append never loads the base lists —
+      // the commit writes one small delta part however many files the
+      // store already tracks (see RootSidecar's class doc).
+      // Schema evolution: record the union of the prior schema and this
+      // batch's columns (new columns append; existing keep their type;
+      // everything nullable since other files may lack it). ns is pinned
+      // STRING and epoch LONG — their read-back types as partition dirs.
+      val prevSchema =
+        if (m.schemaDdl.isEmpty) new org.apache.spark.sql.types.StructType()
+        else org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
+      val batchSchema = out.schema.map {
+        case f if f.name == "ns" =>
+          f.copy(dataType = org.apache.spark.sql.types.StringType)
+        case f => f
       }
-    commitSeam()
-    try writeManifest(path, m.copy(op = "append", maxSeq = newMax,
-      files = files2, cstatsParts = cstatsParts2, cstatsEnvs = cstatsEnvs2,
-      stats = stats2, kstats = kstats2, fstats = FileStatsSidecar.appended(m.fstats, batchF),
-      lastBatchId =
-        if (writerId.isEmpty) streamBatchId.getOrElse(m.lastBatchId)
-        else m.lastBatchId,
-      writerMarks =
-        if (writerId.isEmpty || streamBatchId.isEmpty) m.writerMarks
-        else m.writerMarks + (writerId -> streamBatchId.get),
-      meta = m.meta -- statsDrop ++ idMeta ++ statsAdd,
-      schemaDdl = mergedSchema.toDDL))
-    catch { case e: java.util.ConcurrentModificationException =>
-      // lost the commit race: nothing became visible; release the cached
-      // batch before the retry wrapper re-runs the attempt
-      if (persistOut) out.unpersist()
-      throw e
+      val mergedSchema = org.apache.spark.sql.types.StructType(
+        (prevSchema ++ batchSchema.filterNot(f =>
+          prevSchema.fieldNames.contains(f.name))).map(_.copy(nullable = true)))
+      // commit = manifest swap: the new data files become visible to
+      // readers only when the manifest that lists them lands
+      val (files2, stats2, kstats2) = RootSidecar.appended(
+        m.files, m.stats, m.kstats, w.files, batchStats, batchK)
+      // identity counters advance in the SAME commit as the data they
+      // numbered — a lost CAS race retries the whole append against the
+      // fresh counter, so values stay unique under retry
+      val rowsAppended = batchStats.map(_.rows).sum
+      val idMeta = idSpecs.collect {
+        case (c, spec) if idNeedsFill(c) && rowsAppended > 0 =>
+          (JournalStore.IdentityPrefix + c) ->
+            JournalStore.packIdentity(spec.copy(used = spec.used + rowsAppended))
+      }
+      // incremental ANALYZE: fold this batch's column sketch into the
+      // recorded stats so they stay served after the append (no-op — and
+      // no extra jobs — on stores that were never analyze()d). When the
+      // fold is active, the writer captures the batch sketch at (epoch,
+      // ns) DIRECTORY grain — one file per directory per append, so the
+      // dir sketches double as the new files' cstats sidecar rows (what
+      // lets a later deleteWhere/compact REFOLD the merged stats instead
+      // of declining) — at the SAME two-job cost as the flat fold; a
+      // batch spanning more than MaxSketchDirs directories falls back to
+      // the flat fold and skips the per-file rows (bounded driver
+      // collect).
+      val outTypes = out.schema.map(f => f.name -> f.dataType).toMap
+      val preSketch: Option[Map[String, JournalStore.ColSketch]] =
+        if (w.dirSketches.isEmpty) None
+        else Some(foldCols.filter(out.columns.contains).map(c =>
+          c -> JournalStore.mergeColSketches(outTypes.get(c),
+            w.dirSketches.values.toSeq.map(_.cols(c)))).toMap)
+      val (statsAdd, statsDrop) =
+        incrementalStatsMeta(m.meta, out, rowsAppended, preSketch)
+      val csRows = w.fileSketches.flatMap { case (f, ds) =>
+        cstatRowsOf(f, ds, foldCols) }
+      val (cstatsParts2, cstatsEnvs2): (Seq[String], Map[String, String]) =
+        if (csRows.isEmpty) (m.cstatsParts, m.cstatsEnvs)
+        else if (m.cstatsParts.sizeIs >= ColumnStatsSidecar.MaxParts)
+          // consolidate DISTRIBUTED (round 18): live files' rows from the
+          // old parts as one Spark frame + this batch's fresh rows,
+          // written back flush-bounded from the write tasks — the
+          // consolidated sidecar is files-proportional and must not
+          // round-trip the driver. Abort-safe: an unreadable part keeps
+          // the old list and lands the batch's rows as a delta part.
+          consolidateCstats(m.cstatsParts, m.cstatsEnvs, files2, csRows)
+        else {
+          val delta = writeCstatsDelta(csRows)
+          (m.cstatsParts :+ delta._1, m.cstatsEnvs + delta)
+        }
+      commitSeam()
+      // a lost commit race leaves nothing visible; the pin is released
+      // before the retry wrapper re-runs the attempt
+      writeManifest(path, m.copy(op = "append", maxSeq = newMax,
+        files = files2, cstatsParts = cstatsParts2, cstatsEnvs = cstatsEnvs2,
+        stats = stats2, kstats = kstats2,
+        fstats = FileStatsSidecar.appended(m.fstats, w.fileStats),
+        lastBatchId =
+          if (writerId.isEmpty) streamBatchId.getOrElse(m.lastBatchId)
+          else m.lastBatchId,
+        writerMarks =
+          if (writerId.isEmpty || streamBatchId.isEmpty) m.writerMarks
+          else m.writerMarks + (writerId -> streamBatchId.get),
+        meta = m.meta -- statsDrop ++ idMeta ++ statsAdd,
+        schemaDdl = mergedSchema.toDDL))
+      // Automatic checkpoint policy (marasa checkpoints periodically so
+      // reads are bounded by epoch size — SURVEY §0.1.5/§4.1): when this
+      // append completed an epoch, materialize state at the last finished
+      // epoch boundary. stateAt then replays ≤ 1 epoch of tail no matter
+      // how long the journal grows, with no manual maintenance call.
+      // The state source unions the PRE-append segment files with the
+      // still-cached batch — re-reading what this append just wrote would
+      // double the ingest IO.
+      val lastCkpt = m.checkpoints.sorted.lastOption.getOrElse(-1L)
+      val boundary = (newMax / epochSize) * epochSize - 1
+      if (boundary > lastCkpt && newMax / epochSize > (lastCkpt max 0L) / epochSize) {
+        val cols = Seq("ns", "ukey", "seq", "payload", "epoch")
+        // only the pre-append files of the checkpoint's own tail epochs —
+        // the rest lie below the newest checkpoint, and stateAtOver's
+        // epoch filter would drop their rows after Spark listed them
+        val prior = SegmentFiles.prune(m, Probe(
+          tailEpochs(latestCheckpoint(m.checkpoints, boundary), boundary)))
+        val priorRows =
+          if (prior.nonEmpty)
+            // schema-pinned AND DV-subtracted: a checkpoint built from a
+            // raw file read would resurrect vector-deleted rows
+            readSegmentsOver(prior, m.schemaDdl, m.dvParts)
+              .selectExpr(cols: _*)
+          else out.selectExpr(cols: _*).limit(0)
+        val src = priorRows.unionByName(
+          out.withColumn("ns", col("ns").cast("string")).selectExpr(cols: _*))
+        // Post-commit maintenance is best-effort under concurrency: this
+        // append IS durable; if a concurrent writer keeps winning the
+        // checkpoint-registration commit, skip the cycle (the next epoch
+        // rollover re-attempts) rather than failing a succeeded append.
+        try writeCheckpoint(stateAtOver(src, m, boundary), boundary)
+        catch { case _: java.util.ConcurrentModificationException => }
+      }
+      newMax
     }
-    // Automatic checkpoint policy (marasa checkpoints periodically so
-    // reads are bounded by epoch size — SURVEY §0.1.5/§4.1): when this
-    // append completed an epoch, materialize state at the last finished
-    // epoch boundary. stateAt then replays ≤ 1 epoch of tail no matter
-    // how long the journal grows, with no manual maintenance call.
-    // The state source unions the PRE-append segment files with the
-    // still-cached batch — re-reading what this append just wrote would
-    // double the ingest IO.
-    val lastCkpt = m.checkpoints.sorted.lastOption.getOrElse(-1L)
-    val boundary = (newMax / epochSize) * epochSize - 1
-    if (boundary > lastCkpt && newMax / epochSize > (lastCkpt max 0L) / epochSize) {
-      val cols = Seq("ns", "ukey", "seq", "payload", "epoch")
-      // only the pre-append files of the checkpoint's own tail epochs —
-      // the rest lie below the newest checkpoint, and stateAtOver's
-      // epoch filter would drop their rows after Spark listed them
-      val prior = SegmentFiles.prune(m, Probe(
-        tailEpochs(latestCheckpoint(m.checkpoints, boundary), boundary)))
-      val priorRows =
-        if (prior.nonEmpty)
-          // schema-pinned AND DV-subtracted: a checkpoint built from a
-          // raw file read would resurrect vector-deleted rows
-          readSegmentsOver(prior, m.schemaDdl, m.dvParts)
-            .selectExpr(cols: _*)
-        else out.selectExpr(cols: _*).limit(0)
-      val src = priorRows.unionByName(
-        out.withColumn("ns", col("ns").cast("string")).selectExpr(cols: _*))
-      // Post-commit maintenance is best-effort under concurrency: this
-      // append IS durable; if a concurrent writer keeps winning the
-      // checkpoint-registration commit, skip the cycle (the next epoch
-      // rollover re-attempts) rather than failing a succeeded append.
-      try writeCheckpoint(stateAtOver(src, m, boundary), boundary)
-      catch { case _: java.util.ConcurrentModificationException => }
-    }
-    if (persistOut) out.unpersist()
     // Auto-compaction: rewrite only the directories this policy finds
     // over-fragmented (strictly more live files than the threshold),
     // clustered by key so the rewrite is also the read-optimized layout.
@@ -2772,8 +2678,147 @@ class JournalStore private (val spark: SparkSession, val path: String,
     if (dvParts.isEmpty) return Nil
     if (deadFiles.isEmpty) return dvParts
     val survivors = readDvTable(dvParts)
-      .where(!col("file").isin(deadFiles.distinct: _*))
+      .where(!col("file").isin(deadFiles.distinct.map(SegmentFiles.uriName): _*))
     writeDvPart(survivors).toSeq
+  }
+
+  /** The one segment writer: append, deleteWhere and compact turn `rows`
+    * (pinned by the caller when read more than once) into live files
+    * under segments/epoch=E/ns=N/ plus their per-file metadata through
+    * here, and keep only their own commit. Nothing becomes visible until
+    * that commit lists the files.
+    *
+    *  - Stats. With no `victims`, one (epoch, ns) aggregate runs FIRST
+    *    (rows, seq/ukey/ts ranges, null-ts count), so the write shuffle is
+    *    sized to the real directory count (partitioning derived from the
+    *    data, not the session constant); `vet` sees its rows before
+    *    anything is staged, and throwing aborts the write. `victims` =
+    *    (files, their stats) marks a rewrite of whole directories: no
+    *    stats pass (it would cost 2 jobs), the new files' stats merge the
+    *    victims' ([[SegmentFiles.derivedFileStats]]), and the directory
+    *    count comes from the victim paths.
+    *  - Side passes, overlapped with the write (guide §2.6; all read the
+    *    pinned rows) after a stats pass, else run after it. The
+    *    per-directory key bloom (fresh stats only) runs
+    *    apart from the stats aggregate: BloomFilterAggregate is a
+    *    TypedImperativeAggregate, and one such column demotes the whole
+    *    codegen'd numeric aggregate to ObjectHashAggregate (measured
+    *    +0.3 s per store build at sf0.1). The per-directory column
+    *    sketches of `foldCols` (the cstats sidecar rows that let a later
+    *    rewrite refold the merged analyze() stats) are skipped past
+    *    [[JournalStore.MaxSketchDirs]] directories and on an empty batch.
+    *  - Write. Repartition on (epoch, ns) into exactly as many partitions
+    *    as directories: each directory is written by one task into one
+    *    file, and no partition holds no directory. A directory over
+    *    `maxFileRows` rows fans out over a deterministic seq-keyed salt
+    *    instead (the hot-directory split, see AppendWriterTargetRows);
+    *    with no hot directory the plan is the unsplit one. `layout`
+    *    orders rows within each file. The job writes into a private
+    *    staging dir and [[promoteStaged]] moves exactly its files into
+    *    the live tree.
+    *  - Metadata. A directory's aggregate, bloom and sketch describe its
+    *    file only when it got exactly one file; the files of a split
+    *    directory record none (unpruned, never wrong). */
+  private def writeSegments(rows: DataFrame, layout: SegmentLayout,
+      foldCols: Seq[String],
+      victims: Option[(Seq[String], Map[String, FileStat])] = None,
+      maxFileRows: Long = Long.MaxValue,
+      vet: Seq[org.apache.spark.sql.Row] => Unit = _ => ()): Written = {
+    val dirCols = Seq(col("epoch"), col("ns").cast("string").as("ns"))
+    val perNs: Seq[org.apache.spark.sql.Row] =
+      if (victims.isDefined) Nil
+      else rows.groupBy(dirCols: _*)
+        .agg(count(lit(1)).as("rows"), min("seq").as("mn"), max("seq").as("mx"),
+          min("ukey").as("kmn"), max("ukey").as("kmx"),
+          min(unix_micros(col("ts").cast("timestamp"))).as("tmn"),
+          max(unix_micros(col("ts").cast("timestamp"))).as("tmx"),
+          sum(when(col("ts").cast("timestamp").isNull, 1L).otherwise(0L)).as("tnull"))
+        .collect().toSeq
+    vet(perNs)
+    val dirs = victims.fold(perNs.size)(_._1.map(SegmentFiles.parse).distinct.size)
+    val sketchCols = foldCols.filter(rows.columns.contains)
+    val sketch = sketchCols.nonEmpty && dirs <= JournalStore.MaxSketchDirs &&
+      (victims.isDefined || perNs.nonEmpty)
+    def sidePasses() = {
+      val blooms: Map[(Long, String), String] =
+        if (victims.isDefined) Map.empty
+        else rows.groupBy(dirCols: _*).agg(keyBloomAgg.as("kbloom"))
+          .collect().map { r =>
+            (r.getLong(0), r.getString(1)) ->
+              (if (r.isNullAt(2)) ""
+               else java.util.Base64.getEncoder.encodeToString(
+                 r.getAs[Array[Byte]](2)))
+          }.toMap
+      val sk: Map[(Long, String), DirSketches] =
+        if (!sketch) Map.empty
+        else dirColumnSketches(rows, sketchCols,
+          rows.schema.map(f => f.name -> f.dataType).toMap)
+      (blooms, sk)
+    }
+    def write() = {
+      val hot = perNs.filter(_.getLong(2) > maxFileRows)
+      val partitioned =
+        if (hot.isEmpty)
+          rows.repartition(math.max(1, dirs), col("epoch"), col("ns"))
+        else {
+          val splits = hot.map { r =>
+            val k = math.min(JournalStore.AppendWriterMaxSplit.toLong,
+              (r.getLong(2) + maxFileRows - 1) / maxFileRows).toInt
+            (r.getLong(0), r.getString(1), k)
+          }
+          val extra = splits.map(_._3 - 1).sum
+          // epoch carries no '/', so "epoch/ns" is injective per dir
+          val hotMap = map(splits.flatMap { case (e, n, k) =>
+            Seq(concat_ws("/", lit(e), lit(n)), lit(k)) }: _*)
+          rows.withColumn("__salt",
+              pmod(xxhash64(col("seq")),
+                coalesce(element_at(hotMap,
+                  concat_ws("/", col("epoch"), col("ns"))), lit(1L))))
+            .repartition(math.max(1, dirs) + extra,
+              col("epoch"), col("ns"), col("__salt"))
+            .drop("__salt")
+        }
+      val laidOut = layout match {
+        case SegmentLayout.Unordered => partitioned
+        case SegmentLayout.ByKey =>
+          // (epoch, ns) lead the sort so the dynamic-partition writer
+          // streams one open file at a time; (ukey, seq) cluster within
+          partitioned.sortWithinPartitions(col("epoch"), col("ns"),
+            col("ukey"), col("seq"))
+        case SegmentLayout.ZOrder(cols) =>
+          // z-value computed over the whole row set (one extra quantile
+          // pass per column — the rewrite is already a full one); each
+          // column's bucket rank is PROJECTED once per row, then the sort
+          // key is the cheap bit interleave of those columns (see
+          // zInterleave for why inlining is a 10× trap). The sort stays
+          // (epoch, ns) first for the same one-open-file writer argument,
+          // z-curve position within.
+          val bucketCols = zBucketExprs(rows, cols)
+          val names = bucketCols.indices.map(j => s"__graft_zb$j")
+          val withB = bucketCols.zip(names).foldLeft(partitioned) {
+            case (df, (b, nm)) => df.withColumn(nm, b)
+          }
+          withB
+            .sortWithinPartitions(col("epoch"), col("ns"),
+              zInterleave(names.map(col)))
+            .drop(names: _*)
+      }
+      val stage = newStageDir()
+      writerOpts(laidOut.write.partitionBy("epoch", "ns").mode("append"))
+        .parquet(stage)
+      promoteStaged(stage)
+    }
+    // the side passes overlap the write once the stats pass has filled
+    // the pinned rows; with derived stats the write is the first pass
+    // over them, and the sketches follow it to read what it cached
+    val ((blooms, dirSk), files) =
+      if (victims.isEmpty) overlap(sidePasses())(write())
+      else { val fs = write(); (sidePasses(), fs) }
+    val fileStats = victims match {
+      case None => SegmentFiles.newFileStats(files, perNs, blooms)
+      case Some((old, stat)) => SegmentFiles.derivedFileStats(files, old, stat)
+    }
+    Written(files, perNs, fileStats, dirSk)
   }
 
   /** Move the staged job's data files into the live segment tree and
@@ -2892,141 +2937,66 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val m = manifest
     val old = victimFiles.filter(m.files.contains)
     if (old.isEmpty) return
-    def dirOf(f: String) = SegmentFiles.parse(f)
-    // Read through the pinned schema (a footer-sampled read of
-    // mixed-schema victims could DROP evolved columns from the rewrite)
-    // AND through the deletion vectors: the rewrite materializes the
-    // subtraction, so compaction doubles as the DV physical purge.
-    val rows0 = readSegmentsOver(old, m.schemaDdl, m.dvParts)
     // Stats-maintaining compact re-sketches the rewritten files from
     // the rows it already reads (so the refold below can keep the
     // merged analyze() stats alive — including resurrecting them after
     // a DV delete, since this read materializes the subtraction); the
-    // extra passes reuse one cached read.
+    // extra passes reuse one pinned read.
     val foldCols = JournalStore.activeStatCols(m.meta)
     val doSketch = foldCols.nonEmpty &&
-      old.map(dirOf).distinct.sizeIs <= JournalStore.MaxSketchDirs
-    val rows = if (!doSketch) rows0
-      else rows0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Staged write + promote, like append(): the rewrite's commit
-    // protocol is private (no `_temporary` race with concurrent
-    // appenders) and newFiles is exactly THIS compaction's output — no
-    // tree diff that could sweep in files a PREVIOUS compact() dropped
-    // from the manifest but vacuum() hasn't deleted yet.
-    // Shuffle sized to the victim directory count (known driver-side —
-    // a rewrite preserves each row's (epoch, ns) directory), not the
-    // session shuffle-partition constant: partitioning derives from the
-    // data at every scale (round 19, same rule as append/deleteWhere).
-    val partitioned = rows.repartition(
-      math.max(1, old.map(dirOf).distinct.size), col("epoch"), col("ns"))
-    val laidOut = layout match {
-      case SegmentLayout.Unordered => partitioned
-      case SegmentLayout.ByKey =>
-        // (epoch, ns) lead the sort so the dynamic-partition writer
-        // streams one open file at a time; (ukey, seq) cluster within
-        partitioned.sortWithinPartitions(col("epoch"), col("ns"),
-          col("ukey"), col("seq"))
-      case SegmentLayout.ZOrder(cols) =>
-        // z-value computed over the whole victim set (one extra
-        // quantile pass per column — compaction is already a full
-        // rewrite); each column's bucket rank is PROJECTED once per
-        // row, then the sort key is the cheap bit interleave of those
-        // columns (see zInterleave for why inlining is a 10× trap).
-        // The sort stays (epoch, ns) first for the same one-open-file
-        // writer argument, z-curve position within.
-        val bucketCols = zBucketExprs(rows, cols)
-        val names = bucketCols.indices.map(j => s"__graft_zb$j")
-        val withB = bucketCols.zip(names).foldLeft(partitioned) {
-          case (df, (b, nm)) => df.withColumn(nm, b)
+      old.map(SegmentFiles.parse).distinct.sizeIs <= JournalStore.MaxSketchDirs
+    // Read through the pinned schema (a footer-sampled read of
+    // mixed-schema victims could DROP evolved columns from the rewrite)
+    // AND through the deletion vectors: the rewrite materializes the
+    // subtraction, so compaction doubles as the DV physical purge.
+    pinned(readSegmentsOver(old, m.schemaDdl, m.dvParts), doSketch) { rows =>
+      // compaction rewrites whole (epoch, ns) directories into one
+      // file each, so the new files' stats merge the victims' (no
+      // stats pass), and it never splits a directory: the merged stats
+      // assume one file per directory
+      val w = writeSegments(rows, layout, foldCols,
+        victims = Some((old, m.fileStats)))
+      val files2 = (m.files diff old) ++ w.files
+      val fstats2 = m.fstats.filterNot(s => old.contains(s.file)) ++ w.fileStats
+      val dvParts2 = dvPartsWithout(m.dvParts, old)
+      // STATS SURVIVE THE COMPACT: fresh sketches for the rewritten
+      // files, then refold the merged stats over all survivors.
+      val (meta2, cstatsParts2, cstatsEnvs2) =
+        rewriteStatsState(m, files2, fstats2, dvParts2, w.fileSketches)
+      // HISTOGRAM RE-CAPTURE on a FULL rewrite: this read IS the whole
+      // table, so the 16-bin boundaries re-derive for free relative to
+      // the rewrite — the histogram stops dying at 2x growth as long as
+      // the store compacts on its maintenance cadence. Partial compacts
+      // keep the recorded capture (its freshness gate still governs).
+      val fullRewrite = (m.files diff old).isEmpty
+      val meta3 =
+        if (!fullRewrite || !meta2.contains(JournalStore.StatsRowsKey)) meta2
+        else {
+          val total = meta2(JournalStore.StatsRowsKey).toLong
+          val hists = histCapture(rows, JournalStore.activeStatCols(meta2),
+            rows.schema.map(f => f.name -> f.dataType).toMap, total)
+          meta2.filterNot { case (k, _) =>
+            k == JournalStore.StatsHistRowsKey ||
+              (k.startsWith(JournalStore.StatsColPrefix) &&
+                k.endsWith(".hist")) } ++
+            Map(JournalStore.StatsHistRowsKey -> total.toString) ++
+            hists.map { case (c, (bs, ns2)) =>
+              (JournalStore.StatsColPrefix + c + ".hist") ->
+                (bs.mkString(",") + "|" + ns2.mkString(",")) }
         }
-        withB
-          .sortWithinPartitions(col("epoch"), col("ns"),
-            zInterleave(names.map(col)))
-          .drop(names: _*)
+      commitSeam()
+      writeManifest(path, m.copy(op = "compact", files = files2,
+        fstats = fstats2, meta = meta3, cstatsParts = cstatsParts2,
+        cstatsEnvs = cstatsEnvs2,
+        // vectors over the victims are now physically applied — drop them
+        dvParts = dvParts2,
+        // a FULL rewrite (every live file was a victim) re-planned every
+        // row through the narrowed DDL, physically forgetting dropped
+        // columns' bytes — the lapsed names re-open for evolution. A
+        // partial compact may leave pre-drop files alive, so it keeps
+        // the list (conservative; see dropColumn).
+        droppedCols = if (fullRewrite) Nil else m.droppedCols))
     }
-    val stage = newStageDir()
-    writerOpts(laidOut.write.partitionBy("epoch", "ns").mode("append"))
-      .parquet(stage)
-    val newFiles = promoteStaged(stage)
-    // Derive each rewritten file's stats by merging its victims' per-file
-    // stats: compaction rewrites whole (epoch, ns) directories into one
-    // file, so the per-(epoch, ns) merge describes exactly the rows in
-    // the new file. Only when EVERY victim in the group carried stats —
-    // otherwise the group may contain pre-stats rows the merge doesn't
-    // cover and the new file records none (conservative, never wrong).
-    val fmap = m.fileStats
-    val victims = old.groupBy(dirOf)
-    val derived = newFiles.flatMap { nf =>
-      victims.get(dirOf(nf)) match {
-        case Some(vs) if vs.nonEmpty && vs.forall(fmap.contains) =>
-          val ss = vs.map(fmap)
-          val keyed = ss.filter(s => s.minKey <= s.maxKey)
-          val tsed = ss.filter(s => s.tsMin <= s.tsMax)
-          Some(FileStat(nf, ss.map(_.rows).sum,
-            ss.map(_.minSeq).min, ss.map(_.maxSeq).max,
-            if (keyed.isEmpty) 1L else keyed.map(_.minKey).min,
-            if (keyed.isEmpty) 0L else keyed.map(_.maxKey).max,
-            if (tsed.isEmpty) 1L else tsed.map(_.tsMin).min,
-            if (tsed.isEmpty) 0L else tsed.map(_.tsMax).max,
-            // unknown (< 0) in any victim poisons the merge to unknown
-            if (ss.exists(_.nullTs < 0L)) -1L else ss.map(_.nullTs).sum,
-            JournalStore.bloomUnion(ss.map(_.bloom))))
-        case _ => None
-      }
-    }
-    val files2 = (m.files diff old) ++ newFiles
-    val fstats2 = m.fstats.filterNot(s => old.contains(s.file)) ++ derived
-    val dvParts2 = dvPartsWithout(m.dvParts, old)
-    // STATS SURVIVE THE COMPACT: fresh sketches for the rewritten
-    // files, then refold the merged stats over all survivors.
-    val presentCols = foldCols.filter(rows.columns.contains)
-    val dirSk: Map[(Long, String), JournalStore.DirSketches] =
-      if (!doSketch || presentCols.isEmpty) Map.empty
-      else dirColumnSketches(rows, presentCols,
-        rows.schema.map(f => f.name -> f.dataType).toMap)
-    // map dir sketches (keyed by RAW data ns) to new files (whose path
-    // carries the ESCAPED ns) only through the safe charset where the
-    // two coincide — the same guard append/deleteWhere apply; an
-    // escapable ns records no fresh sketch and the refold declines
-    // (conservative, never a cross-namespace sketch collision)
-    val rewrittenSk = derived.flatMap(s =>
-      dirOf(s.file).literalDir.flatMap(dirSk.get).map(s.file -> _))
-    val (meta2, cstatsParts2, cstatsEnvs2) =
-      rewriteStatsState(m, files2, fstats2, dvParts2, rewrittenSk)
-    // HISTOGRAM RE-CAPTURE on a FULL rewrite: this read IS the whole
-    // table, so the 16-bin boundaries re-derive for free relative to
-    // the rewrite — the histogram stops dying at 2x growth as long as
-    // the store compacts on its maintenance cadence. Partial compacts
-    // keep the recorded capture (its freshness gate still governs).
-    val fullRewrite = (m.files diff old).isEmpty
-    val meta3 =
-      if (!fullRewrite || !meta2.contains(JournalStore.StatsRowsKey)) meta2
-      else {
-        val total = meta2(JournalStore.StatsRowsKey).toLong
-        val hists = histCapture(rows, JournalStore.activeStatCols(meta2),
-          rows.schema.map(f => f.name -> f.dataType).toMap, total)
-        meta2.filterNot { case (k, _) =>
-          k == JournalStore.StatsHistRowsKey ||
-            (k.startsWith(JournalStore.StatsColPrefix) &&
-              k.endsWith(".hist")) } ++
-          Map(JournalStore.StatsHistRowsKey -> total.toString) ++
-          hists.map { case (c, (bs, ns2)) =>
-            (JournalStore.StatsColPrefix + c + ".hist") ->
-              (bs.mkString(",") + "|" + ns2.mkString(",")) }
-      }
-    if (doSketch) rows.unpersist()
-    commitSeam()
-    writeManifest(path, m.copy(op = "compact", files = files2,
-      fstats = fstats2, meta = meta3, cstatsParts = cstatsParts2,
-      cstatsEnvs = cstatsEnvs2,
-      // vectors over the victims are now physically applied — drop them
-      dvParts = dvParts2,
-      // a FULL rewrite (every live file was a victim) re-planned every
-      // row through the narrowed DDL, physically forgetting dropped
-      // columns' bytes — the lapsed names re-open for evolution. A
-      // partial compact may leave pre-drop files alive, so it keeps
-      // the list (conservative; see dropColumn).
-      droppedCols = if (fullRewrite) Nil else m.droppedCols))
   }
 
   /** Delete segment files referenced by NO retained manifest version.
@@ -3869,9 +3839,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * data-skipping path reads use, so a single-key erasure opens only
     * the files that key can live in; (2) a probe scan finds which
     * candidates actually contain matches (Delta's touched-file scan);
-    * (3) only those files are rewritten without the matching rows, with
-    * fresh per-file stats/blooms computed in the same pass layout
-    * append() uses. Untouched files are untouched. The swap is one
+    * (3) only those files are rewritten without the matching rows,
+    * through the segment writer ([[writeSegments]]: fresh per-file
+    * stats, blooms and sketches). Untouched files are untouched. The swap is one
     * manifest CAS: concurrent readers keep their snapshot, and the old
     * files stay on disk for retained versions until vacuum().
     *
@@ -3889,43 +3859,16 @@ class JournalStore private (val spark: SparkSession, val path: String,
     requireWritable()
     val m = manifest
     if (m.files.isEmpty) return 0L
-    // Spark 4's Column no longer exposes its Catalyst expression; recover
-    // it from the ANALYZED plan of a filter over a SCHEMA-ONLY relation
-    // (attribute resolution and cast insertion need only the schema, so
-    // this never builds a file index or reads a footer — the files-based
-    // relation would stat every segment on the driver just to resolve
-    // one expression). The analyzer may wrap literals in casts;
-    // equalityConjuncts folds those. A shape we can't recover just means
-    // no pruning (all files are candidates) — the probe scan still
-    // bounds the rewrite.
-    def recoverExpr(df: org.apache.spark.sql.DataFrame)
-        : Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-      df.where(cond).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    val condExpr: Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-      try recoverExpr(readSegmentsOver(Nil, m.schemaDdl))
-      catch {
-        // legacy edge: a store with no pinned DDL whose files carry
-        // evolved columns — the schema-only surface can't resolve the
-        // predicate, but the footer-inferred file relation can (and the
-        // probe scan below needs exactly that resolution to work anyway)
-        case _: org.apache.spark.sql.AnalysisException =>
-          recoverExpr(readSegmentsOver(m.files, m.schemaDdl, m.dvParts))
-      }
-    val (nsEq, keyEq) =
-      condExpr.map(equalityConjuncts).getOrElse((None, None))
-    // seq/ts range conjuncts prune through the per-file ranges too —
-    // sound for an erase: a file with no in-range row holds no match
-    val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
-    val candidates = SegmentFiles.prune(m,
-      Probe.point(nsEq, keyEq).copy(seq = seqR, ts = tsR))
+    // ns/ukey equality and seq/ts range conjuncts prune through the
+    // per-file metadata — sound for an erase: a file with no in-range
+    // row holds no match
+    val candidates = SegmentFiles.prune(m, condBounds(m, cond).probe)
     if (candidates.isEmpty) return 0L
     // Probe: which candidate files hold a matching row (and how many).
-    // `__file` is the manifest-relative path extracted from
-    // `_metadata.file_path`; one that fails to map back to the manifest
-    // falls back to rewriting every candidate (conservative, never
-    // wrong). Rows already subtracted by a deletion vector don't count.
+    // `__file` names the file in URI form; one that fails to map back to
+    // the manifest falls back to rewriting every candidate
+    // (conservative, never wrong). Rows already subtracted by a
+    // deletion vector don't count.
     val probe = readSegmentsOver(candidates, m.schemaDdl, m.dvParts,
         keepPos = true)
       .where(cond)
@@ -3934,66 +3877,18 @@ class JournalStore private (val spark: SparkSession, val path: String,
       .collect()
     if (probe.isEmpty) return 0L
     val deleted = probe.map(_.getLong(1)).sum
-    val mapped = probe.map(_.getString(0)).map { p =>
-      Some(p).filter(m.files.contains)
-    }
+    val mapped = probe.map(r => Some(SegmentFiles.fromUri(r.getString(0)))
+      .filter(m.files.contains))
     val affected =
       if (mapped.forall(_.isDefined)) mapped.flatten.toSeq else candidates
     val keep = !coalesce(cond, lit(false))
-    val retained = readSegmentsOver(affected, m.schemaDdl, m.dvParts).where(keep)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Fresh stats for the rewritten files FIRST — same two lean passes
-    // as append() (numeric aggregate stays codegen'd; the bloom's
-    // TypedImperativeAggregate rides its own pass), over the cached
-    // retained rows. Running the stats pass before the write (round 19,
-    // like append) sizes the write shuffle to the surviving directory
-    // count. One file per (epoch, ns) directory by the same repartition
-    // argument, so the (epoch, ns)-grain rows ARE per-file.
-    val perNs = retained.groupBy(col("epoch"), col("ns").cast("string").as("ns"))
-      .agg(count(lit(1)).as("rows"), min("seq").as("mn"), max("seq").as("mx"),
-           min("ukey").as("kmn"), max("ukey").as("kmx"),
-           min(unix_micros(col("ts").cast("timestamp"))).as("tmn"),
-           max(unix_micros(col("ts").cast("timestamp"))).as("tmx"),
-           sum(when(col("ts").cast("timestamp").isNull, 1L).otherwise(0L)).as("tnull"))
-      .collect()
-    // staged write + promote, like append()/compactFiles(): private
-    // commit protocol, exact new-file set; shuffle sized to the real
-    // directory count (partitioning derived from the data)
-    val stage = newStageDir()
-    // The key-bloom pass and the fresh COLUMN sketches (cstats sidecar
-    // rows — what lets the refold below keep the merged analyze() stats
-    // alive through the erase instead of declining) are independent of
-    // the staged write: overlap them with it (guide §2.6), all three
-    // reading the cached retained rows. Same dir-count cap as append.
-    val foldCols = JournalStore.activeStatCols(m.meta)
-    val presentCols = foldCols.filter(retained.columns.contains)
-    val rTypes = retained.schema.map(f => f.name -> f.dataType).toMap
-    val ((perNsBloom, dirSk), newFiles) = overlap {
-      val bloom: Map[(Long, String), String] =
-        retained.groupBy(col("epoch"), col("ns").cast("string").as("ns"))
-          .agg(keyBloomAgg.as("kbloom"))
-          .collect().map { r =>
-            (r.getLong(0), r.getString(1)) ->
-              (if (r.isNullAt(2)) ""
-               else java.util.Base64.getEncoder.encodeToString(
-                 r.getAs[Array[Byte]](2)))
-          }.toMap
-      val sk: Map[(Long, String), JournalStore.DirSketches] =
-        if (presentCols.isEmpty ||
-            perNs.length > JournalStore.MaxSketchDirs) Map.empty
-        else dirColumnSketches(retained, presentCols, rTypes)
-      (bloom, sk)
-    } {
-      writerOpts(retained.repartition(math.max(1, perNs.length),
-          col("epoch"), col("ns"))
-        .sortWithinPartitions(col("epoch"), col("ns"), col("ukey"), col("seq"))
-        .write.partitionBy("epoch", "ns").mode("append")).parquet(stage)
-      promoteStaged(stage)
-    }
-    retained.unpersist()
-    val newF = SegmentFiles.newFileStats(newFiles, perNs, perNsBloom)
+    // the rewritten files get fresh stats, blooms and sketches from the
+    // retained rows, clustered by key
+    val w = pinned(readSegmentsOver(affected, m.schemaDdl, m.dvParts).where(keep))(
+      writeSegments(_, SegmentLayout.ByKey, JournalStore.activeStatCols(m.meta)))
+    val newFiles = w.files
     val files2 = (m.files diff affected) ++ newFiles
-    val fstats2 = m.fstats.filterNot(s => affected.contains(s.file)) ++ newF
+    val fstats2 = m.fstats.filterNot(s => affected.contains(s.file)) ++ w.fileStats
     // Epoch- and (epoch, ns)-grain stats for the touched groups are
     // re-derived from per-file stats when every remaining file in the
     // group carries them (exact: each FileStat is exact for its file),
@@ -4002,7 +3897,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // counts are a wrong-answer bug, not a precision loss.
     val fmap2 = SegmentFiles.statsByFile(fstats2)
     val touchedEpochs = (affected ++ newFiles).flatMap(epochOf).distinct
-    val touchedDirs = (affected ++ newFiles).flatMap(SegmentFiles.parse(_).dir).distinct
+    // KeyStat.ns holds the ns VALUE: key the rollup by the decoded
+    // directory, or an escaped namespace would gain a stale twin
+    val touchedDirs = (affected ++ newFiles).flatMap(SegmentFiles.parse(_).nsKey).distinct
     def scanStats(fs: Seq[String]): (Long, Long, Long) = {
       val r = readSegmentsOver(fs, m.schemaDdl, m.dvParts)
         .agg(count(lit(1)), min("seq"), max("seq")).head
@@ -4024,7 +3921,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       }
     val kstats2 = m.kstats.filterNot(k => touchedDirs.contains((k.epoch, k.ns))) ++
       touchedDirs.flatMap { case (e, n) =>
-        val fs = files2.filter(f => SegmentFiles.parse(f).dir.contains((e, n)))
+        val fs = files2.filter(f => SegmentFiles.parse(f).nsKey.contains((e, n)))
         if (fs.isEmpty) None
         else if (fs.forall(fmap2.contains)) {
           val ss = fs.map(fmap2)
@@ -4047,10 +3944,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // (computed above from the exact retained rows); the merged
     // analyze() stats refold from ALL surviving files' sketches —
     // exact-or-decline per refoldStatsMeta's contract.
-    val rewrittenSk = newF.flatMap(s =>
-      SegmentFiles.parse(s.file).dir.flatMap(dirSk.get).map(s.file -> _))
     val (meta2, cstatsParts2, cstatsEnvs2) =
-      rewriteStatsState(m, files2, fstats2, dvParts2, rewrittenSk)
+      rewriteStatsState(m, files2, fstats2, dvParts2, w.fileSketches)
     commitSeam()
     writeManifest(path, m.copy(op = "delete", files = files2, stats = stats2.sortBy(_.epoch),
       kstats = kstats2.sortBy(k => (k.epoch, k.ns)), fstats = fstats2,
@@ -4092,50 +3987,38 @@ class JournalStore private (val spark: SparkSession, val path: String,
     requireWritable()
     val m = manifest
     if (m.files.isEmpty) return 0L
-    def recoverExpr(df: org.apache.spark.sql.DataFrame)
-        : Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-      df.where(cond).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    val condExpr =
-      try recoverExpr(readSegmentsOver(Nil, m.schemaDdl))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          recoverExpr(readSegmentsOver(m.files, m.schemaDdl, m.dvParts))
-      }
-    val (nsEq, keyEq) =
-      condExpr.map(equalityConjuncts).getOrElse((None, None))
     // same seq/ts range skipping as deleteWhere: row-independent erase,
     // so a file outside the bounds can hold no doomed row
-    val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
-    val candidates = SegmentFiles.prune(m,
-      Probe.point(nsEq, keyEq).copy(seq = seqR, ts = tsR))
+    val candidates = SegmentFiles.prune(m, condBounds(m, cond).probe)
     if (candidates.isEmpty) return 0L
     // One scan finds the doomed rows' identities; already-deleted rows
     // (subtracted by an existing vector) can't match again, so repeated
     // deletes of the same predicate are no-ops and counts never double.
-    val hitRows = readSegmentsOver(candidates, m.schemaDdl, m.dvParts,
+    // Vector entries name files in URI form (`__file`); the manifest
+    // bookkeeping below uses the manifest names.
+    val hits = readSegmentsOver(candidates, m.schemaDdl, m.dvParts,
         keepPos = true)
       .where(cond)
       .select(col("__file").as("file"), col("__pos").as("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val perFile = hitRows.groupBy("file").agg(count(lit(1)).as("hits"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFile.isEmpty) { hitRows.unpersist(); return 0L }
+    val (perFile, fullDead, newPart) = pinned(hits) { hitRows =>
+      val perFile = hitRows.groupBy("file").agg(count(lit(1)).as("hits"))
+        .collect().map(r => SegmentFiles.fromUri(r.getString(0)) -> r.getLong(1)).toMap
+      // exact-stats files that lost every row leave the manifest outright
+      val fullDead = perFile.collect {
+        case (f, h) if m.fileStats.get(f).exists(_.rows == h) => f
+      }.toSeq
+      val newEntries =
+        if (fullDead.isEmpty) hitRows
+        else hitRows.where(!col("file").isin(fullDead.map(SegmentFiles.uriName): _*))
+      (perFile, fullDead,
+        if (perFile.isEmpty) None else writeDvPart(newEntries))
+    }
+    if (perFile.isEmpty) return 0L
     val deleted = perFile.values.sum
-    // exact-stats files that lost every row leave the manifest outright
-    val fullDead = perFile.collect {
-      case (f, h) if m.fileStats.get(f).exists(_.rows == h) => f
-    }.toSeq
-    val newEntries =
-      if (fullDead.isEmpty) hitRows
-      else hitRows.where(!col("file").isin(fullDead: _*))
-    val newPart = writeDvPart(newEntries)
-    hitRows.unpersist()
     val files2 = m.files diff fullDead
     val epochHits = perFile.toSeq.groupBy { case (f, _) => epochOf(f) }
       .collect { case (Some(e), xs) => e -> xs.map(_._2).sum }
-    val dirHits = perFile.toSeq.groupBy { case (f, _) => SegmentFiles.parse(f).dir }
+    val dirHits = perFile.toSeq.groupBy { case (f, _) => SegmentFiles.parse(f).nsKey }
       .collect { case (Some(d), xs) => d -> xs.map(_._2).sum }
     val fstats2 = m.fstats.filterNot(s => fullDead.contains(s.file)).map { s =>
       perFile.get(s.file).fold(s)(h => s.copy(rows = s.rows - h))
@@ -4196,7 +4079,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     if (m.dvParts.isEmpty) return 0
     val deadPerFile = readDvTable(m.dvParts).groupBy("file")
       .agg(count(lit(1)).as("dead")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+      .map(r => SegmentFiles.fromUri(r.getString(0)) -> r.getLong(1)).toMap
     val victims = m.files.filter { f =>
       deadPerFile.get(f).exists { dead =>
         val live = m.fileStats.get(f).map(_.rows).getOrElse(Long.MaxValue)
@@ -4206,6 +4089,34 @@ class JournalStore private (val spark: SparkSession, val path: String,
     }
     if (victims.nonEmpty) compactFiles(victims, SegmentLayout.ByKey)
     victims.size
+  }
+
+  /** [[JournalStore.CondBounds]] of `cond` over snapshot `m`, for deleteWhere,
+    * deleteWhereDv and updateWhere. Spark 4's Column no longer exposes
+    * its Catalyst expression; it is recovered from the ANALYZED plan of
+    * a filter over a SCHEMA-ONLY relation (attribute resolution and cast
+    * insertion need only the schema, so this never builds a file index
+    * or reads a footer). The analyzer may wrap literals in casts;
+    * equalityConjuncts folds those. A shape that can't be recovered
+    * just means no pruning — the callers' row filters stay exact. */
+  private def condBounds(m: Manifest, cond: org.apache.spark.sql.Column): CondBounds = {
+    def recover(df: DataFrame) =
+      df.where(cond).queryExecution.analyzed.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }
+    val e =
+      try recover(readSegmentsOver(Nil, m.schemaDdl))
+      catch {
+        // legacy edge: a store with no pinned DDL whose files carry
+        // evolved columns — the schema-only surface can't resolve the
+        // predicate, but the footer-inferred file relation can (and the
+        // callers' scans need exactly that resolution anyway)
+        case _: org.apache.spark.sql.AnalysisException =>
+          recover(readSegmentsOver(m.files, m.schemaDdl, m.dvParts))
+      }
+    val (ns, ukey) = e.map(equalityConjuncts).getOrElse((None, None))
+    val (seq, ts) = e.map(rangeConjuncts).getOrElse((None, None))
+    CondBounds(ns, ukey, seq, ts)
   }
 
   /** Bare column name of an attribute reference (resolved or not);
@@ -4481,29 +4392,11 @@ class JournalStore private (val spark: SparkSession, val path: String,
   private[journal] def updatePruning(m: Manifest,
       cond: Option[org.apache.spark.sql.Column])
       : (Seq[String], org.apache.spark.sql.Column) = {
-    def recoverExpr(df: org.apache.spark.sql.DataFrame,
-                    c: org.apache.spark.sql.Column)
-        : Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-      df.where(c).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    val condExpr = cond.flatMap { c =>
-      try recoverExpr(readSegmentsOver(Nil, m.schemaDdl), c)
-      catch {
-        // same legacy edge as deleteWhere: no pinned DDL but evolved
-        // columns in the files — resolve against the footer-inferred
-        // relation instead (the state scan needs that resolution anyway)
-        case _: org.apache.spark.sql.AnalysisException =>
-          recoverExpr(readSegmentsOver(m.files, m.schemaDdl, m.dvParts), c)
-      }
-    }
-    val (nsEq, keyEq) = condExpr.map(equalityConjuncts).getOrElse((None, None))
-    val keyPred = keyPredicate(nsEq, keyEq)
-    val baseCand = SegmentFiles.prune(m, Probe.point(nsEq, keyEq))
-    val (seqR, tsR) = condExpr.map(rangeConjuncts).getOrElse((None, None))
-    if (seqR.isEmpty && tsR.isEmpty) return (baseCand, keyPred)
-    val probeFiles = SegmentFiles.prune(m,
-      Probe.point(nsEq, keyEq).copy(seq = seqR, ts = tsR))
+    val b = cond.fold(CondBounds(None, None, None, None))(condBounds(m, _))
+    val keyPred = keyPredicate(b.ns, b.ukey)
+    val baseCand = SegmentFiles.prune(m, b.keys)
+    if (b.seq.isEmpty && b.ts.isEmpty) return (baseCand, keyPred)
+    val probeFiles = SegmentFiles.prune(m, b.probe)
     if (probeFiles.isEmpty) return (Nil, keyPred)
     if (probeFiles.size == baseCand.size) return (baseCand, keyPred)
     val probe = readSegmentsOver(probeFiles, m.schemaDdl, m.dvParts)
@@ -4895,7 +4788,7 @@ object JournalStore {
     * epoch micros) — the Delta/Iceberg add-file stats. File grain is
     * load-bearing for correctness of pruning, not just precision: stats
     * describe exactly one immutable file, so a file with no entry (pre-
-    * stats store, escaped ns directory) is simply never pruned, and no
+    * stats store, hot-split directory) is simply never pruned, and no
     * merged range can ever claim to cover rows it doesn't (the
     * false-negative class a batch-merged (epoch, ns) range has). Empty
     * ranges (all-null column) are encoded min > max and prune every
@@ -5022,6 +4915,31 @@ object JournalStore {
     /** Multi-column Z-curve clustering — every listed column keeps
       * row-group min/max locality (see compact(upToEpoch, zorderBy)). */
     final case class ZOrder(cols: Seq[String]) extends SegmentLayout
+  }
+
+  /** What [[JournalStore#writeSegments]] made: the promoted files (segDir-relative),
+    * the (epoch, ns)-grain stats rows of the written rows (empty when the
+    * file stats were derived), the new files' [[FileStat]]s, and the
+    * column sketch of every written directory. */
+  private[journal] final case class Written(files: Seq[String],
+      perNs: Seq[org.apache.spark.sql.Row], fileStats: Seq[FileStat],
+      dirSketches: Map[(Long, String), DirSketches]) {
+    /** The sketches of the files that record stats: a directory's sketch
+      * describes its one file (see [[SegmentFiles.newFileStats]]) when
+      * it counts that file's rows. */
+    def fileSketches: Seq[(String, DirSketches)] =
+      fileStats.flatMap(s => SegmentFiles.parse(s.file).nsKey
+        .flatMap(dirSketches.get).filter(_.rows == s.rows).map(s.file -> _))
+  }
+
+  /** The pruning handles of a row condition: its ns/ukey equality and
+    * seq/ts range conjuncts (None = unconstrained). */
+  private[journal] final case class CondBounds(ns: Option[String], ukey: Option[Long],
+      seq: Option[(Long, Long)], ts: Option[(Long, Long)]) {
+    /** Files that can hold a row of the equality keys. */
+    def keys: Probe = Probe.point(ns, ukey)
+    /** ...and a row inside the ranges too. */
+    def probe: Probe = keys.copy(seq = seq, ts = ts)
   }
 
   /** Bounded optimistic-concurrency rebases before a lost CAS race
@@ -5510,18 +5428,9 @@ object JournalStore {
     * theirs). */
   val MaxDvParts = 16
 
-  /** EXECUTOR-side deletion-vector read for the streaming source: the
-    * sorted row positions deleted from segment file `relFile`, loaded
-    * directly from the dv/ parquet parts (parquet-java — no Spark
-    * session exists on an executor). Each stream partition serves one
-    * file, so the per-partition cost is a scan of the tiny vector
-    * parts filtered to that file; part count is bounded by
-    * [[MaxDvParts]]'s consolidation. A damaged part throws — the
-    * subtraction is load-bearing for read correctness and must never
-    * silently read as empty. */
-  /** Distinct segment-file names referenced by the given dv parts —
-    * driver-side planning input for the change-feed delete tier (the
-    * parts are O(deleted rows since last purge), tiny by contract). */
+  /** Distinct segment files (manifest names) referenced by the given dv
+    * parts — driver-side planning input for the change-feed delete tier
+    * (the parts are O(deleted rows since last purge), tiny by contract). */
   private[graft] def dvFileNames(dvPaths: Seq[String]): Set[String] = {
     val out = scala.collection.mutable.HashSet.empty[String]
     dvPaths.foreach { p =>
@@ -5530,15 +5439,26 @@ object JournalStore {
           new org.apache.hadoop.fs.Path(p))
         .build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
-        out += g.getString("file", 0)
+        out += SegmentFiles.fromUri(g.getString("file", 0))
       }
       finally reader.close()
     }
     out.toSet
   }
 
+  /** EXECUTOR-side deletion-vector read for the streaming source: the
+    * sorted row positions deleted from segment file `relFile` (a
+    * manifest name; entries hold its [[SegmentFiles.uriName]]), loaded
+    * directly from the dv/ parquet parts (parquet-java — no Spark
+    * session exists on an executor). Each stream partition serves one
+    * file, so the per-partition cost is a scan of the tiny vector
+    * parts filtered to that file; part count is bounded by
+    * [[MaxDvParts]]'s consolidation. A damaged part throws — the
+    * subtraction is load-bearing for read correctness and must never
+    * silently read as empty. */
   private[graft] def dvPositionsFor(relFile: String,
                                     dvPaths: Seq[String]): Array[Long] = {
+    val name = SegmentFiles.uriName(relFile)
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
     dvPaths.foreach { p =>
       val reader = org.apache.parquet.hadoop.ParquetReader
@@ -5546,7 +5466,7 @@ object JournalStore {
           new org.apache.hadoop.fs.Path(p))
         .build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).foreach { g =>
-        if (g.getString("file", 0) == relFile) out += g.getLong("pos", 0)
+        if (g.getString("file", 0) == name) out += g.getLong("pos", 0)
       }
       finally reader.close()
     }

@@ -1,7 +1,10 @@
 package graft.journal
 
-import org.apache.spark.sql.Row
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{regexp_replace, url_decode}
 import org.apache.spark.util.sketch.BloomFilter
 
 import JournalStore.{FileStat, Manifest, MergeNsProfile}
@@ -13,7 +16,9 @@ import JournalStore.{FileStat, Manifest, MergeNsProfile}
   * record of a file's epoch and namespace. Every question of the form
   * "which files can hold these rows" is answered here, from the path
   * plus the file's manifest [[FileStat]] (rows, seq/ukey/ts ranges, key
-  * bloom).
+  * bloom). New files get their FileStats here too, and manifest names
+  * convert here to and from the URI form that `_metadata.file_path` and
+  * deletion vectors use.
   *
   * Pruning is exact-or-conservative. A file is dropped only when its
   * metadata PROVES it holds no matching row:
@@ -44,10 +49,9 @@ private[graft] object SegmentFiles {
     def mayHoldNs(ns: String): Boolean = literalNs.forall(_ == ns)
     /** (epoch, ns directory) when the path carries both. */
     def dir: Option[(Long, String)] = for (e <- epoch; n <- nsDir) yield (e, n)
-    /** (epoch, ns) when the ns directory is literal — the key under
-      * which per-directory aggregates over raw ns values may be matched
-      * to files. */
-    def literalDir: Option[(Long, String)] = for (e <- epoch; n <- literalNs) yield (e, n)
+    /** (epoch, ns value): the key of the per-namespace manifest stats
+      * and of per-directory aggregates over the rows' ns values. */
+    def nsKey: Option[(Long, String)] = for (e <- epoch; n <- nsValue) yield (e, n)
   }
 
   def parse(rel: String): SegPath =
@@ -55,6 +59,24 @@ private[graft] object SegmentFiles {
 
   def epochOf(rel: String): Option[Long] =
     EpochDir.findFirstMatchIn(rel).map(_.group(1).toLong)
+
+  /** A segment file's name as Spark's `_metadata.file_path` spells it
+    * below `segments/`: the relative path in URI form (`ns=a b` →
+    * `ns=a%20b`, `ns=x%2Fy` → `ns=x%252Fy`; a literal path is
+    * unchanged). Deletion-vector entries name files this way (they are
+    * written from `_metadata.file_path`); the manifest holds the plain
+    * relative path. */
+  def uriName(rel: String): String =
+    new java.net.URI(null, null, rel, null).getRawPath
+
+  /** The manifest name of a [[uriName]]. `+` is literal in a URI path,
+    * so it is shielded from the form decoder's `+` → space rule. */
+  def fromUri(name: String): String =
+    java.net.URLDecoder.decode(name.replace("+", "%2B"), StandardCharsets.UTF_8)
+
+  /** [[fromUri]] as a column expression, for names decoded in tasks. */
+  def fromUriCol(name: Column): Column =
+    url_decode(regexp_replace(name, "\\+", "%2B"))
 
   /** file → stats lookup (built once per manifest snapshot by
     * [[Manifest.fileStats]]). */
@@ -184,15 +206,15 @@ private[graft] object SegmentFiles {
       catch { case _: Exception => false }
     }
 
-  /** The files of `newFiles` that are the only one of `newFiles` in a
-    * literal (epoch, ns) directory, with that directory. A write that
-    * repartitions by (epoch, ns) emits one file per directory, so a
-    * per-directory aggregate over its input (keyed by the raw ns value)
-    * describes exactly that file. A directory that gained several files,
-    * or an escaped ns whose directory does not round-trip, matches no
-    * aggregate: its files record nothing (unpruned, never wrong). */
-  def soleFiles(newFiles: Seq[String]): Seq[(String, (Long, String))] = {
-    val dirs = newFiles.map(f => f -> parse(f).literalDir)
+  /** The files of `newFiles` that are the only one of `newFiles` in
+    * their (epoch, ns) directory, with that directory's (epoch, ns value)
+    * key. A write that repartitions by (epoch, ns) emits one file per
+    * directory, so a per-directory aggregate over its input (keyed by
+    * the raw ns value) describes exactly that file. A directory that
+    * gained several files (a hot-directory split) matches no aggregate:
+    * its files record nothing (unpruned, never wrong). */
+  private def soleFiles(newFiles: Seq[String]): Seq[(String, (Long, String))] = {
+    val dirs = newFiles.map(f => f -> parse(f).nsKey)
     val counts = dirs.flatMap(_._2).groupBy(identity).map { case (d, ds) => d -> ds.size }
     dirs.collect { case (f, Some(d)) if counts(d) == 1 => f -> d }
   }
@@ -212,6 +234,36 @@ private[graft] object SegmentFiles {
         if (r.isNullAt(8)) 0L else r.getLong(8),
         r.getLong(9),
         blooms.getOrElse(d, ""))
+    }
+  }
+
+  /** Per-file stats of the files a rewrite of whole (epoch, ns)
+    * directories produced, merged from the rewritten victims' stats: one
+    * new file per directory holds exactly that directory's victim rows
+    * (victim row counts are already net of deletion vectors; ranges and
+    * blooms may be wider than the survivors, which prunes
+    * conservatively). A directory with any stats-free victim records
+    * nothing: it may hold rows the merge does not describe. */
+  def derivedFileStats(newFiles: Seq[String], victims: Seq[String],
+                       stat: Map[String, FileStat]): Seq[FileStat] = {
+    val byDir = victims.groupBy(parse)
+    newFiles.flatMap { nf =>
+      byDir.get(parse(nf)) match {
+        case Some(vs) if vs.nonEmpty && vs.forall(stat.contains) =>
+          val ss = vs.map(stat)
+          val keyed = ss.filter(s => s.minKey <= s.maxKey)
+          val tsed = ss.filter(s => s.tsMin <= s.tsMax)
+          Some(FileStat(nf, ss.map(_.rows).sum,
+            ss.map(_.minSeq).min, ss.map(_.maxSeq).max,
+            if (keyed.isEmpty) 1L else keyed.map(_.minKey).min,
+            if (keyed.isEmpty) 0L else keyed.map(_.maxKey).max,
+            if (tsed.isEmpty) 1L else tsed.map(_.tsMin).min,
+            if (tsed.isEmpty) 0L else tsed.map(_.tsMax).max,
+            // unknown (< 0) in any victim poisons the merge to unknown
+            if (ss.exists(_.nullTs < 0L)) -1L else ss.map(_.nullTs).sum,
+            JournalStore.bloomUnion(ss.map(_.bloom))))
+        case _ => None
+      }
     }
   }
 }

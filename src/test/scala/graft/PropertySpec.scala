@@ -501,6 +501,113 @@ class PropertySpec extends AnyFunSuite {
     assert(r.passed, r.status.toString)
   }
 
+  test("write-side metadata is sound: after random appends (hot split " +
+      "included), deleteWhere, deleteWhereDv and compact over literal and " +
+      "escaped namespaces, every FileStat counts its file's live rows, " +
+      "its ranges and bloom cover them, and nsStats/segmentStats equal " +
+      "the data") {
+    val nss = Seq("a", "b", "a b", "x/y")
+    val rowGen = for {
+      ns <- Gen.oneOf(nss)
+      k <- Gen.choose(0L, 11L)
+      nullTs <- Gen.frequency(8 -> false, 1 -> true)
+    } yield (ns, k, nullTs)
+    // (kind, ns, key, flag): 0 append (flag = hot split), 1 deleteWhere,
+    // 2 deleteWhereDv (flag = key-only predicate), 3 compact (key = the
+    // epoch bound, flag = clustered)
+    val opGen = for {
+      kind <- Gen.frequency(3 -> 0, 2 -> 1, 2 -> 2, 1 -> 3)
+      ns <- Gen.oneOf(nss)
+      k <- Gen.choose(0L, 11L)
+      flag <- Gen.oneOf(true, false)
+      rows <- Gen.choose(3, 8).flatMap(Gen.listOfN(_, rowGen))
+    } yield (kind, ns, k, flag, rows)
+    val caseGen = for {
+      first <- Gen.choose(3, 8).flatMap(Gen.listOfN(_, rowGen))
+      ops <- Gen.listOfN(5, opGen)
+    } yield (first, ops)
+    def tsAt(i: Int) = new java.sql.Timestamp(
+      TestSpark.ts("2024-01-01 00:00:00").getTime + i * 60000L)
+    def hash(k: Long) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
+      .hash(k, org.apache.spark.sql.types.LongType, 42L)
+    val fewTrials = SCTest.Parameters.default.withMinSuccessfulTests(5)
+    val r = SCTest.check(fewTrials, Prop.forAllNoShrink(caseGen) {
+      case (first, ops) =>
+        val path = java.nio.file.Files
+          .createTempDirectory("graft_writeprop_").toString + "/s"
+        val seg = s"$path/segments"
+        val store = journal.JournalStore.create(spark, path, epochSize = 6)
+        var at = 0
+        def append(b: List[(String, Long, Boolean)], hot: Boolean): Unit = {
+          store.withMaxFileRows(
+            if (hot) 1L else journal.JournalStore.AppendWriterTargetRows)
+          store.append(b.zipWithIndex.map { case ((ns, k, nullTs), i) =>
+            (ns, k, if (nullTs) null else tsAt(at + i), s"p$k", 1.0)
+          }.toDF("ns", "ukey", "ts", "payload", "val"))
+          at += b.size
+        }
+        append(first, hot = false)
+        ops.foreach { case (kind, ns, k, flag, rows) =>
+          val cond = if (flag) col("ukey") === k
+            else col("ns") === ns && col("ukey") <= k
+          kind match {
+            case 0 => append(rows, flag)
+            case 1 => store.deleteWhere(cond)
+            case 2 => store.deleteWhereDv(cond)
+            case _ => store.compact(k % 4, clusterByKey = flag)
+          }
+        }
+        val m = store.manifest
+        // ground truth: every raw row with its file (the manifest name,
+        // decoded from the file_path URI) and its vector key (the URI
+        // form deletion vectors record), minus the vector-deleted rows
+        val raw = spark.read
+          .schema("seq BIGINT, ukey BIGINT, ts TIMESTAMP, epoch BIGINT, ns STRING")
+          .option("basePath", seg).parquet(m.files.map(f => s"$seg/$f"): _*)
+          .select(col("_metadata.file_path"), col("_metadata.row_index"),
+            col("ns"), col("ukey"), col("seq"), col("epoch"),
+            unix_micros(col("ts")))
+          .collect().toSeq
+        val dead = if (m.dvParts.isEmpty) Set.empty[(String, Long)]
+          else spark.read.parquet(m.dvParts.map(p => s"$path/dv/$p"): _*)
+            .select("file", "pos").as[(String, Long)].collect().toSet
+        case class Live(file: String, ns: String, ukey: Long, seq: Long,
+                        epoch: Long, ts: Option[Long])
+        val live = raw.filterNot(r => dead.contains(
+            (r.getString(0).split("/segments/").last, r.getLong(1))))
+          .map(r => Live(new java.net.URI(r.getString(0)).getPath
+              .split("/segments/").last, r.getString(2), r.getLong(3),
+            r.getLong(4), r.getLong(5),
+            if (r.isNullAt(6)) None else Some(r.getLong(6))))
+        val byFile = live.groupBy(_.file)
+        val fileOk = m.fstats.forall { s =>
+          val rs = byFile.getOrElse(s.file, Nil)
+          lazy val bloom = Option(s.bloom).filter(_.nonEmpty).map(b =>
+            org.apache.spark.util.sketch.BloomFilter.readFrom(
+              new java.io.ByteArrayInputStream(
+                java.util.Base64.getDecoder.decode(b))))
+          val ok = m.files.contains(s.file) && rs.size.toLong == s.rows &&
+            rs.forall(r => s.minSeq <= r.seq && r.seq <= s.maxSeq &&
+              s.minKey <= r.ukey && r.ukey <= s.maxKey &&
+              r.ts.forall(t => s.tsMin <= t && t <= s.tsMax) &&
+              bloom.forall(_.mightContainLong(hash(r.ukey))))
+          if (!ok) println(s"[write-soundness] $s vs ${rs.size} live rows")
+          ok
+        }
+        val nsGot = store.nsStats().as[(String, Long, Long)].collect().toSet
+        val nsWant = live.groupBy(_.ns).map { case (n, rs) =>
+          (n, rs.size.toLong, rs.map(_.epoch).distinct.size.toLong) }.toSet
+        val epGot = store.segmentStats().select("epoch", "n_rows")
+          .as[(Long, Long)].collect().toSet
+        val epWant = live.groupBy(_.epoch)
+          .map { case (e, rs) => (e, rs.size.toLong) }.toSet
+        if (nsGot != nsWant) println(s"[write-soundness] nsStats $nsGot vs $nsWant")
+        if (epGot != epWant) println(s"[write-soundness] segmentStats $epGot vs $epWant")
+        fileOk && nsGot == nsWant && epGot == epWant
+    })
+    assert(r.passed, r.status.toString)
+  }
+
   test("set ops agree with Scala set algebra") {
     check(Prop.forAll(Gen.listOf(Gen.choose(0, 20)), Gen.listOf(Gen.choose(0, 20))) {
       (xs, ys) =>

@@ -2304,4 +2304,94 @@ class JournalStoreSpec extends AnyFunSuite {
     }
     assert(store.latest().count() === 3000L)
   }
+
+  test("escaped namespaces: deletes, vectors, cstats, purge, stream and " +
+      "change feed name files as the manifest does") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_escns_").toString
+    val path = s"$dir/store"
+    val store = JournalStore.create(spark, path, epochSize = 100)
+    val nss = Seq("lit", "a b", "x/y")
+    def rows(ks: Long*) = (for (n <- nss; k <- ks) yield
+      (n, k, ts(f"2024-01-01 10:00:$k%02d"), s"$n-$k", 1.0))
+      .toDF("ns", "ukey", "ts", "payload", "val")
+    store.append(rows(1L, 2L))
+    store.append(rows(3L, 4L)) // two files per namespace directory
+    def counts = store.nsStats().select("ns", "n_rows")
+      .as[(String, Long)].collect().toMap
+    def live = store.scan().groupBy("ns").count()
+      .as[(String, Long)].collect().toMap
+    // the erase opens the escaped-ns candidates but rewrites only the
+    // one file that holds the key
+    val m0 = store.manifest
+    assert(store.deleteWhere(col("ns") === "a b" && col("ukey") === 1L) === 1L)
+    val gone = m0.files diff store.manifest.files
+    assert(gone.size === 1 && gone.head.contains("ns=a b/"), gone)
+    // per-namespace stats stay keyed by the ns value, never its directory
+    assert(store.deleteWhere(col("ns") === "x/y" && col("ukey") === 1L) === 1L)
+    assert(counts === Map("lit" -> 4L, "a b" -> 3L, "x/y" -> 3L))
+    assert(counts === live)
+    // vector entries map back to manifest files and decrement the
+    // escaped namespaces' counts
+    val v0 = store.versions().last
+    assert(store.deleteWhereDv(col("ukey") === 4L && col("ns") =!= "lit") === 2L)
+    val m1 = store.manifest
+    val dvFiles = JournalStore.dvFileNames(m1.dvParts.map(p => s"$path/dv/$p"))
+    assert(dvFiles.size === 2 && dvFiles.subsetOf(m1.files.toSet), dvFiles)
+    assert(counts === Map("lit" -> 4L, "a b" -> 2L, "x/y" -> 2L))
+    assert(counts === live)
+    // the change feed names the vectored rows as deletes
+    val cf = store.changes(v0, store.versions().last)
+      .select("_change_type", "ns", "ukey").as[(String, String, Long)]
+      .collect().toSet
+    assert(cf === Set(("delete", "a b", 4L), ("delete", "x/y", 4L)))
+    // a stream over the store subtracts the vectors like the batch scan
+    val q = spark.readStream.format("journal").load(path)
+      .writeStream.format("memory").queryName("escns").outputMode("append")
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    def keysOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("ns", "ukey").as[(String, Long)].collect().toSet
+    assert(keysOf(spark.table("escns")) === keysOf(store.scan()))
+    assert(!keysOf(spark.table("escns")).contains(("a b", 4L)))
+    // per-file column sketches name manifest files
+    store.analyze()
+    val m2 = store.manifest
+    val sketched = ColumnStatsSidecar.readAll(path, m2.cstatsParts).keySet.map(_._1)
+    assert(sketched === m2.files.toSet)
+    // the purge finds the escaped files' dead fractions and rewrites them
+    val before = keysOf(store.scan())
+    assert(store.purgeDeletes(0.01) === 2)
+    assert(store.manifest.dvParts.isEmpty)
+    assert(keysOf(store.scan()) === before)
+    assert(counts === live)
+  }
+
+  test("a failed commit releases the frames append, deleteWhere and " +
+      "compact pinned") {
+    val store = JournalStore.create(spark, freshPath, epochSize = 1000)
+    def batch(from: Long) = (from until from + 40).map(i =>
+      (if (i % 2 == 0) "a" else "b", i, ts("2024-01-01 00:00:00"), s"p$i", 1.0))
+      .toDF("ns", "ukey", "ts", "payload", "val")
+    store.append(batch(0L))
+    store.analyze() // live stats: every op below pins its input
+    val sc = spark.sparkContext
+    def held = sc.getRDDStorageInfo.map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val ops: Seq[(String, () => Any)] = Seq(
+      "append" -> (() => store.append(batch(100L))),
+      "deleteWhere" -> (() => store.deleteWhere(col("ukey") === 3L)),
+      "compact" -> (() => store.compact(Long.MaxValue)))
+    for ((name, op) <- ops) {
+      val before = held
+      val pinnedBefore = sc.getPersistentRDDs.keySet
+      store.onCommitSeam = () => throw new IllegalStateException(s"$name: injected")
+      val ex = intercept[IllegalStateException](op())
+      assert(ex.getMessage === s"$name: injected")
+      val after = held
+      assert(after.keySet.subsetOf(before.keySet),
+        s"$name left persisted: ${after -- before.keySet}")
+      assert(sc.getPersistentRDDs.keySet.subsetOf(pinnedBefore),
+        s"$name left registered: ${sc.getPersistentRDDs.keySet -- pinnedBefore}")
+    }
+    assert(store.latest().count() === 40L) // nothing became visible
+  }
 }

@@ -73,6 +73,10 @@ object DevOne {
     spark
   }
 
+  /** JVM system threads the driver sampler skips. */
+  private val jvmThreads =
+    Set("Reference Handler", "Finalizer", "Signal Dispatcher", "Common-Cleaner")
+
   private final case class Job(id: Int, desc: String, start: Long,
                                var end: Long = 0L, var tasks: Int = 0,
                                var shufRead: Long = 0L, var shufWrite: Long = 0L)
@@ -86,19 +90,22 @@ object DevOne {
     // (and their shuffle bytes) attribute to the job that OWNS the
     // stage, not "the newest unfinished job" — concurrent jobs
     // (broadcast builds, AQE stage materialization) would misattribute.
-    // The job label falls back to the RESULT stage's callsite — the
-    // job's highest stage id, since the scheduler creates parent stages
-    // first. Entries leave the map when their job ends.
+    // The job label is its callsite, falling back to the RESULT stage's
+    // — the job's highest stage id, since the scheduler creates parent
+    // stages first — led by its description when set (store ops tag
+    // theirs `journal:<op>`). Entries leave the map when their job ends.
     val stageJob = mutable.HashMap.empty[Int, Int]
     val active = new java.util.concurrent.atomic.AtomicBoolean(false)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (active.get) {
-          val d = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short")))
+          def prop(k: String) =
+            Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+          val site = prop("callSite.short")
             .orElse(e.stageInfos.maxByOption(_.stageId)
               .map(_.name.takeWhile(_ != '\n')))
             .getOrElse("?")
+          val d = prop("spark.job.description").fold(site)(t => s"$t  $site")
           jobs.synchronized {
             jobs(e.jobId) = Job(e.jobId, d, e.time)
             e.stageIds.foreach(sid => stageJob(sid) = e.jobId)
@@ -123,8 +130,9 @@ object DevOne {
     run() // warm-up pass (JIT, codegen cache, parquet footers)
     // Sample EVERY runnable driver-side thread during the timed pass
     // (the main thread parks while actions run on Spark's SQL execution
-    // pool). Executor task threads are excluded so the profile stays the
-    // DRIVER's: planning, commit protocol, sidecar IO, filesystem forks.
+    // pool). Executor task threads and the JVM's own housekeeping threads
+    // are excluded so the profile stays the DRIVER's: planning, commit
+    // protocol, sidecar IO, filesystem forks.
     val samples = mutable.HashMap.empty[String, Int].withDefaultValue(0)
     val sampling = new java.util.concurrent.atomic.AtomicBoolean(true)
     val sampler = new Thread(() => {
@@ -132,7 +140,7 @@ object DevOne {
         Thread.getAllStackTraces.forEach { (t, st) =>
           val n = t.getName
           val busy = t.getState == Thread.State.RUNNABLE &&
-            !n.startsWith("Executor task launch") &&
+            !n.startsWith("Executor task launch") && !jvmThreads(n) &&
             !n.contains("netty") && !n.contains("dispatcher") &&
             !n.contains("shuffle") && n != "profile-sampler" &&
             st.nonEmpty &&

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import SegmentFiles.{Probe, epochOf}
@@ -435,8 +435,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     requireWritable()
     if (changes.isEmpty) return
     val canonical = Set("seq", "ns", "ukey", "ts", "payload", "val", "epoch")
-    retryOnLostRace {
-      val m = manifest
+    commitLoop("alter") { m =>
       var st: Option[org.apache.spark.sql.types.StructType] =
         if (m.schemaDdl.isEmpty) None
         else Some(org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
@@ -520,11 +519,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
       // version: an unconditional bump would make IF EXISTS
       // non-idempotent at the history grain.
       if (newDdl != m.schemaDdl || dropped != m.droppedCols ||
-          meta != m.meta) {
-        commitSeam()
-        writeManifest(path, m.copy(op = op, schemaDdl = newDdl,
-          droppedCols = dropped, meta = meta))
-      }
+          meta != m.meta)
+        cas(m.copy(op = op, schemaDdl = newDdl, droppedCols = dropped,
+          meta = meta))
     }
   }
 
@@ -549,11 +546,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
   def setMeta(kvs: Map[String, String]): Unit = {
     requireWritable()
     kvs.foreach { case (k, v) => JournalStore.validateProperty(k, v) }
-    retryOnLostRace {
-      val m = manifest
-      commitSeam()
-      writeManifest(path, m.copy(op = "set-meta", meta = m.meta ++ kvs))
-    }
+    commitLoop("set-meta")(m => cas(m.copy(op = "set-meta", meta = m.meta ++ kvs)))
   }
 
   /** Remove table properties — TBLPROPERTIES UNSET. Unknown keys are a
@@ -561,10 +554,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * not a read). */
   def unsetMeta(keys: Seq[String]): Unit = {
     requireWritable()
-    retryOnLostRace {
-      val m = manifest
-      writeManifest(path, m.copy(op = "unset-meta", meta = m.meta -- keys))
-    }
+    commitLoop("unset-meta")(m => cas(m.copy(op = "unset-meta", meta = m.meta -- keys)))
   }
 
   /** ANALYZE TABLE — per-column statistics over the current log surface
@@ -611,7 +601,10 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * never a mix). */
   def analyze(columns: Seq[String] = Nil): Unit = {
     requireWritable()
-    val m0 = manifest
+    commitLoop("analyze")(analyzeOnce(_, columns))
+  }
+
+  private def analyzeOnce(m0: Manifest, columns: Seq[String]): Unit = {
     require(m0.files.nonEmpty,
       "analyze: the store has no committed data files yet (nothing to " +
         "measure; stats on an empty store would pin rows=0 and then be " +
@@ -746,25 +739,21 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // store has (this was the last files-proportional driver seam in
     // the stats lifecycle; parts are sized to the 64k-row flush bound
     // so each stays LRU-cacheable for the scan pruner).
-    retryOnLostRace {
-      val m = manifest
-      val stale = m.meta.keys.filter(k => k == JournalStore.StatsRowsKey ||
-        k == JournalStore.StatsHistRowsKey ||
-        k.startsWith(JournalStore.StatsColPrefix))
-      commitSeam()
-      writeManifest(path, m.copy(op = "analyze",
-        // the NTZ-exactness marker certifies that EVERY sidecar row in
-        // this family captured TIMESTAMP_NTZ extrema as raw physical
-        // micros (NtzMicros — session-zone-independent). analyze()
-        // replaces the whole family, so stamping here covers the
-        // lineage: later appends extend it with the same tsMicrosCol
-        // arithmetic. A marker-less store (analyzed by an older build,
-        // possibly under a non-UTC zone whose DST gaps could shift NTZ
-        // wall times) DECLINES NTZ file skipping until re-analyzed.
-        meta = m.meta -- stale ++ fresh +
-          (JournalStore.StatsNtzExactKey -> "1"),
-        cstatsParts = csParts.map(_._1), cstatsEnvs = csParts.toMap))
-    }
+    val stale = m0.meta.keys.filter(k => k == JournalStore.StatsRowsKey ||
+      k == JournalStore.StatsHistRowsKey ||
+      k.startsWith(JournalStore.StatsColPrefix))
+    cas(m0.copy(op = "analyze",
+      // the NTZ-exactness marker certifies that EVERY sidecar row in
+      // this family captured TIMESTAMP_NTZ extrema as raw physical
+      // micros (NtzMicros — session-zone-independent). analyze()
+      // replaces the whole family, so stamping here covers the
+      // lineage: later appends extend it with the same tsMicrosCol
+      // arithmetic. A marker-less store (analyzed by an older build,
+      // possibly under a non-UTC zone whose DST gaps could shift NTZ
+      // wall times) DECLINES NTZ file skipping until re-analyzed.
+      meta = m0.meta -- stale ++ fresh +
+        (JournalStore.StatsNtzExactKey -> "1"),
+      cstatsParts = csParts.map(_._1), cstatsEnvs = csParts.toMap))
   }
 
   /** INCREMENTAL ANALYZE — the append-time maintenance that keeps
@@ -1749,26 +1738,29 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * the counter backwards. */
   def syncIdentity(column: String): Unit = {
     requireWritable()
-    val spec = identityColumns.getOrElse(column,
-      throw new IllegalArgumentException(
-        s"no identity column '$column' (identity columns: " +
-          s"${identityColumns.keys.toSeq.sorted.mkString(", ")})"))
-    val mx = scanUnordered().agg(max(col(column))).collect()(0)
-    if (!mx.isNullAt(0)) {
-      val maxVal = mx.getLong(0)
-      // smallest used' with start + used'·step > maxVal (step may be
-      // negative: "past" means beyond in the step's direction)
-      val usedPast =
-        if (spec.step > 0) math.max(0L,
-          Math.floorDiv(maxVal - spec.start, spec.step) + 1L)
-        else math.max(0L,
-          Math.floorDiv(spec.start - maxVal, -spec.step) + 1L)
-      if (usedPast > spec.used) retryOnLostRace {
-        val m = manifest
-        commitSeam()
-        writeManifest(path, m.copy(op = "sync-identity",
-          meta = m.meta + ((JournalStore.IdentityPrefix + column) ->
-            JournalStore.packIdentity(spec.copy(used = usedPast)))))
+    val key = JournalStore.IdentityPrefix + column
+    commitLoop("sync-identity") { m =>
+      // the counter and the column maximum come from the attempt's own
+      // snapshot: a commit that advanced the counter after an earlier
+      // snapshot is never written over with a smaller value
+      val spec = m.meta.get(key).map(JournalStore.parseIdentity).getOrElse(
+        throw new IllegalArgumentException(
+          s"no identity column '$column' (identity columns: " +
+            s"${identityColumns.keys.toSeq.sorted.mkString(", ")})"))
+      val mx = readSegmentsOver(m.files, m.schemaDdl, m.dvParts)
+        .agg(max(col(column))).collect()(0)
+      if (!mx.isNullAt(0)) {
+        val maxVal = mx.getLong(0)
+        // smallest used' with start + used'·step > maxVal (step may be
+        // negative: "past" means beyond in the step's direction)
+        val usedPast =
+          if (spec.step > 0) math.max(0L,
+            Math.floorDiv(maxVal - spec.start, spec.step) + 1L)
+          else math.max(0L,
+            Math.floorDiv(spec.start - maxVal, -spec.step) + 1L)
+        if (usedPast > spec.used)
+          cas(m.copy(op = "sync-identity", meta = m.meta +
+            (key -> JournalStore.packIdentity(spec.copy(used = usedPast)))))
       }
     }
   }
@@ -1967,13 +1959,12 @@ class JournalStore private (val spark: SparkSession, val path: String,
           s"${target.maxSeq}: any RUNNING stream whose committed offset " +
           "exceeds the new maxSeq will silently skip re-appended rows — " +
           "restart those streams with a fresh checkpoint")
-    commitSeam()
     // restore deliberately does NOT retry a lost CAS: the concurrent
     // commit changed the very state the caller asked to roll back over,
     // and silently discarding it (which a blind re-run would do) is the
     // one outcome the conflict matrix must never produce. Abort with
     // the decision returned to the caller.
-    try writeManifest(path, target.copy(op = "restore", version = cur.version))
+    try cas(target.copy(op = "restore", version = cur.version))
     catch { case _: java.util.ConcurrentModificationException =>
       throw new java.util.ConcurrentModificationException(
         s"journal restore at $path lost the commit race: a concurrent " +
@@ -2017,41 +2008,62 @@ class JournalStore private (val spark: SparkSession, val path: String,
         s"${pinnedVersion.get}; open the store without a version to write")
 
   /** Test seam: fired ONCE, right before the next commit CAS this
-    * handle attempts (append / deleteWhere / deleteWhereDv / compact).
-    * Lets a spec inject a concurrent writer's commit deterministically
-    * between an operation's manifest snapshot and its own commit —
-    * the writer-conflict matrix is untestable by timing alone. No-op
-    * in production. */
+    * handle attempts ([[cas]], so every op that commits). Lets a spec
+    * inject a concurrent writer's commit deterministically between an
+    * operation's manifest snapshot and its own commit — the
+    * writer-conflict matrix is untestable by timing alone. No-op in
+    * production. */
   private[journal] var onCommitSeam: () => Unit = () => ()
-  private def commitSeam(): Unit = {
-    val h = onCommitSeam
+
+  /** The one commit CAS: fire the test seam, then publish `next` — valid
+    * only while the store is still at the version `next` was derived
+    * from (ConcurrentModificationException otherwise, before anything
+    * became visible). */
+  private def cas(next: Manifest): Unit = {
+    val seam = onCommitSeam
     onCommitSeam = () => ()
-    h()
+    seam()
+    writeManifest(path, next)
   }
 
-  /** The writer-conflict contract for MAINTENANCE ops (the Delta
-    * conflict-matrix idea, collapsed to one rule): an operation that
-    * loses the manifest CAS re-derives itself COMPLETELY against the
-    * fresh manifest — deleteWhere re-probes candidates, compact
-    * re-filters victims to still-live files — so the retry's commit
-    * describes the real current state (semantic re-validation, not a
-    * blind file-list rebase). Rows can neither be lost (the loser's
-    * output was never referenced; vacuum sweeps its orphans) nor
-    * resurrected (each attempt reads the then-current snapshot).
-    * Bounded like append's loop; a persistently hot store escapes with
-    * the original error. restore() deliberately does NOT retry — see
-    * its catch site. */
-  private def retryOnLostRace[A](body: => A): A = {
-    var attempt = 0
+  /** The one commit loop — the writer-conflict contract of every op
+    * (the Delta conflict-matrix idea, collapsed to one rule). Each
+    * attempt gets ONE manifest snapshot, derives everything it commits
+    * from it and lands the next manifest through [[cas]]. An attempt
+    * that loses the race re-runs COMPLETELY against a fresh snapshot —
+    * appends re-assign seqs above the winner, deleteWhere re-probes
+    * candidates, compact re-filters victims, merge and updateWhere
+    * re-derive their state join — so a commit always describes the
+    * state it lands on (semantic re-validation, not a blind file-list
+    * rebase). Rows can neither be lost (the loser's output was never
+    * referenced; vacuum sweeps its orphans) nor resurrected. Bounded at
+    * [[JournalStore.MaxCommitRetries]] rebases with a linear backoff,
+    * staggered by store path so lock-stepped writers de-synchronize
+    * without an RNG; a persistently hot store escapes with the CME.
+    * restore() alone calls [[cas]] without this loop (see there).
+    *
+    * Every Spark job the op starts carries `journal:<op>` as its job
+    * description; the caller's description is restored afterwards. */
+  private def commitLoop[A](op: String)(attempt: Manifest => A): A = tagged(op) {
+    var retries = 0
     while (true) {
-      try return body
+      try return attempt(manifest)
       catch { case e: java.util.ConcurrentModificationException =>
-        attempt += 1
-        if (attempt > JournalStore.MaxCommitRetries) throw e
-        Thread.sleep(25L * attempt + math.abs(path.hashCode % 17))
+        retries += 1
+        if (retries > JournalStore.MaxCommitRetries) throw e
+        Thread.sleep(25L * retries + math.abs(path.hashCode % 17))
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Run `body` with `journal:<op>` as the Spark job description (jobs
+    * on threads it starts inherit it), restoring the caller's value. */
+  private def tagged[A](op: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"journal:$op")
+    try body finally sc.setJobDescription(prev)
   }
 
   /** Append a batch. `df` columns: (ns, ukey, ts, payload, val). Seqs are
@@ -2076,10 +2088,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * [[JournalStore.MaxCommitRetries]] rebases, then the CME escapes
     * loudly (a genuinely hot multi-writer store needs coordination this
     * embedded store doesn't provide). This is what lets two streaming
-    * sinks share one store; REWRITE ops (compact/deleteWhere) handle a
-    * lost race by re-deriving the whole operation against the fresh
-    * manifest (see retryOnLostRace — semantic re-validation, not a
-    * file-list rebase), and restore() aborts loudly on purpose. Note
+    * sinks share one store; every other op re-derives itself against
+    * the fresh manifest the same way ([[commitLoop]]), and restore()
+    * aborts loudly on purpose. Note
     * exactly-once batch dedup is per-store, not per-sink: two sinks
     * sharing a store must feed disjoint batch-id spaces (each sink's
     * checkpoint dir does this). */
@@ -2093,18 +2104,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * single-writer mark (`lastBatchId`). */
   def append(df: DataFrame, streamBatchId: Option[Long],
              writerId: String): Long = {
-    var attempt = 0
-    while (true) {
-      try return appendOnce(df, streamBatchId, writerId)
-      catch { case e: java.util.ConcurrentModificationException =>
-        attempt += 1
-        if (attempt > JournalStore.MaxCommitRetries) throw e
-        // linear backoff, deterministically staggered by identity so two
-        // lock-stepped writers de-synchronize without an RNG
-        Thread.sleep(25L * attempt + math.abs(path.hashCode % 17))
-      }
-    }
-    -1L // unreachable
+    requireWritable()
+    commitLoop("append")(appendOnce(_, df, streamBatchId, writerId))
   }
 
   /** `internalRewrite` marks a STATE re-append (updateWhere's rewritten
@@ -2118,15 +2119,13 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * the row before the assignment). NULL identity cells still generate
     * (a merge delta's insert route arrives NULL), and user-facing
     * appends keep both guards. */
-  private def appendOnce(df0: DataFrame, streamBatchId: Option[Long],
-                         writerId: String,
+  private def appendOnce(m: Manifest, df0: DataFrame,
+                         streamBatchId: Option[Long], writerId: String,
                          internalRewrite: Boolean = false): Long = {
-    requireWritable()
-    val m0 = manifest
     val replayMark =
-      if (writerId.isEmpty) m0.lastBatchId
-      else m0.writerMarks.getOrElse(writerId, -1L)
-    if (streamBatchId.exists(_ <= replayMark)) return m0.maxSeq
+      if (writerId.isEmpty) m.lastBatchId
+      else m.writerMarks.getOrElse(writerId, -1L)
+    if (streamBatchId.exists(_ <= replayMark)) return m.maxSeq
     val required = Seq("ns", "ukey", "ts", "payload", "val")
     val missing = required.filterNot(df0.columns.contains)
     require(missing.isEmpty,
@@ -2136,8 +2135,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // conflicting type here would defer the failure to an arbitrary later
     // read through the pinned manifest schema (or silently coerce).
     // Schema evolution ADDS columns; it never retypes one.
-    val df1 = if (m0.schemaDdl.isEmpty) df0 else {
-      val prev = org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
+    val df1 = if (m.schemaDdl.isEmpty) df0 else {
+      val prev = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
         .map(f => f.name -> f.dataType).toMap
       // timestamp FLAVOR differences (LTZ ↔ NTZ) are normalized to the
       // pinned flavor instead of refused: a catalog-declared TIMESTAMP
@@ -2170,7 +2169,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // name) — refuse until a full compact() physically forgets them.
     // See dropColumn's doc.
     val readd = df0.columns.filter(c =>
-      m0.droppedCols.exists(_.equalsIgnoreCase(c)))
+      m.droppedCols.exists(_.equalsIgnoreCase(c)))
     require(readd.isEmpty,
       s"journal append: column(s) ${readd.mkString(", ")} were DROPPED and " +
         "their pre-drop bytes still live in un-compacted segment files — " +
@@ -2186,13 +2185,13 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // written with (Delta's write-time default semantics). Runs before
     // constraint checks so constraints see the final row values.
     val ddlCols: Map[String, org.apache.spark.sql.types.DataType] =
-      if (m0.schemaDdl.isEmpty) Map.empty
-      else org.apache.spark.sql.types.StructType.fromDDL(m0.schemaDdl)
+      if (m.schemaDdl.isEmpty) Map.empty
+      else org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
         .map(f => f.name -> f.dataType).toMap
     // IDENTITY columns (GENERATED { ALWAYS | BY DEFAULT } AS IDENTITY):
     // values are assigned below as a pure projection off the batch's
     // deterministic seqs; ALWAYS refuses explicit values up front
-    val idSpecs = m0.meta.collect {
+    val idSpecs = m.meta.collect {
       case (k, v) if k.startsWith(JournalStore.IdentityPrefix) =>
         (k.stripPrefix(JournalStore.IdentityPrefix),
           JournalStore.parseIdentity(v))
@@ -2218,7 +2217,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       c -> hasNull
     }.toMap
     val df = {
-      val defaulted = m0.meta.collect {
+      val defaulted = m.meta.collect {
         case (k, v) if k.startsWith(JournalStore.DefaultPrefix) =>
           (k.stripPrefix(JournalStore.DefaultPrefix), v)
       }.foldLeft(df1) { case (acc, (c, sqlTxt)) =>
@@ -2234,7 +2233,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       // expression rejects the batch — Delta's rule). Runs after the
       // defaults fill so a generation expression may reference a
       // defaulted column.
-      m0.meta.collect {
+      m.meta.collect {
         case (k, v) if k.startsWith(JournalStore.GeneratedPrefix) =>
           (k.stripPrefix(JournalStore.GeneratedPrefix), v)
       }.foldLeft(defaulted) { case (acc, (c, genSql)) =>
@@ -2254,7 +2253,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // expression — checked like constraints: one codegen'd pass, first
     // violation rejects atomically before any byte lands (internal
     // rewrites recompute above, so there is nothing to validate)
-    if (!internalRewrite) m0.meta.collect {
+    if (!internalRewrite) m.meta.collect {
       case (k, v) if k.startsWith(JournalStore.GeneratedPrefix) &&
         df0.columns.contains(k.stripPrefix(JournalStore.GeneratedPrefix)) =>
         (k.stripPrefix(JournalStore.GeneratedPrefix), v)
@@ -2271,7 +2270,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // codegen'd) and the first violating row rejects the whole batch —
     // BEFORE the stage write, so the failed append leaves zero bytes
     // behind. merge() enforces for free (it commits through here).
-    val activeCons = m0.meta.collect {
+    val activeCons = m.meta.collect {
       case (k, v) if k.startsWith(ConstraintPrefix) =>
         (k.stripPrefix(ConstraintPrefix), v)
     }.toSeq.sortBy(_._1)
@@ -2289,7 +2288,6 @@ class JournalStore private (val spark: SparkSession, val path: String,
               "(nothing became visible)")
         }
     }
-    val m = m0
     // The batch feeds up to three passes (segment write, stats agg, and —
     // on epoch rollover — the checkpoint union), plus TWO more sketch
     // passes on stores with live mergeable ANALYZE stats. Persist when
@@ -2301,7 +2299,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // two extra re-scans — the extra scans win THERE, and we accept
     // them explicitly; with the sketch passes the scan count doubles
     // and the cache wins, so analyzed stores persist.
-    val statsLive = m0.meta.contains(JournalStore.StatsRowsKey)
+    val statsLive = m.meta.contains(JournalStore.StatsRowsKey)
     val hasSeq = df.columns.contains("seq")
     val withSeq = if (hasSeq) df else assignSeqs(df, m.maxSeq)
     val out0 = withSeq.withColumn("epoch", expr(s"seq div $epochSize"))
@@ -2322,7 +2320,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       else if (idNeedsFill(c)) acc.withColumn(c, coalesce(col(c), v))
       else acc
     }
-    val foldCols = JournalStore.activeStatCols(m0.meta)
+    val foldCols = JournalStore.activeStatCols(m.meta)
     val newMax = pinned(out1, !hasSeq || statsLive) { out =>
       // ns is the store's STRUCTURAL partition key — a NULL value has no
       // directory identity (the writer drops it in the escape-prone
@@ -2432,10 +2430,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
           val delta = writeCstatsDelta(csRows)
           (m.cstatsParts :+ delta._1, m.cstatsEnvs + delta)
         }
-      commitSeam()
       // a lost commit race leaves nothing visible; the pin is released
-      // before the retry wrapper re-runs the attempt
-      writeManifest(path, m.copy(op = "append", maxSeq = newMax,
+      // before the commit loop re-runs the attempt
+      cas(m.copy(op = "append", maxSeq = newMax,
         files = files2, cstatsParts = cstatsParts2, cstatsEnvs = cstatsEnvs2,
         stats = stats2, kstats = kstats2,
         fstats = FileStatsSidecar.appended(m.fstats, w.fileStats),
@@ -2925,16 +2922,16 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * into one file per directory. Backs both the epoch-bounded public
     * compact() and the append-time auto-compaction policy. */
   private def compactFiles(victimFiles: Seq[String],
-                           layout: SegmentLayout): Unit =
-    retryOnLostRace(compactFilesOnce(victimFiles, layout))
+                           layout: SegmentLayout): Unit = {
+    requireWritable()
+    commitLoop("compact")(compactFilesOnce(_, victimFiles, layout))
+  }
 
   /** A retry re-filters the victims against the FRESH manifest: files a
     * concurrent deleteWhere rewrote (new names) simply drop out of this
     * round's victim set — no lost rows, no double-compaction. */
-  private def compactFilesOnce(victimFiles: Seq[String],
+  private def compactFilesOnce(m: Manifest, victimFiles: Seq[String],
                                layout: SegmentLayout): Unit = {
-    requireWritable()
-    val m = manifest
     val old = victimFiles.filter(m.files.contains)
     if (old.isEmpty) return
     // Stats-maintaining compact re-sketches the rewritten files from
@@ -2984,8 +2981,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
               (JournalStore.StatsColPrefix + c + ".hist") ->
                 (bs.mkString(",") + "|" + ns2.mkString(",")) }
         }
-      commitSeam()
-      writeManifest(path, m.copy(op = "compact", files = files2,
+      cas(m.copy(op = "compact", files = files2,
         fstats = fstats2, meta = meta3, cstatsParts = cstatsParts2,
         cstatsEnvs = cstatsEnvs2,
         // vectors over the victims are now physically applied — drop them
@@ -3245,7 +3241,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
               Option[org.apache.spark.sql.Column] = None,
             whenMatchedUpdateValues:
               Seq[(org.apache.spark.sql.Column, String)] = Nil,
-            stateNeedsTsVal: Boolean = false): Long = {
+            stateNeedsTsVal: Boolean = false): Long = tagged("merge") {
     requireWritable()
     val required = Seq("ns", "ukey", "ts", "payload", "val")
     val missing = required.filterNot(source.columns.contains)
@@ -3290,299 +3286,93 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val carriers = source.columns
       .filter(_.startsWith(JournalStore.MergeCarrierPrefix)).toSeq
     val src0 = source.select((required ++ extras ++ carriers).map(col): _*)
-    // PIN FIRST, PROBE FROM THE PIN (round 20): the source is
-    // localCheckpoint'd once and the small/large dispatch probe reads
-    // the pinned blocks. The former take-then-maybe-pin order evaluated
-    // the source plan TWICE on the large path (take's full upstream
-    // pass, then the checkpoint's own) and let a non-deterministic
-    // source hand the probe a DIFFERENT snapshot than the one the merge
-    // later joined — pin-first removes both: one evaluation, one
-    // snapshot, for every path. Small sources pay the same single
-    // evaluation they paid under take (its upstream ran fully through
-    // any aggregation/dedup anyway) plus a trivial read of pinned
-    // blocks; the probe still runs ONCE, outside the conflict-retry
-    // loop, so CAS-loss re-derivations keep seeing the same rows.
-    // CONFLICT RULE (the deleteWhere precedent, not append's blind
-    // rebase): a merge that loses the manifest CAS re-derives the WHOLE
-    // state join against the fresh manifest — matched/not-matched
-    // routing and no-op suppression are decided against the state the
-    // commit actually lands on. Without this, a row suppressed as no-op
-    // against the pre-race state would stay suppressed even though the
-    // racing commit changed that key — silently dropping the merge's
-    // "set to source value" intent. A fully-suppressed delta still
-    // commits an (empty) manifest version through appendOnce, so the
-    // CAS itself detects the race — there is no unvalidated fast path.
-    // merge‖merge serializes the same way: the loser re-derives against
-    // the winner's state, so both intents land deterministically.
-    // the source is pinned ONCE with localCheckpoint, for the same
-    // reason the probe runs once: the profile pass, the state join, and
-    // every CAS-loss re-derivation must see the SAME source rows — a
-    // non-deterministic source re-evaluated between the profile and the
-    // join could defeat the file pruning (a key the profile never saw
-    // would silently join against pruned-away state). The
-    // materialization is executor-local (MEMORY_AND_DISK) and IS the
-    // probe's evaluation (see the pin-first comment above).
-    val srcPinned = src0.localCheckpoint()
+    val c = MergeClauses(whenMatchedDelete, whenMatchedUpdate,
+      whenNotMatchedInsert, whenMatchedUpdateCond, whenNotMatchedBySourceDelete,
+      whenNotMatchedInsertCond, whenNotMatchedBySourceSet,
+      whenNotMatchedBySourceSetCond, whenMatchedUpdateValues, stateNeedsTsVal)
+    // PIN FIRST, PROBE FROM THE PIN: the source is evaluated ONCE — the
+    // small/large probe, the profile pass, the state join and every
+    // CAS-loss re-derivation see the SAME rows, so a non-deterministic
+    // source can neither hand the probe a different snapshot than the
+    // join nor defeat the file pruning (a key the profile never saw
+    // would silently join against pruned-away state). The pin is an
+    // executor-local localCheckpoint (MEMORY_AND_DISK) and IS the
+    // probe's evaluation. A deterministic local relation (a driver-side
+    // Seq, VALUES) already is one fixed snapshot: it is used unpinned,
+    // and its probe runs no job.
+    val local = src0.queryExecution.analyzed.deterministic &&
+      src0.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val srcPinned = if (local) src0 else src0.localCheckpoint()
     try {
       val probe = srcPinned.take(JournalStore.MergeSmallSourceRows + 1)
-      retryOnLostRace {
-        // WHEN NOT MATCHED BY SOURCE must SEE every state key (its whole
-        // point is the complement), so it always takes the full-join path
-        // with state pruning disabled — a full reconciliation is a full
-        // read of current state by definition. Small sources still route
-        // through the collected probe (the probe IS the source there).
-        if (whenNotMatchedBySourceDelete.isDefined ||
-            whenNotMatchedBySourceSet.nonEmpty)
-          mergeFull(
-            if (probe.length <= JournalStore.MergeSmallSourceRows)
-              spark.createDataFrame(
-                spark.sparkContext.parallelize(probe.toSeq, 1), src0.schema)
-            else srcPinned,
-            extras, whenMatchedDelete, whenMatchedUpdate, whenNotMatchedInsert,
-            whenMatchedUpdateCond, whenNotMatchedBySourceDelete,
-            whenNotMatchedInsertCond, whenNotMatchedBySourceSet,
-            whenNotMatchedBySourceSetCond, whenMatchedUpdateValues,
-            stateNeedsTsVal)
-        else if (probe.length <= JournalStore.MergeSmallSourceRows)
-          mergeSmall(src0.schema, probe, extras, whenMatchedDelete,
-            whenMatchedUpdate, whenNotMatchedInsert, whenMatchedUpdateCond,
-            whenNotMatchedInsertCond, whenMatchedUpdateValues, stateNeedsTsVal)
-        else mergeFull(srcPinned, extras, whenMatchedDelete,
-          whenMatchedUpdate, whenNotMatchedInsert, whenMatchedUpdateCond,
-          whenNotMatchedInsertCond = whenNotMatchedInsertCond,
-          whenMatchedUpdateValues = whenMatchedUpdateValues,
-          stateNeedsTsVal = stateNeedsTsVal)
+      val small = probe.length <= JournalStore.MergeSmallSourceRows
+      // a small source IS its collected rows: the join re-reads them
+      // from the driver, never the source plan
+      val src1 = if (!small) srcPinned else spark.createDataFrame(
+        spark.sparkContext.parallelize(probe.toSeq, 1), src0.schema)
+      // WHEN NOT MATCHED BY SOURCE must SEE every state key (its whole
+      // point is the complement): no state pruning, FULL OUTER join —
+      // a full reconciliation is a full read of current state by
+      // definition.
+      val stateProbe =
+        if (c.bySource) None
+        else if (small) {
+          val keys = probe.toSeq.map(r => (if (r.isNullAt(0)) null else r.get(0).toString,
+            if (r.isNullAt(1)) None
+            else Some(r.get(1).asInstanceOf[Number].longValue)))
+          // ambiguity is checked on the driver: the rows are in hand
+          require(keys.distinct.length == keys.length, mergeDupMsg)
+          Some(exactKeyProbe(keys))
+        } else Some(profileProbe(srcPinned))
+      // otherwise duplicates detonate inside the routing join (see
+      // mergeRouted): a per-key window count sharing its partitioning
+      val src = if (stateProbe.exists(_.exact)) src1 else {
+        val counted = src1.withColumn("__dup", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("ns"), col("ukey"))))
+        if (c.bySource) counted.withColumn("__src", lit(1)) else counted
       }
+      // an empty source changes nothing (unless it deletes by source)
+      if (probe.isEmpty && !c.bySource) manifest.maxSeq
+      else commitLoop("merge")(mergeOnce(_, src, stateProbe, extras, c))
     } finally
       // the localCheckpoint blocks are this call's alone: release them
       // on every exit path (they would otherwise stay in executor
       // storage until the session ends)
-      srcPinned.queryExecution.logical.collect {
+      if (!local) srcPinned.queryExecution.logical.collect {
         case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
       }.foreach(_.unpersist(blocking = true))
   }
 
-  /** State reconstruction for an extras-carrying merge: the arg-max
-    * struct carries the store's CURRENT values of the evolved columns
-    * (null when the store does not have the column yet), aliased to
-    * the cur__ names the no-op comparison and routing read. */
-  private def mergeStateExtras(rows: DataFrame, stExtras: Seq[String],
-                               extras: Seq[String]): DataFrame =
-    rows.groupBy("ns", "ukey")
-      .agg(max(struct((Seq("seq", "payload") ++ stExtras).map(col): _*))
-        .as("top"))
-      .select(Seq(col("ns"), col("ukey"),
-        col("top.payload").as("cur_payload")) ++
-        extras.map(c =>
-          (if (stExtras.contains(c)) col(s"top.$c") else lit(null))
-            .as(s"cur__$c")): _*)
-      .where(col("cur_payload").isNotNull)
-
-  /** FULL-RECORD state reconstruction for a merge carrying a
-    * WHEN NOT MATCHED BY SOURCE ... UPDATE clause: the arg-max struct
-    * carries ts/val beside payload and the evolved columns, because the
-    * by-source update's appended row is a whole record whose unassigned
-    * columns ride the CURRENT values — which checkpoints don't carry,
-    * so this path always reconstructs from segments (the clause's
-    * structural cost, like the extras path). */
-  private def mergeStateFull(rows: DataFrame, stExtras: Seq[String],
-                             extras: Seq[String]): DataFrame =
-    rows.groupBy("ns", "ukey")
-      .agg(max(struct((Seq("seq", "ts", "payload", "val") ++ stExtras)
-        .map(col): _*)).as("top"))
-      .select(Seq(col("ns"), col("ukey"), col("top.ts").as("cur_ts"),
-        col("top.payload").as("cur_payload"), col("top.val").as("cur_val")) ++
-        extras.map(c =>
-          (if (stExtras.contains(c)) col(s"top.$c") else lit(null))
-            .as(s"cur__$c")): _*)
-      .where(col("cur_payload").isNotNull)
-
-  /** The evolved columns the STORE already carries (current-state
-    * values exist to compare against); case-insensitive like the rest
-    * of the schema surface. */
-  private def storeExtrasOf(m: Manifest, extras: Seq[String]): Seq[String] =
-    if (m.schemaDdl.isEmpty || extras.isEmpty) Nil
-    else {
-      val have = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
-        .map(_.name.toLowerCase).toSet
-      extras.filter(c => have.contains(c.toLowerCase))
-    }
-
-  private val mergeDupMsg = "journal merge: source has multiple rows " +
-    "for a key - a merge must resolve to one action per key " +
-    "(pre-aggregate the source)"
-
-  /** The small-source merge path: `rows` IS the whole source (already
-    * collected by the probe — the source is never re-evaluated, which
-    * also pins a non-deterministic source to one consistent snapshot).
-    * Ambiguity is checked driver-side; the state side reads only the
-    * key-intersecting files. */
-  private def mergeSmall(schema: org.apache.spark.sql.types.StructType,
-                         rows: Array[org.apache.spark.sql.Row],
-                         extras: Seq[String],
-                         whenMatchedDelete: Option[org.apache.spark.sql.Column],
-                         whenMatchedUpdate: Boolean = true,
-                         whenNotMatchedInsert: Boolean = true,
-                         whenMatchedUpdateCond:
-                           Option[org.apache.spark.sql.Column] = None,
-                         whenNotMatchedInsertCond:
-                           Option[org.apache.spark.sql.Column] = None,
-                         whenMatchedUpdateValues:
-                           Seq[(org.apache.spark.sql.Column, String)] = Nil,
-                         stateNeedsTsVal: Boolean = false): Long = {
-    val m = manifest
-    if (rows.isEmpty) return m.maxSeq
-    val keys = rows.map(r => (if (r.isNullAt(0)) null else r.get(0).toString,
-      if (r.isNullAt(1)) None
-      else Some(r.get(1).asInstanceOf[Number].longValue)))
-    require(keys.distinct.length == keys.length, mergeDupMsg)
-    val distinctKeys = keys.toSeq.distinct
-    val cand = SegmentFiles.prune(m, Probe.exactKeys(distinctKeys))
-    val nss = distinctKeys.map(_._1).filter(_ != null).distinct
-    val uks = distinctKeys.flatMap(_._2).distinct
-    val hasNullKey = distinctKeys.exists(_._2.isEmpty)
-    // row filters on the pruned scan: tiny IN lists reach the parquet
-    // reader (row-group skipping inside the candidate files) and make
-    // the arg-max aggregate key-bounded, not file-bounded
-    val keyPred = {
-      val ksIn = if (uks.isEmpty) lit(false) else col("ukey").isin(uks: _*)
-      if (hasNullKey) ksIn || col("ukey").isNull else ksIn
-    }
-    val stExtras = storeExtrasOf(m, extras)
-    // identity columns the source does not carry: their CURRENT values
-    // ride the state side (cur__<c>) so matched rows KEEP their assigned
-    // identity — Delta's stable-identity-under-MERGE semantics; insert
-    // rows arrive NULL and generate fresh values in appendOnce
-    val idCarry = identityCarryCols(m, schema.fieldNames, extras)
-    // a clause gate referencing target ts/val (the late-arrival guard
-    // `WHEN MATCHED AND t.ts < s.ts`) widens reconstruction to the full
-    // record — checkpoints don't carry ts/val, segments do
-    val baseCols =
-      if (stateNeedsTsVal) Seq("ns", "ukey", "seq", "ts", "payload", "val")
-      else Seq("ns", "ukey", "seq", "payload")
-    val filtered = readSegmentsOver(cand, m.schemaDdl, m.dvParts)
-      .where(if (nss.isEmpty) lit(false) else col("ns").isin(nss: _*))
-      .where(keyPred)
-      .select((baseCols ++ stExtras ++ idCarry).map(col): _*)
-    val state0 =
-      if (stateNeedsTsVal)
-        mergeStateFull(filtered, stExtras ++ idCarry, extras ++ idCarry)
-      else if (extras.isEmpty && idCarry.isEmpty)
-        tombstoneAwareState(filtered)
-          .select(col("ns"), col("ukey"), col("payload").as("cur_payload"))
-      else mergeStateExtras(filtered, stExtras ++ idCarry, extras ++ idCarry)
-    val state = broadcast(state0).alias("t")
-    val srcDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), schema).alias("s")
-    // appendOnce, NOT append: a lost CAS must escape to merge's own
-    // retry wrapper so the state join re-derives — append's internal
-    // rebase would re-commit this attempt's STALE routing
-    appendOnce(mergeRouted(srcDf.join(state,
-      col("s.ns") === col("t.ns") && col("s.ukey") <=> col("t.ukey"),
-      "left_outer"), whenMatchedDelete, guarded = false,
-      whenMatchedUpdate, whenNotMatchedInsert, extras,
-      whenMatchedUpdateCond, whenNotMatchedInsertCond = whenNotMatchedInsertCond,
-      whenMatchedUpdateValues = whenMatchedUpdateValues,
-      idCarry = idCarry),
-      None, "", internalRewrite = true)
+  /** TOUCHED-FILE PRUNING for an exact key list (a small merge source's,
+    * or the keys updateWhere's range probe found): the keys prune to the
+    * files whose ns directory / key range / key bloom can hold them, and
+    * ride the scan as tiny IN lists (row-group skipping inside the
+    * candidates; the arg-max is key-bounded, not file-bounded). */
+  private def exactKeyProbe(keys: Seq[(String, Option[Long])]): MergeProbe = {
+    val nss = keys.map(_._1).filter(_ != null).distinct
+    val uks = keys.flatMap(_._2).distinct
+    val ksIn = if (uks.isEmpty) lit(false) else col("ukey").isin(uks: _*)
+    val ukP = if (keys.exists(_._2.isEmpty)) ksIn || col("ukey").isNull else ksIn
+    MergeProbe(Probe.exactKeys(keys),
+      (if (nss.isEmpty) lit(false) else col("ns").isin(nss: _*)) && ukP,
+      exact = true)
   }
 
-  /** Identity columns whose CURRENT values a merge must carry through
-    * the state join (pinned in the store schema, absent from the merge
-    * source) — see mergeSmall/mergeFull. */
-  private def identityCarryCols(m: Manifest, srcCols: Seq[String],
-                                extras: Seq[String]): Seq[String] =
-    storeExtrasOf(m, m.meta.keys.collect {
-      case k if k.startsWith(JournalStore.IdentityPrefix) =>
-        k.stripPrefix(JournalStore.IdentityPrefix)
-    }.toSeq.sorted).filterNot(c =>
-      srcCols.exists(_.equalsIgnoreCase(c)) ||
-        extras.exists(_.equalsIgnoreCase(c)))
-
-  /** The full merge path (source too large to collect): one (ns, ukey)
-    * shuffle joining the source against state. Ambiguity detection
-    * rides the SAME pass (no separate count job): a per-key window
-    * count shares the join's partitioning and detonates inside the
-    * routed projection.
-    *
-    * STATE PRUNING WITHOUT A KEY LIST (the large-source twin of
-    * [[mergeSmall]]'s collected-key pruning): ONE aggregate pass over
-    * the pinned source builds a per-NAMESPACE profile — key min/max,
-    * null-key flag, and an 8 KiB key bloom in the per-file stats
-    * geometry. The collect is bounded by the namespace count, never the
-    * source size, so a 100 TB source profiles in one distributed pass
-    * and a few driver rows. The profile prunes the state side twice:
-    * file-level ([[SegmentFiles.Probe.profiles]] — ns
-    * directory, range overlap, and a PROVABLY-EMPTY bloom
-    * intersection), then row-level (a per-ns range disjunction pushed
-    * to the parquet scans — one conjunct per namespace, not per key).
-    * Both are sound for the join: every source key passes its own
-    * group's range and leaves its bits in the bloom intersection, so a
-    * file or row holding any source key's state always survives; what
-    * gets dropped can match nothing. When pruning keeps most files the
-    * path falls back to latest() — checkpoint-bounded replay beats a
-    * near-full segment re-read — still under the row predicate, which
-    * pushes through the state aggregate into checkpoint + tail scans. */
-  private def mergeFull(src0: DataFrame,
-                        extras: Seq[String],
-                        whenMatchedDelete: Option[org.apache.spark.sql.Column],
-                        whenMatchedUpdate: Boolean = true,
-                        whenNotMatchedInsert: Boolean = true,
-                        whenMatchedUpdateCond:
-                          Option[org.apache.spark.sql.Column] = None,
-                        bySourceDelete:
-                          Option[org.apache.spark.sql.Column] = None,
-                        whenNotMatchedInsertCond:
-                          Option[org.apache.spark.sql.Column] = None,
-                        bySourceSet:
-                          Seq[(String, org.apache.spark.sql.Column)] = Nil,
-                        bySourceSetCond:
-                          Option[org.apache.spark.sql.Column] = None,
-                        whenMatchedUpdateValues:
-                          Seq[(org.apache.spark.sql.Column, String)] = Nil,
-                        stateNeedsTsVal: Boolean = false): Long = {
-    val m = manifest
-    // WHEN NOT MATCHED BY SOURCE: the state COMPLEMENT is the product,
-    // so file/row pruning by the source-key profile is structurally off
-    // (a pruned-away state key would silently escape its tombstone) —
-    // full current state (checkpoint-bounded latest() when no extras
-    // ride) joins the source FULL OUTER, and state-only rows route
-    // through the bySourceDelete gate in mergeRouted.
-    val idCarry = identityCarryCols(m, src0.columns.toSeq, extras)
-    if (bySourceDelete.isDefined || bySourceSet.nonEmpty) {
-      val stEx = storeExtrasOf(m, extras)
-      val state = (if (bySourceSet.nonEmpty || stateNeedsTsVal)
-          // by-source UPDATE appends whole records (and a ts/val-reading
-          // gate compares current values) — unassigned columns ride
-          // CURRENT ts/val, which checkpoints don't carry
-          mergeStateFull(readSegments().select(
-            ("ns" +: "ukey" +: "seq" +: "ts" +: "payload" +: "val" +:
-              (stEx ++ idCarry)).map(col): _*),
-            stEx ++ idCarry, extras ++ idCarry)
-        else if (extras.isEmpty && idCarry.isEmpty)
-          latest().select(col("ns"), col("ukey"),
-            col("payload").as("cur_payload"))
-        else
-          mergeStateExtras(readSegments().select(
-            ("ns" +: "ukey" +: "seq" +: "payload" +:
-              (stEx ++ idCarry)).map(col): _*),
-            stEx ++ idCarry, extras ++ idCarry)).alias("t")
-      val src = src0
-        .withColumn("__dup", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("ns"), col("ukey"))))
-        .withColumn("__src", lit(1))
-        .alias("s")
-      return appendOnce(mergeRouted(src.join(state,
-        col("s.ns") === col("t.ns") && col("s.ukey") <=> col("t.ukey"),
-        "full_outer"), whenMatchedDelete, guarded = true,
-        whenMatchedUpdate, whenNotMatchedInsert, extras,
-        whenMatchedUpdateCond, bySourceDelete,
-        whenNotMatchedInsertCond, bySourceSet, bySourceSetCond,
-        whenMatchedUpdateValues, idCarry), None, "",
-        internalRewrite = true)
-    }
-    val prof = src0
+  /** STATE PRUNING WITHOUT A KEY LIST for a large source: ONE aggregate
+    * pass over the pinned source builds a per-NAMESPACE profile — key
+    * min/max, null-key flag, and an 8 KiB key bloom in the per-file
+    * stats geometry. The collect is bounded by the namespace count,
+    * never the source size. The profile prunes state twice: file-level
+    * ([[SegmentFiles.Probe.profiles]] — ns directory, range overlap, and
+    * a PROVABLY-EMPTY bloom intersection), then row-level (a per-ns
+    * range disjunction pushed to the parquet scans). Both are sound for
+    * the join: every source key passes its own group's range and leaves
+    * its bits in the bloom intersection, so a file or row holding any
+    * source key's state always survives. */
+  private def profileProbe(src: DataFrame): MergeProbe = {
+    val prof = src
       .groupBy(col("ns").cast("string").as("ns"))
       .agg(min(col("ukey").cast("long")).as("kmin"),
            max(col("ukey").cast("long")).as("kmax"),
@@ -3609,63 +3399,92 @@ class JournalStore private (val spark: SparkSession, val path: String,
       }
       (col("ns") === lit(g.ns)) && keyP
     }.reduceOption(_ || _).getOrElse(lit(false))
-    val cand = SegmentFiles.prune(m, Probe.profiles(groups))
-    val stExtras = storeExtrasOf(m, extras)
-    val stateCols = ("ns" +: "ukey" +: "seq" +: "payload" +: stExtras).map(col)
-    val state = (if (stateNeedsTsVal) {
-        // a matched-clause gate reads current ts/val — reconstruct the
-        // full record from segments (checkpoints don't carry ts/val);
-        // file/row pruning by the source profile still applies
-        val base =
-          if (cand.size * 2 <= m.files.size)
-            readSegmentsOver(cand, m.schemaDdl, m.dvParts)
-          else readSegments()
-        mergeStateFull(base.where(rowPred).select(
-          (Seq("ns", "ukey", "seq", "ts", "payload", "val") ++ stExtras ++
-            idCarry).map(col): _*), stExtras ++ idCarry, extras ++ idCarry)
-      } else if (extras.isEmpty && idCarry.isEmpty) {
-        val stateRows =
-          if (cand.size * 2 <= m.files.size)
-            tombstoneAwareState(
-              readSegmentsOver(cand, m.schemaDdl, m.dvParts)
-                .where(rowPred).select(stateCols: _*))
-          else latest().where(rowPred)
-        stateRows.select(col("ns"), col("ukey"),
-          col("payload").as("cur_payload"))
-      } else {
-        // extras (and carried identity values) need current-state
-        // values, which checkpoints don't carry — reconstruct from
-        // segments either way (the pruned branch is unchanged; the wide
-        // branch trades the checkpoint bound for no-op precision)
-        val base =
-          if (cand.size * 2 <= m.files.size)
-            readSegmentsOver(cand, m.schemaDdl, m.dvParts)
-          else readSegments()
-        mergeStateExtras(
-          base.where(rowPred).select((stateCols ++ idCarry.map(col)): _*),
-          stExtras ++ idCarry, extras ++ idCarry)
-      }).alias("t")
-    val src = src0
-      .withColumn("__dup", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("ns"), col("ukey"))))
-      .alias("s")
-    // null-safe on ukey: a NULL key row in the source must match its
-    // NULL-key state, not silently always-insert. appendOnce for the
-    // same reason as mergeSmall: CAS loss re-derives the whole join
-    // against the fresh manifest on each attempt (mergeFull re-reads
-    // `manifest` per call; the pinned source never re-evaluates).
-    appendOnce(mergeRouted(src.join(state,
-      col("s.ns") === col("t.ns") && col("s.ukey") <=> col("t.ukey"),
-      "left_outer"), whenMatchedDelete, guarded = true,
-      whenMatchedUpdate, whenNotMatchedInsert, extras,
-      whenMatchedUpdateCond,
-      whenNotMatchedInsertCond = whenNotMatchedInsertCond,
-      whenMatchedUpdateValues = whenMatchedUpdateValues,
-      idCarry = idCarry), None, "", internalRewrite = true)
+    MergeProbe(Probe.profiles(groups), rowPred, exact = false)
   }
 
-  /** Clause routing shared by both merge paths. With `guarded`, the
+  /** One merge attempt over snapshot `m`: rebuild the current state the
+    * probe admits (None = all of it), join the prepared source against
+    * it, route the clauses and commit the delta as ONE append against
+    * the same snapshot.
+    *
+    * CONFLICT RULE: an attempt that loses the CAS re-runs against the
+    * fresh manifest ([[commitLoop]]), so matched/not-matched routing
+    * and no-op suppression are decided against the state the commit
+    * actually lands on — a row suppressed as a no-op against the
+    * pre-race state cannot stay suppressed after the race changed that
+    * key. A fully-suppressed delta still commits an (empty) manifest
+    * version, so the CAS itself detects the race. merge‖merge
+    * serializes the same way.
+    *
+    * The state carries payload, plus ts/val when a clause gate reads
+    * them (`WHEN MATCHED AND t.ts < s.ts`) or a by-source UPDATE
+    * appends whole records, plus the store's current values of the
+    * source's evolved columns (the no-op comparison) and of identity
+    * columns the source lacks (matched rows keep their identity).
+    * Checkpoints carry payload only, so the checkpoint-bounded state
+    * read serves just the payload-only shape; every other shape
+    * replays segments. */
+  private def mergeOnce(m: Manifest, src: DataFrame, probe: Option[MergeProbe],
+                        extras: Seq[String], c: MergeClauses): Long = {
+    val idCarry = identityCarryCols(m, src.columns.toSeq, extras)
+    val stEx = storeExtrasOf(m, extras)
+    val carried = (if (c.stateNeedsTsVal || c.bySourceSet.nonEmpty)
+      Seq("ts", "payload", "val") else Seq("payload")) ++ stEx ++ idCarry
+    val fromCheckpoint = carried == Seq("payload") && extras.isEmpty
+    def segState(files: Seq[String], rows: Column) =
+      stateOver(m, files, rows, Some(carried))
+    val state = probe match {
+      case None =>
+        if (fromCheckpoint) stateAtIn(m, m.maxSeq) else segState(m.files, lit(true))
+      case Some(p) =>
+        val cand = SegmentFiles.prune(m, p.files)
+        if (p.exact || cand.size * 2 <= m.files.size) segState(cand, p.rows)
+        // pruning kept most files: checkpoint-bounded replay beats a
+        // near-full segment re-read, still under the row predicate
+        else if (fromCheckpoint) stateAtIn(m, m.maxSeq).where(p.rows)
+        else segState(m.files, p.rows)
+    }
+    val cur = state.select(Seq(col("ns"), col("ukey")) ++ carried.map(n =>
+      col(n).as(if (stEx.contains(n) || idCarry.contains(n)) s"cur__$n" else s"cur_$n")) ++
+      extras.filterNot(stEx.contains).map(n => lit(null).as(s"cur__$n")): _*)
+    val t = (if (probe.exists(_.exact)) broadcast(cur) else cur).alias("t")
+    // null-safe on ukey: a NULL key row in the source must match its
+    // NULL-key state, not silently always-insert
+    appendOnce(m, mergeRouted(src.alias("s").join(t,
+      col("s.ns") === col("t.ns") && col("s.ukey") <=> col("t.ukey"),
+      if (probe.isEmpty) "full_outer" else "left_outer"),
+      guarded = !probe.exists(_.exact), extras, c, idCarry),
+      None, "", internalRewrite = true)
+  }
+
+  /** The evolved columns the STORE already carries (current-state
+    * values exist to compare against); case-insensitive like the rest
+    * of the schema surface. */
+  private def storeExtrasOf(m: Manifest, extras: Seq[String]): Seq[String] =
+    if (m.schemaDdl.isEmpty || extras.isEmpty) Nil
+    else {
+      val have = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
+        .map(_.name.toLowerCase).toSet
+      extras.filter(c => have.contains(c.toLowerCase))
+    }
+
+  private val mergeDupMsg = "journal merge: source has multiple rows " +
+    "for a key - a merge must resolve to one action per key " +
+    "(pre-aggregate the source)"
+
+  /** Identity columns whose CURRENT values a merge must carry through
+    * the state join (pinned in the store schema, absent from the merge
+    * source) — see mergeOnce. */
+  private def identityCarryCols(m: Manifest, srcCols: Seq[String],
+                                extras: Seq[String]): Seq[String] =
+    storeExtrasOf(m, m.meta.keys.collect {
+      case k if k.startsWith(JournalStore.IdentityPrefix) =>
+        k.stripPrefix(JournalStore.IdentityPrefix)
+    }.toSeq.sorted).filterNot(c =>
+      srcCols.exists(_.equalsIgnoreCase(c)) ||
+        extras.exists(_.equalsIgnoreCase(c)))
+
+  /** Clause routing of every merge attempt. With `guarded`, the
     * duplicate-key detonation is ORDER-INDEPENDENT by construction: a
     * duplicate-keyed row is KEPT by the filter whatever its no-op
     * status (`!noop || __dup > 1` — so conjunct reordering or
@@ -3675,31 +3494,14 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * rode assert_true on the filter conjunction, which depended on the
     * optimizer evaluating it before the no-op conjunct: duplicate keys
     * whose copies were all no-ops could slip through unseen. */
-  private def mergeRouted(joined: DataFrame,
-                          whenMatchedDelete: Option[org.apache.spark.sql.Column],
-                          guarded: Boolean,
-                          whenMatchedUpdate: Boolean = true,
-                          whenNotMatchedInsert: Boolean = true,
-                          extras: Seq[String] = Nil,
-                          whenMatchedUpdateCond:
-                            Option[org.apache.spark.sql.Column] = None,
-                          bySourceDelete:
-                            Option[org.apache.spark.sql.Column] = None,
-                          whenNotMatchedInsertCond:
-                            Option[org.apache.spark.sql.Column] = None,
-                          bySourceSet:
-                            Seq[(String, org.apache.spark.sql.Column)] = Nil,
-                          bySourceSetCond:
-                            Option[org.apache.spark.sql.Column] = None,
-                          whenMatchedUpdateValues:
-                            Seq[(org.apache.spark.sql.Column, String)]
-                            = Nil,
-                          idCarry: Seq[String] = Nil): DataFrame = {
+  private def mergeRouted(joined: DataFrame, guarded: Boolean,
+                          extras: Seq[String], clauses: MergeClauses,
+                          idCarry: Seq[String]): DataFrame = {
+    import clauses._
     // state-only rows exist only under the full-outer by-source join,
     // flagged by the source-side __src marker (a literal — immune to
     // legitimately-null source columns)
-    val bySrc = bySourceDelete.isDefined || bySourceSet.nonEmpty
-    val stateOnly = if (bySrc) col("s.__src").isNull else lit(false)
+    val stateOnly = if (bySource) col("s.__src").isNull else lit(false)
     val matched = !stateOnly && col("t.ns").isNotNull
     val delete = whenMatchedDelete.map(matched && coalesce(_, lit(false)))
       .getOrElse(lit(false))
@@ -3790,12 +3592,12 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // source row); a DELETE tombstones ts/val/extras to null, an UPDATE
     // rides current values for whatever it didn't assign
     def keyOut(n: String) =
-      if (bySrc) when(stateOnly, col(s"t.$n")).otherwise(col(s"s.$n"))
+      if (bySource) when(stateOnly, col(s"t.$n")).otherwise(col(s"s.$n"))
       else col(s"s.$n")
     val tsOut = armChain(
       (if (bySourceSet.nonEmpty)
         Seq((bySrcUpd, bySrcVal("ts", col("cur_ts")))) else Nil) ++
-        (if (bySrc) Seq((stateOnly, lit(null))) else Nil) ++
+        (if (bySource) Seq((stateOnly, lit(null))) else Nil) ++
         (if (whenMatchedUpdateValues.nonEmpty)
           Seq((updating, updVal("ts"))) else Nil),
       col("s.ts"))
@@ -3852,12 +3654,12 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * retained rows are preserved — erasure never renumbers history.
     * Rows where `cond` is NULL are retained (DELETE's three-valued
     * WHERE semantics). Returns the number of rows erased. */
-  def deleteWhere(cond: org.apache.spark.sql.Column): Long =
-    retryOnLostRace(deleteWhereOnce(cond))
-
-  private def deleteWhereOnce(cond: org.apache.spark.sql.Column): Long = {
+  def deleteWhere(cond: org.apache.spark.sql.Column): Long = {
     requireWritable()
-    val m = manifest
+    commitLoop("delete")(deleteWhereOnce(_, cond))
+  }
+
+  private def deleteWhereOnce(m: Manifest, cond: org.apache.spark.sql.Column): Long = {
     if (m.files.isEmpty) return 0L
     // ns/ukey equality and seq/ts range conjuncts prune through the
     // per-file metadata — sound for an erase: a file with no in-range
@@ -3946,8 +3748,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // exact-or-decline per refoldStatsMeta's contract.
     val (meta2, cstatsParts2, cstatsEnvs2) =
       rewriteStatsState(m, files2, fstats2, dvParts2, w.fileSketches)
-    commitSeam()
-    writeManifest(path, m.copy(op = "delete", files = files2, stats = stats2.sortBy(_.epoch),
+    cas(m.copy(op = "delete", files = files2, stats = stats2.sortBy(_.epoch),
       kstats = kstats2.sortBy(k => (k.epoch, k.ns)), fstats = fstats2,
       checkpoints = Nil, meta = meta2, cstatsParts = cstatsParts2,
       cstatsEnvs = cstatsEnvs2,
@@ -3980,12 +3781,12 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * unreferenced). Checkpoints are dropped: their materialized state
     * embeds deleted rows. Rows where `cond` is NULL are retained
     * (three-valued DELETE). Returns rows deleted. */
-  def deleteWhereDv(cond: org.apache.spark.sql.Column): Long =
-    retryOnLostRace(deleteWhereDvOnce(cond))
-
-  private def deleteWhereDvOnce(cond: org.apache.spark.sql.Column): Long = {
+  def deleteWhereDv(cond: org.apache.spark.sql.Column): Long = {
     requireWritable()
-    val m = manifest
+    commitLoop("delete-dv")(deleteWhereDvOnce(_, cond))
+  }
+
+  private def deleteWhereDvOnce(m: Manifest, cond: org.apache.spark.sql.Column): Long = {
     if (m.files.isEmpty) return 0L
     // same seq/ts range skipping as deleteWhere: row-independent erase,
     // so a file outside the bounds can hold no doomed row
@@ -4050,8 +3851,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
       if (dvParts1.sizeIs > JournalStore.MaxDvParts)
         writeDvPart(readDvTable(dvParts1)).toSeq
       else dvParts1
-    commitSeam()
-    writeManifest(path, m.copy(op = "delete-dv", files = files2, stats = stats2,
+    cas(m.copy(op = "delete-dv", files = files2, stats = stats2,
       kstats = kstats2, fstats = fstats2, checkpoints = Nil,
       dvParts = dvParts2))
     deleted
@@ -4099,7 +3899,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * or reads a footer). The analyzer may wrap literals in casts;
     * equalityConjuncts folds those. A shape that can't be recovered
     * just means no pruning — the callers' row filters stay exact. */
-  private def condBounds(m: Manifest, cond: org.apache.spark.sql.Column): CondBounds = {
+  private[journal] def condBounds(m: Manifest, cond: org.apache.spark.sql.Column): CondBounds = {
     def recover(df: DataFrame) =
       df.where(cond).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
@@ -4281,7 +4081,6 @@ class JournalStore private (val spark: SparkSession, val path: String,
       .orderBy("version")
   }
 
-  /** Full journal scan in seq order (marasa history(ns=all)). */
   /** UPDATE: rewrite the CURRENT state rows matching `cond` through
     * `assigns` and append them — one new state row per matched key
     * (standard affected-count semantics; history preserved).
@@ -4300,24 +4099,22 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * the row scan as pushed parquet predicates (sound pre-aggregation:
     * ns/ukey are the state grouping keys themselves, so dropping other
     * keys' rows never changes a surviving group's arg-max). State is
-    * ONE partial-aggregated struct-max shuffle (the tombstoneAwareState
-    * idiom widened to every data column — comparison is decided
-    * entirely by the unique leading seq), never a global row_number
-    * window: no single-partition sort, map-side combine does the
-    * heavy lifting. A lost manifest CAS re-derives the whole state
-    * rebuild against the fresh manifest (the merge conflict rule). */
+    * the store's per-key state rule ([[JournalStore.stateByKey]])
+    * carrying every data column: ONE partial-aggregated struct-max
+    * shuffle, never a global row_number window. A lost manifest CAS
+    * re-derives the whole state rebuild, and the count, against the
+    * fresh manifest (the merge conflict rule). */
   def updateWhere(assigns: Seq[(String, org.apache.spark.sql.Column)],
                   cond: Option[org.apache.spark.sql.Column]): Long = {
     requireWritable()
     require(assigns.nonEmpty, "updateWhere needs at least one assignment")
-    retryOnLostRace {
-      val m = manifest
+    commitLoop("update") { m =>
       if (m.files.isEmpty) 0L
       else {
         val (candidates, keyPred) = updatePruning(m, cond)
         if (candidates.isEmpty) 0L
         else {
-          val state = updateStateOver(m, candidates, keyPred)
+          val state = stateOver(m, candidates, keyPred, None)
           val amap = assigns.map { case (n, c) => n.toLowerCase -> c }.toMap
           val engine = Set("seq", "epoch", "skey")
           require(!amap.keySet.exists(engine.contains),
@@ -4365,7 +4162,7 @@ class JournalStore private (val spark: SparkSession, val path: String,
           // internalRewrite: the re-appended state rows carry their
           // existing identity values verbatim and recompute generated
           // columns from the post-assignment row
-          appendOnce(updated, None, "", internalRewrite = true) - m.maxSeq
+          appendOnce(m, updated, None, "", internalRewrite = true) - m.maxSeq
         }
       }
     }
@@ -4407,34 +4204,22 @@ class JournalStore private (val spark: SparkSession, val path: String,
     if (probe.length > JournalStore.MergeSmallSourceRows ||
         probe.exists(_.isNullAt(0))) return (baseCand, keyPred)
     if (probe.isEmpty) return (Nil, keyPred)
-    val keys = probe.toSeq.map(r => (r.getString(0),
-      if (r.isNullAt(1)) None else Some(r.getLong(1)))).distinct
-    val nss = keys.map(_._1).distinct
-    val uks = keys.flatMap(_._2).distinct
-    val hasNullKey = keys.exists(_._2.isEmpty)
-    val ukP = {
-      val in = if (uks.isEmpty) lit(false) else col("ukey").isin(uks: _*)
-      if (hasNullKey) in || col("ukey").isNull else in
-    }
-    (SegmentFiles.prune(m, Probe.exactKeys(keys)),
-      keyPred && col("ns").isin(nss: _*) && ukP)
+    val keys = exactKeyProbe(probe.toSeq.map(r => (r.getString(0),
+      if (r.isNullAt(1)) None else Some(r.getLong(1)))).distinct)
+    (SegmentFiles.prune(m, keys.files), keyPred && keys.rows)
   }
 
-  /** Full-row current state over exactly `files` — ONE struct-max
-    * aggregate (no window): every data column (ts/payload/val and
-    * evolved extras) rides the arg-max struct behind the unique
-    * leading seq; tombstoned keys drop. Journal-scoped for specs. */
-  private[journal] def updateStateOver(m: Manifest, files: Seq[String],
-      keyPred: org.apache.spark.sql.Column): DataFrame = {
-    val seg = readSegmentsOver(files, m.schemaDdl, m.dvParts).where(keyPred)
+  /** Current state of the keys `pred` admits, over exactly `files` of
+    * snapshot `m`: the per-key state rule ([[JournalStore.stateByKey]])
+    * carrying `carried`, or every data column when None (ts, payload,
+    * val and evolved extras — what updateWhere re-appends). One
+    * partial-aggregated struct-max, no window. Journal-scoped for specs. */
+  private[journal] def stateOver(m: Manifest, files: Seq[String],
+      pred: org.apache.spark.sql.Column, carried: Option[Seq[String]]): DataFrame = {
+    val seg = readSegmentsOver(files, m.schemaDdl, m.dvParts).where(pred)
     val engine = Set("seq", "ns", "ukey", "epoch", "skey")
-    val dataCols = seg.schema.fieldNames.toSeq
-      .filterNot(c => engine.contains(c.toLowerCase))
-    seg.groupBy("ns", "ukey")
-      .agg(max(struct((col("seq") +: dataCols.map(col)): _*)).as("top"))
-      .select(col("ns") +: col("ukey") +:
-        dataCols.map(c => col(s"top.$c").as(c)): _*)
-      .where(col("payload").isNotNull)
+    stateByKey(seg, StateKeys, carried.getOrElse(seg.schema.fieldNames.toSeq
+      .filterNot(c => engine.contains(c.toLowerCase))), withSeq = false)
   }
 
   def scan(): DataFrame =
@@ -4504,7 +4289,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
     val tail = ckpt.fold(pruned) { c =>
       pruned.where(col("epoch") >= lit(floor) && col("seq") > c)
     }.where(col("ts") <= lit(t) && keys).select("ns", "ukey", "seq", "payload")
-    tombstoneAwareState(base.fold(tail)(_.unionByName(tail)))
+    stateByKey(base.fold(tail)(_.unionByName(tail)), StateKeys, Seq("payload"),
+      withSeq = true)
   }
 
   /** Per-key (or per-ns) history in seq order. Key-targeted reads prune
@@ -4574,7 +4360,8 @@ class JournalStore private (val spark: SparkSession, val path: String,
       .where(col("seq") <= seq && col("seq") > lit(ckpt.getOrElse(-1L)) && keys)
       .select("ns", "ukey", "seq", "payload")
     val base = ckpt.map(cp => checkpointRows(m, cp).where(keys))
-    tombstoneAwareState(base.fold(tail)(_.unionByName(tail)))
+    stateByKey(base.fold(tail)(_.unionByName(tail)), StateKeys, Seq("payload"),
+      withSeq = true)
   }
 
   /** Checkpoint `cp` as tail-shaped rows (ns, ukey, seq, payload). A
@@ -4591,23 +4378,9 @@ class JournalStore private (val spark: SparkSession, val path: String,
     * file; None when the manifest pins no schema (the files decide). */
   private[graft] def stateSurface(m: Manifest): Option[org.apache.spark.sql.types.StructType] =
     if (m.schemaDdl.isEmpty) None
-    else Some(tombstoneAwareState(readSegmentsOver(Nil, m.schemaDdl)
-      .select("ns", "ukey", "seq", "payload")).schema)
-
-  /** The one state-combine rule: arg-max by seq per (ns, ukey), then
-    * drop keys whose winning payload is NULL — the Kafka log-compaction
-    * tombstone contract ([[delete]]). The arg-max is a struct max, NOT
-    * max_by: max_by's value-at-max semantics around NULL values differ
-    * between engines, while a struct compare is decided entirely by the
-    * unique seq, so a NULL winning payload survives to the filter
-    * deterministically. Still one partial-aggregated shuffle. */
-  private def tombstoneAwareState(rows: DataFrame): DataFrame =
-    rows
-      .groupBy("ns", "ukey")
-      .agg(max(struct(col("seq"), col("payload"))).as("top"))
-      .select(col("ns"), col("ukey"), col("top.payload").as("payload"),
-              col("top.seq").as("last_seq"))
-      .where(col("payload").isNotNull)
+    else Some(stateByKey(readSegmentsOver(Nil, m.schemaDdl)
+      .select("ns", "ukey", "seq", "payload"), StateKeys, Seq("payload"),
+      withSeq = true).schema)
 
   /** Latest state (marasa read(ns)). */
   def latest(): DataFrame = {
@@ -4634,20 +4407,11 @@ class JournalStore private (val spark: SparkSession, val path: String,
     // must not be a silent no-op after paying the state write).
     // Registration is a tiny read-modify-write commit touching only the
     // checkpoint list, so a lost CAS race rebases trivially: re-read,
-    // re-add, re-commit (bounded like append's retry loop).
-    var attempt = 0
-    while (attempt <= JournalStore.MaxCommitRetries) {
-      val m = manifest
-      try {
-        writeManifest(path, m.copy(op = "checkpoint", checkpoints =
-          ((m.checkpoints :+ seq).distinct.sorted.takeRight(RetainedCheckpoints)
-            :+ seq).distinct.sorted))
-        return
-      } catch { case e: java.util.ConcurrentModificationException =>
-        attempt += 1
-        if (attempt > JournalStore.MaxCommitRetries) throw e
-        Thread.sleep(25L * attempt)
-      }
+    // re-add, re-commit.
+    commitLoop("checkpoint") { m =>
+      cas(m.copy(op = "checkpoint", checkpoints =
+        ((m.checkpoints :+ seq).distinct.sorted.takeRight(RetainedCheckpoints)
+          :+ seq).distinct.sorted))
     }
   }
 
@@ -4819,6 +4583,32 @@ object JournalStore {
   private[graft] case class MergeNsProfile(ns: String, kmin: Option[Long],
       kmax: Option[Long], nullKey: Boolean, bloom: Array[Byte])
 
+  /** The state a merge attempt joins: the files `files` keeps and the
+    * rows `rows` admits. `exact` marks a small source's collected key
+    * list — state is then tiny (broadcast under the source rows) and
+    * the source's duplicates were refused on the driver. Otherwise the
+    * probe is a large source's profile and the attempt falls back to a
+    * full read once it keeps more than half the files. */
+  private[journal] final case class MergeProbe(files: Probe, rows: Column,
+                                               exact: Boolean)
+
+  /** The clauses of one merge, as [[JournalStore.merge]] takes them
+    * (`bySource*` are its `whenNotMatchedBySource*` parameters). */
+  private[journal] final case class MergeClauses(
+      whenMatchedDelete: Option[Column],
+      whenMatchedUpdate: Boolean,
+      whenNotMatchedInsert: Boolean,
+      whenMatchedUpdateCond: Option[Column],
+      bySourceDelete: Option[Column],
+      whenNotMatchedInsertCond: Option[Column],
+      bySourceSet: Seq[(String, Column)],
+      bySourceSetCond: Option[Column],
+      whenMatchedUpdateValues: Seq[(Column, String)],
+      stateNeedsTsVal: Boolean) {
+    /** A WHEN NOT MATCHED BY SOURCE clause: the merge sees all state. */
+    def bySource: Boolean = bySourceDelete.isDefined || bySourceSet.nonEmpty
+  }
+
   /** OR-merge victim blooms for a compacted file; any missing or
     * unreadable constituent poisons the merge to "" (conservative). */
   private[graft] def bloomUnion(b64s: Seq[String]): String =
@@ -4943,11 +4733,33 @@ object JournalStore {
   }
 
   /** Bounded optimistic-concurrency rebases before a lost CAS race
-    * escapes loudly: append rebases its commit; maintenance rewrites
-    * (compact/deleteWhere/deleteWhereDv) re-derive themselves against
-    * the fresh manifest (see retryOnLostRace); restore aborts on
-    * purpose. */
+    * escapes loudly: every op re-derives itself against the fresh
+    * manifest (see the store's commitLoop); restore aborts on purpose. */
   val MaxCommitRetries = 5
+
+  /** The grouping keys of every store state read. */
+  private[journal] val StateKeys = Seq("ns", "ukey")
+
+  /** The one per-key state rule: per group of `keys` the row with the
+    * highest seq wins, carrying its `carried` columns (payload among
+    * them) and, when `withSeq`, its seq as `last_seq` (state reads and
+    * checkpoints; merge and updateWhere carry data columns only, so a
+    * data column named `last_seq` cannot collide); groups whose winning
+    * payload is NULL drop — the Kafka log-compaction tombstone contract
+    * ([[JournalStore.delete]]). The arg-max is a struct max, NOT
+    * max_by: max_by's value-at-max semantics around NULL values differ
+    * between engines, while a struct compare is decided by the leading
+    * seq, so a NULL winning payload survives to the filter
+    * deterministically. One partial-aggregated shuffle, no window.
+    * Checkpoints, state reads, merge, updateWhere and the facade all
+    * combine through here. */
+  private[journal] def stateByKey(rows: DataFrame, keys: Seq[String],
+                                  carried: Seq[String], withSeq: Boolean): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(max(struct((col("seq") +: carried.map(col)): _*)).as("top"))
+      .select(keys.map(col) ++ carried.map(c => col(s"top.$c").as(c)) ++
+        (if (withSeq) Seq(col("top.seq").as("last_seq")) else Nil): _*)
+      .where(col("payload").isNotNull)
 
   /** merge() sources at or below this many ROWS take the touched-file
     * path: keys collected driver-side, state bounded to intersecting

@@ -51,15 +51,14 @@ class Marasa(val store: JournalStore) {
     val m = store.manifest
     val bound = seq.getOrElse(m.maxSeq)
     val lastEpoch = bound / store.epochSize
-    store.segmentsFor(m, Some(ns), None, (Long.MinValue, lastEpoch))
-      .where(col("ns") === ns && col("seq") <= bound &&
-             col("epoch") <= lit(lastEpoch))
-      .groupBy("skey")
-      .agg(max(struct(col("seq"), col("payload"))).as("top"))
-      // struct max (not max_by): the unique seq alone decides, so a NULL
-      // winning payload — a [[delete]] tombstone — reaches the filter
-      .select(col("skey"), col("top.payload").as("payload"))
-      .where(col("payload").isNotNull)
+    // the store's per-key state rule, keyed by the facade's string key
+    // (a [[delete]] tombstone's NULL payload drops the key)
+    JournalStore.stateByKey(
+      store.segmentsFor(m, Some(ns), None, (Long.MinValue, lastEpoch))
+        .where(col("ns") === ns && col("seq") <= bound &&
+               col("epoch") <= lit(lastEpoch)),
+      Seq("skey"), Seq("payload"), withSeq = false)
+      .select("skey", "payload")
   }
 
   /** Delete keys from a namespace (the reference's dict-key removal):

@@ -23,9 +23,10 @@ import JournalStore.{FileStat, Manifest, MergeNsProfile}
   * Pruning is exact-or-conservative. A file is dropped only when its
   * metadata PROVES it holds no matching row:
   *  - a path with no epoch directory is never epoch-pruned;
-  *  - an ns directory is compared with a value only when it round-trips
-  *    literally (partition-path escaping rewrites `"a b"`, `"x/y"` and
-  *    the null namespace, so an escaped directory is never ns-pruned);
+  *  - an ns directory is compared by the value the parquet reader
+  *    decodes from it (partition-path escaping spells `"x/y"` as
+  *    `ns=x%2Fy`; the null namespace's default-partition directory
+  *    decodes to no real value, and NULL equals no ns);
   *  - a file with no stats entry is never pruned by a stats predicate;
   *  - an empty or unreadable bloom never prunes.
   * Callers keep their own row filters, so a kept file never changes a
@@ -46,7 +47,7 @@ private[graft] object SegmentFiles {
     /** The ns value the parquet reader decodes from the directory. */
     def nsValue: Option[String] = nsDir.map(ExternalCatalogUtils.unescapePathName)
     /** False only when the directory proves the file holds no `ns` row. */
-    def mayHoldNs(ns: String): Boolean = literalNs.forall(_ == ns)
+    def mayHoldNs(ns: String): Boolean = nsValue.forall(_ == ns)
     /** (epoch, ns directory) when the path carries both. */
     def dir: Option[(Long, String)] = for (e <- epoch; n <- nsDir) yield (e, n)
     /** (epoch, ns value): the key of the per-namespace manifest stats

@@ -1551,7 +1551,7 @@ object JournalOps {
       // The LARGE-source merge path as a declared, oracle-checked row:
       // the deduped post-seed events UNION 4000 synthetic never-seen
       // keys push the source past MergeSmallSourceRows, so this merge
-      // takes mergeFull — the pinned-source profile pass (per-ns key
+      // takes the large-source path — the pinned-source profile pass (per-ns key
       // range + stats-geometry bloom, collected at NAMESPACE grain),
       // manifest candidate pruning, and the ranged row predicate — with
       // no driver key collect at any source size. Clause routing, no-op
@@ -2483,7 +2483,7 @@ object JournalOps {
         "ON s.ns = t.ns AND s.ukey IS NOT DISTINCT FROM t.ukey) " +
         "SELECT ns, ukey, payload FROM merged WHERE payload IS NOT NULL " +
         "ORDER BY ns, ukey"),
-    // the large-source (mergeFull) path: same reconciliation, source
+    // the large-source merge path: same reconciliation, source
     // widened past the small-path threshold by 4000 synthetic keys
     "journal_merge_bulk" ->
       ("WITH state1 AS (SELECT event_type AS ns, user_id AS ukey, " +

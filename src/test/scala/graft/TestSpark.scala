@@ -39,8 +39,10 @@ object TestSpark {
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 
   /** One started Spark job: its id, description and job group ("" when
-    * unset). */
-  final case class Job(id: Int, description: String, group: String)
+    * unset), and its call site (`localCheckpoint at X.scala:12`: the
+    * result stage's name). */
+  final case class Job(id: Int, description: String, group: String,
+                       site: String = "")
 
   /** The Spark jobs `block` started, in id order. The listener is
     * removed however `block` exits. */
@@ -51,7 +53,8 @@ object TestSpark {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) =
           Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
-        seen.add(Job(e.jobId, prop("spark.job.description"), prop("spark.jobGroup.id")))
+        seen.add(Job(e.jobId, prop("spark.job.description"), prop("spark.jobGroup.id"),
+          e.stageInfos.maxByOption(_.stageId).fold("")(_.name.takeWhile(_ != '\n'))))
       }
     }
     sc.addSparkListener(listener)

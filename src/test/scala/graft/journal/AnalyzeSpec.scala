@@ -642,6 +642,27 @@ class AnalyzeSpec extends AnyFunSuite {
     assert(JournalStore.open(spark, path).identityColumns("rid").used === 5L)
   }
 
+  test("analyze that loses the commit race re-runs on the fresh " +
+      "snapshot: rows, stats and sketches cover the rival's append") {
+    val path = freshPath
+    val store = JournalStore.create(spark, path, epochSize = 1000)
+    store.append(fixture)
+    val rival = JournalStore.open(spark, path)
+    store.onCommitSeam = () => rival.append(Seq(("users", 9L,
+      ts("2024-02-01 00:00:01"), """{"z":1}""", Some(9.0)))
+      .toDF("ns", "ukey", "ts", "payload", "val"))
+    store.analyze()
+    val m = JournalStore.open(spark, path).manifest
+    assert(m.op === "analyze")
+    assert(store.analyzedRowCount === Some(6L))
+    assert(store.analyzedColumnStats("ukey").max === Some("9"))
+    assert(store.analyzedColumnStats("val").max === Some("9.0"))
+    // the per-file sketches name exactly the live files, the rival's too
+    val sketched = ColumnStatsSidecar.readAll(path, m.cstatsParts)
+      .values.map(_.file).toSet
+    assert(sketched === m.files.toSet, s"$sketched vs ${m.files}")
+  }
+
   test("declined extrema stay declined: a later append must not re-seed " +
       "a bound that skips earlier rows (xdecl tombstone)") {
     val store = JournalStore.create(spark, freshPath, epochSize = 1000)

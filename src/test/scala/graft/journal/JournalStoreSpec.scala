@@ -1563,7 +1563,7 @@ class JournalStoreSpec extends AnyFunSuite {
     assert(cand.forall(_.contains("ns=users")), cand)
     // WINDOW PIN: the state rebuild is a partial-aggregated struct-max,
     // never a global row_number window
-    val statePlan = store.updateStateOver(m, cand, keyPred)
+    val statePlan = store.stateOver(m, cand, keyPred, None)
       .queryExecution.executedPlan.toString
     assert(!statePlan.contains("Window"), statePlan)
     assert(statePlan.contains("HashAggregate") ||
@@ -2320,9 +2320,15 @@ class JournalStoreSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toMap
     def live = store.scan().groupBy("ns").count()
       .as[(String, Long)].collect().toMap
-    // the erase opens the escaped-ns candidates but rewrites only the
-    // one file that holds the key
+    // escaped namespace directories prune by their decoded value: an
+    // ns = 'a b' erase or update never opens the x/y files
     val m0 = store.manifest
+    val aB = col("ns") === "a b" && col("ukey") === 1L
+    val delCand = SegmentFiles.prune(m0, store.condBounds(m0, aB).probe)
+    val (updCand, _) = store.updatePruning(m0, Some(aB))
+    for (cand <- Seq(delCand, updCand))
+      assert(cand.nonEmpty && cand.forall(_.contains("ns=a b/")), cand)
+    // the erase rewrites only the one file that holds the key
     assert(store.deleteWhere(col("ns") === "a b" && col("ukey") === 1L) === 1L)
     val gone = m0.files diff store.manifest.files
     assert(gone.size === 1 && gone.head.contains("ns=a b/"), gone)
@@ -2393,5 +2399,161 @@ class JournalStoreSpec extends AnyFunSuite {
         s"$name left registered: ${sc.getPersistentRDDs.keySet -- pinnedBefore}")
     }
     assert(store.latest().count() === 40L) // nothing became visible
+  }
+
+  test("syncIdentity never moves the counter backwards: a rival append " +
+      "that lands during the sync keeps its advance") {
+    val path = freshPath
+    val store = JournalStore.create(spark, path, epochSize = 1000,
+      Some(org.apache.spark.sql.types.StructType.fromDDL(
+        "ns STRING, ukey BIGINT, ts TIMESTAMP, payload STRING, " +
+          "val DOUBLE, rid BIGINT")))
+    store.setMeta(Map("identity.rid" -> "1,1,true,0"))
+    def batch(ks: Range) = ks.map(k =>
+      ("n", k.toLong, ts("2024-01-01 00:00:01"), s"p$k", 1.0))
+      .toDF("ns", "ukey", "ts", "payload", "val")
+    store.append(batch(1 to 3)) // rids 1..3, used 3
+    store.append(Seq(("n", 9L, ts("2024-01-01 00:00:02"), "x", 1.0, 100L))
+      .toDF("ns", "ukey", "ts", "payload", "val", "rid")) // explicit rid 100
+    // a rival lands 200 generated rids (used 3 -> 203) between the
+    // sync's snapshot and its commit
+    val rival = JournalStore.open(spark, path)
+    store.onCommitSeam = () => { rival.append(batch(10 until 210)); () }
+    store.syncIdentity("rid")
+    assert(JournalStore.open(spark, path).identityColumns("rid").used === 203L)
+    // the next generated rids lie past every rid the store holds
+    val held = store.scanUnordered().select("rid").as[Long].collect().toSet
+    store.append(batch(300 until 305))
+    val added = store.scanUnordered().where(col("ukey") >= 300L)
+      .select("rid").as[Long].collect().toSeq.sorted
+    assert(added === (204L to 208L))
+    assert(added.forall(r => !held.contains(r)), held)
+  }
+
+  test("updateWhere lands on a row a rival appended during its key " +
+      "probe, and counts the rows it rewrote") {
+    val path = freshPath
+    val store = JournalStore.create(spark, path, epochSize = 1000)
+    def rows(ks: Range, tag: String) = ks.map(k =>
+      ("n", k.toLong, new java.sql.Timestamp(k * 1000L), s"$tag$k", k.toDouble))
+      .toDF("ns", "ukey", "ts", "payload", "val")
+    store.append(rows(1 to 50, "p"))
+    store.append(rows(51 to 100, "p")) // two files; the ts bound probes one
+    val rival = JournalStore.open(spark, path)
+    UpdateRaceGate.arm()
+    val gate = udf((k: Long) => UpdateRaceGate.pass(k))
+    val run = scala.concurrent.Future(store.updateWhere(
+      Seq("val" -> (col("val") + 1000.0)),
+      Some(col("ts") >= lit(new java.sql.Timestamp(51000L)) && gate(col("ukey")))))(
+      scala.concurrent.ExecutionContext.global)
+    // the gate holds the update inside its two-phase key probe while
+    // the rival rewrites key 60
+    assert(UpdateRaceGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    rival.append(Seq(("n", 60L, new java.sql.Timestamp(60000L), "rival60", 7.0))
+      .toDF("ns", "ukey", "ts", "payload", "val"))
+    UpdateRaceGate.released.countDown()
+    val n = scala.concurrent.Await.result(run, scala.concurrent.duration.Duration(120, "s"))
+    assert(n === 1L)
+    val cur = store.latest().where(col("ukey") === 60L)
+      .select("payload").as[String].collect().toSeq
+    assert(cur === Seq("rival60"))
+    val top = store.scanUnordered().where(col("ukey") === 60L)
+      .orderBy(col("seq").desc).select("payload", "val").as[(String, Double)].head()
+    assert(top === ("rival60", 1007.0))
+  }
+
+  test("a local-relation merge source is used unpinned; other sources " +
+      "keep their localCheckpoint pin") {
+    val store = JournalStore.create(spark, freshPath, epochSize = 1000)
+    store.append((0 until 50).map(i =>
+      ("users", i.toLong, ts("2024-01-01 00:00:00"), s"p$i", 1.0))
+      .toDF("ns", "ukey", "ts", "payload", "val"))
+    def pins(jobs: Seq[TestSpark.Job]) = jobs.filter(_.site.startsWith("localCheckpoint"))
+    val local = TestSpark.jobsDuring(store.merge(
+      Seq(("users", 1L, ts("2024-01-02 00:00:00"), "s1", 2.0))
+        .toDF("ns", "ukey", "ts", "payload", "val")))
+    assert(local.nonEmpty && pins(local).isEmpty, local)
+    val ranged = TestSpark.jobsDuring(store.merge(spark.range(2, 4)
+      .selectExpr("'users' AS ns", "id AS ukey",
+        "timestamp'2024-01-02 00:00:00' AS ts", "concat('r', id) AS payload",
+        "CAST(1.0 AS DOUBLE) AS val")))
+    assert(pins(ranged).nonEmpty, ranged)
+    assert(store.latest().where(col("ukey") <= 3L).orderBy("ukey")
+      .select("payload").as[String].collect().toSeq === Seq("p0", "s1", "r2", "r3"))
+  }
+
+  test("store ops tag every Spark job journal:<op> and restore the " +
+      "caller's job description") {
+    val store = JournalStore.create(spark, freshPath, epochSize = 1000)
+    def batch(from: Long) = (from until from + 20).map(i =>
+      ("n", i, ts("2024-01-01 00:00:00"), s"p$i", 1.0))
+      .toDF("ns", "ukey", "ts", "payload", "val")
+    store.append(batch(0L))
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      val ops: Seq[(String, () => Any)] = Seq(
+        "append" -> (() => store.append(batch(100L))),
+        "merge" -> (() => store.merge(spark.range(5, 8).selectExpr("'n' AS ns",
+          "id AS ukey", "timestamp'2024-01-02 00:00:00' AS ts",
+          "concat('r', id) AS payload", "CAST(1.0 AS DOUBLE) AS val"))),
+        "merge" -> (() => store.merge(Seq(("n", 1L, ts("2024-01-02 00:00:00"), "m", 2.0))
+          .toDF("ns", "ukey", "ts", "payload", "val"))),
+        "delete" -> (() => store.deleteWhere(col("ukey") === 3L)))
+      for ((op, run) <- ops) {
+        val jobs = TestSpark.jobsDuring(run())
+        assert(jobs.nonEmpty, op)
+        assert(jobs.forall(_.description == s"journal:$op"), jobs)
+        assert(sc.getLocalProperty("spark.job.description") === "caller")
+      }
+    } finally sc.setJobDescription(null)
+  }
+
+  test("a data column named last_seq rides updateWhere and merge like " +
+      "any other column") {
+    val store = JournalStore.create(spark, freshPath, epochSize = 1000)
+    store.append((1L to 4L).map(k =>
+      ("n", k, ts("2024-01-01 00:00:00"), s"p$k", 1.0, k * 10))
+      .toDF("ns", "ukey", "ts", "payload", "val", "last_seq"))
+    // an update of another column re-appends last_seq unchanged
+    assert(store.updateWhere(Seq("val" -> lit(2.0)),
+      Some(col("ukey") <= 2L)) === 2L)
+    // it is assignable and a condition may read it
+    assert(store.updateWhere(Seq("last_seq" -> lit(99L)),
+      Some(col("ukey") === 3L)) === 1L)
+    assert(store.updateWhere(Seq("val" -> lit(5.0)),
+      Some(col("last_seq") === 40L)) === 1L)
+    // a merge source carrying it compares and writes it
+    store.merge(Seq(("n", 4L, ts("2024-01-02 00:00:00"), "m4", 3.0, 77L),
+      ("n", 5L, ts("2024-01-02 00:00:00"), "m5", 3.0, 50L))
+      .toDF("ns", "ukey", "ts", "payload", "val", "last_seq"))
+    val m = store.manifest
+    val got = store.stateOver(m, m.files, lit(true), None)
+      .select("ukey", "payload", "val", "last_seq")
+      .as[(Long, String, Double, Long)].collect().sortBy(_._1).toSeq
+    assert(got === Seq((1L, "p1", 2.0, 10L), (2L, "p2", 2.0, 20L),
+      (3L, "p3", 1.0, 99L), (4L, "m4", 3.0, 77L), (5L, "m5", 3.0, 50L)))
+    // state reads keep their own last_seq: the winning seq
+    assert(store.latest().where(col("ukey") === 1L)
+      .select("last_seq").as[Long].head() ===
+      store.scan().where(col("ukey") === 1L).select(max("seq")).as[Long].head())
+  }
+}
+
+/** A UDF gate that holds the first task to evaluate key 60 until the
+  * spec releases it (tasks run in the spec's JVM under local mode). */
+object UpdateRaceGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var released = new java.util.concurrent.CountDownLatch(1)
+  def arm(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    released = new java.util.concurrent.CountDownLatch(1)
+  }
+  def pass(k: Long): Boolean = {
+    if (k == 60L && entered.getCount > 0) {
+      entered.countDown()
+      released.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    k == 60L
   }
 }
